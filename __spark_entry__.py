@@ -136,294 +136,106 @@ def _ts_s(c):
 
 
 # ---------------------------------------------------------------------------
-# per-run scratch dirs for the I/O-exercising gate queries. uuid-keyed
-# so CONCURRENT runs of the same query (pytest contract test +
-# check_oracle on the same sf — the r11 advisor's race on
-# q_streaming_ohlc, closed registry-wide here) never share a
-# sink/checkpoint; cleaned at interpreter exit so the DataFrames the
-# queries return stay readable for the caller's whole session.
+# per-run scratch dirs for the I/O-exercising gate queries. Each one is
+# a fresh uuid-named path, so CONCURRENT runs of the same query never
+# share a sink/checkpoint. They all live under one root per process,
+# removed at interpreter exit so the DataFrames the queries return stay
+# readable for the caller's whole session.
 # ---------------------------------------------------------------------------
 
-_SCRATCH_DIRS: list[str] = []
+_SCRATCH_ROOT: "str | None" = None
+_SCRATCH_LOCK: "int | None" = None  # fd holding the root's flock
 _SCRATCH_TABLES: list[str] = []
 
-#: stale-sweep threshold for fbs_* scratch dirs left by KILLED runs
-#: (atexit never fired). Must comfortably exceed the longest-lived
-#: legitimate holder — a full pytest session keeps its dirs ~30 min —
-#: so a concurrent run's live scratch is never swept.
-_SCRATCH_STALE_SECONDS = 2 * 3600
 
-#: hard age cap (r14 advisor item 1): a heartbeat older than this is
-#: swept REGARDLESS of pid liveness, bounding the damage of pid reuse
-#: (an unrelated long-lived process recycling the recorded pid would
-#: otherwise pin a dead run's scratch forever). "A day-old heartbeat
-#: is never live" holds by CONSTRUCTION, not by workload assumption:
-#: a daemon refresher (_start_hb_refresher) rewrites every owned
-#: heartbeat every _HB_REFRESH_SECONDS for the life of the process,
-#: so even one Spark action legitimately running >24 h (possible at
-#: 100 TB scale; the r15 judge recorded allocation-only refresh as
-#: unsafe there) keeps its scratch unsweepable while it lives.
-_SCRATCH_HARD_CAP_SECONDS = 24 * 3600
+def _lock_root(root: str) -> "int | None":
+    """Open ``<root>/.lock`` and take an exclusive, non-blocking flock.
+    Returns the fd, or None if another process holds the lock or the
+    root was swept before the lock landed (the path then no longer
+    names the locked inode)."""
+    import fcntl
+    import os as _os
 
-#: heartbeat refresh cadence — comfortably inside both the 2 h stale
-#: threshold and the 24 h hard cap (a live owner is never within two
-#: orders of magnitude of either cutoff)
-_HB_REFRESH_SECONDS = 15 * 60.0
+    path = _os.path.join(root, ".lock")
+    try:
+        fd = _os.open(path, _os.O_RDWR | _os.O_CREAT, 0o600)
+    except OSError:
+        return None
+    try:
+        fcntl.flock(fd, fcntl.LOCK_EX | fcntl.LOCK_NB)
+        if _os.stat(path).st_ino == _os.fstat(fd).st_ino:
+            return fd
+    except OSError:
+        pass
+    _os.close(fd)
+    return None
 
-#: set at interpreter exit so the refresher can't recreate a ``.hb``
-#: file beside a scratch dir _cleanup_scratch just removed
-_HB_STOP = None  # created lazily with the thread
-_HB_THREAD = None
+
+def _scratch_root() -> str:
+    """This process's scratch root, created on first use. Its flock is
+    the liveness signal: the kernel releases it whenever the owner
+    dies, SIGKILL included, so a root whose lock can be taken belongs
+    to no live process. Creating a root first removes every such
+    ``fbs_*`` root left by killed runs. Assumes a local tempdir: flock
+    is not reliable across hosts on network filesystems."""
+    global _SCRATCH_ROOT, _SCRATCH_LOCK
+    if _SCRATCH_ROOT is not None:
+        return _SCRATCH_ROOT
+    import atexit as _atexit
+    import os as _os
+    import shutil as _sh
+    import tempfile as _tf
+
+    tmp = _tf.gettempdir()
+    for e in _os.scandir(tmp):
+        if e.name.startswith("fbs_") and e.is_dir(follow_symlinks=False):
+            fd = _lock_root(e.path)
+            if fd is not None:
+                _sh.rmtree(e.path, ignore_errors=True)
+                _os.close(fd)
+    while _SCRATCH_LOCK is None:
+        root = _tf.mkdtemp(prefix="fbs_", dir=tmp)
+        _SCRATCH_LOCK = _lock_root(root)
+    _SCRATCH_ROOT = root
+    _atexit.register(_cleanup_scratch)
+    return root
 
 
 def _cleanup_scratch() -> None:
-    global _HB_STOP, _HB_THREAD
+    """DROP the registered catalog tables, then remove the root. A
+    location-only rmtree would leave dangling metastore entries that
+    break a later CREATE with the same name."""
+    global _SCRATCH_ROOT, _SCRATCH_LOCK
     import os as _os
     import shutil as _sh
 
-    # DROP the uuid-suffixed catalog tables (not just their
-    # locations): a location-only rmtree leaves dangling metastore
-    # entries that accumulate within a session and break a later
-    # CREATE with the same name
-    # stop the heartbeat refresher FIRST: daemon threads keep running
-    # through atexit handlers, and a refresh racing the rmtree below
-    # would recreate orphan .hb files beside removed dirs. Null the
-    # globals after signalling (r16 advisor): the stopping thread can
-    # stay is_alive() for up to a tick, and a later allocation's
-    # _start_hb_refresher must see "nothing running", not the corpse.
-    if _HB_STOP is not None:
-        _HB_STOP.set()
-    _HB_STOP = None
-    _HB_THREAD = None
-    if _SCRATCH_TABLES:
+    tables, _SCRATCH_TABLES[:] = list(_SCRATCH_TABLES), []
+    if tables:
         try:
             from pyspark.sql import SparkSession as _SS
 
             sp = _SS.getActiveSession()
             if sp is not None:
-                for t in _SCRATCH_TABLES:
+                for t in tables:
                     sp.sql(f"DROP TABLE IF EXISTS {t}")
         except Exception:
-            pass  # JVM already gone at exit: locations removed below
-    dirs, _SCRATCH_DIRS[:] = list(_SCRATCH_DIRS), []
-    for d in dirs:
-        _sh.rmtree(d, ignore_errors=True)
-        try:
-            _os.remove(d + ".hb")
-        except OSError:
-            pass
-
-
-def _write_heartbeats() -> None:
-    """(Re)write the liveness sentinel BESIDE every scratch dir this
-    process owns (``<dir>.hb``, containing our pid). Called at every
-    allocation — i.e. at least once per gate query — so an active
-    session keeps ALL its heartbeats fresh even when its writes land
-    deep inside a dir (nested writes never refresh the top-level dir
-    mtime, the r13 advisor's gap). Beside, not inside: the dir itself
-    is handed to writers (VersionedTable, zorder_write, overwrite-mode
-    parquet) that own its contents. Also ensures the daemon refresher
-    is running, so freshness between allocations doesn't depend on
-    allocation frequency (r15 judge item 4)."""
-    _write_heartbeats_once()
-    _start_hb_refresher()
-
-
-def _start_hb_refresher(interval: "float | None" = None) -> None:
-    """Daemon thread that rewrites every owned heartbeat every
-    ``_HB_REFRESH_SECONDS`` while this process lives.
-
-    Closes the r15 judge's recorded gap (VERDICT r15 "What's wrong"
-    #4): heartbeats used to refresh only at ALLOCATION, so a single
-    Spark action legitimately running past ``_SCRATCH_HARD_CAP_SECONDS``
-    — impossible at local[32] test scale, plausible against 100 TB —
-    could have its live scratch swept mid-job by a concurrent
-    session's hard-cap rule. With the refresher, the cap's premise
-    ("a live owner's heartbeat is always fresh") holds by
-    construction for arbitrarily long single actions.
-
-    daemon=True so it never blocks interpreter exit; _cleanup_scratch
-    sets ``_HB_STOP`` before removing dirs so a racing refresh can't
-    recreate orphan ``.hb`` files (and any lost race is benign: an
-    orphaned ``.hb`` whose dir is gone ages out in the sweep).
-    ``interval`` is injectable for tests only."""
-    global _HB_STOP, _HB_THREAD
-    # A STOPPING thread counts as not running (r16 advisor): after
-    # _cleanup_scratch sets _HB_STOP, the old thread may still be
-    # is_alive() for up to one tick — returning early here would
-    # leave a subsequent scratch allocation with no refresher at all
-    # (silently reverting to allocation-only freshness, the exact r15
-    # gap this daemon closes).
-    if (
-        _HB_THREAD is not None
-        and _HB_THREAD.is_alive()
-        and not (_HB_STOP is not None and _HB_STOP.is_set())
-    ):
-        return
-    import threading as _th
-
-    _HB_STOP = _th.Event()
-    stop = _HB_STOP
-    tick = _HB_REFRESH_SECONDS if interval is None else interval
-
-    def _loop() -> None:
-        while not stop.wait(tick):
-            _write_heartbeats_once()
-
-    _HB_THREAD = _th.Thread(
-        target=_loop, daemon=True, name="fbs-scratch-heartbeat"
-    )
-    _HB_THREAD.start()
-
-
-def _write_heartbeats_once() -> None:
-    """Heartbeat rewrite WITHOUT the refresher-start side effect —
-    the refresher loop's body (calling _write_heartbeats from the
-    loop would be a harmless no-op re-entry, but keeping the loop
-    side-effect-free makes the start-once invariant trivial)."""
-    import os as _os
-
-    for d in list(_SCRATCH_DIRS):
-        try:
-            with open(d + ".hb", "w") as fh:
-                fh.write(str(_os.getpid()))
-        except OSError:
-            continue
-
-
-def _pid_alive(hb_path: str) -> bool:
-    """Best-effort liveness of the pid recorded in a heartbeat file —
-    the final guard before sweeping another run's scratch.
-
-    SINGLE-HOST assumption (r14 judge item 4): a pid is only
-    meaningful on the host that wrote the heartbeat. On a shared
-    warehouse (e.g. NFS) another host's live owner would look dead
-    here — such a deployment must key on heartbeat age alone (the
-    hard cap below already does).
-
-    pid values <= 1 are rejected outright (r14 advisor item 1):
-    ``kill(0, 0)`` signals our own process group, ``kill(-1, 0)``
-    signals everything (always succeeds as root), and pid 1 is init —
-    all three would report a truncated/garbled heartbeat as
-    permanently alive, making its dir unsweepable forever."""
-    import os as _os
-
-    try:
-        with open(hb_path) as fh:
-            pid = int(fh.read().strip())
-    except (OSError, ValueError):
-        return False  # unreadable/garbled heartbeat: owner is gone
-    if pid <= 1:
-        return False  # truncated/garbled pid: never "alive"
-    try:
-        _os.kill(pid, 0)
-        return True
-    except PermissionError:
-        return True  # exists, owned by someone else
-    except OSError:
-        return False
-
-
-def _sweep_stale_entries(root: str, prefix: str, keep=()) -> None:
-    """Remove ``{prefix}*`` dirs under ``root`` whose owner is gone —
-    the leftovers of runs killed before their atexit cleanup
-    (uuid-keyed names are never reclaimed by a later run, so without
-    this they leak permanently). Staleness keys on the ``<dir>.hb``
-    HEARTBEAT sentinel (r13 judge item 4): swept only when the
-    heartbeat is older than the threshold AND its recorded pid is no
-    longer alive. Dirs with no heartbeat (pre-heartbeat leftovers)
-    fall back to the old dir-mtime rule. Orphaned heartbeat files
-    whose dir is already gone age out the same way.
-
-    Pid liveness assumes a SINGLE host (see _pid_alive); past the
-    _SCRATCH_HARD_CAP_SECONDS hard cap, age alone decides — a live
-    owner's daemon refresher rewrites its heartbeats every
-    _HB_REFRESH_SECONDS (not just at allocation), so a day-old
-    heartbeat cannot belong to a live local session even mid-way
-    through one very long Spark action, and pid reuse can pin a dead
-    run's scratch for at most the cap."""
-    import os as _os
-    import shutil as _sh
-    import time as _time
-
-    now = _time.time()
-    cutoff = now - _SCRATCH_STALE_SECONDS
-    hard_cutoff = now - _SCRATCH_HARD_CAP_SECONDS
-    try:
-        entries = _os.listdir(root)
-    except OSError:
-        return
-    for e in entries:
-        if not e.startswith(prefix) or e in keep:
-            continue
-        p = _os.path.join(root, e)
-        try:
-            if e.endswith(".hb"):
-                if (
-                    not _os.path.isdir(p[: -len(".hb")])
-                    and _os.path.getmtime(p) < cutoff
-                ):
-                    _os.remove(p)
-                continue
-            if not _os.path.isdir(p):
-                continue
-            hb = p + ".hb"
-            if _os.path.exists(hb):
-                hb_mtime = _os.path.getmtime(hb)
-                if hb_mtime >= cutoff or (
-                    hb_mtime >= hard_cutoff and _pid_alive(hb)
-                ):
-                    continue
-            elif _os.path.getmtime(p) >= cutoff:
-                continue
-            _sh.rmtree(p, ignore_errors=True)
-            try:
-                _os.remove(hb)
-            except OSError:
-                pass
-        except OSError:
-            continue
-
-
-def _sweep_stale_scratch() -> None:
-    """Heartbeat-aware sweep of fbs_* temp dirs (see
-    _sweep_stale_entries)."""
-    import tempfile as _tf
-
-    _sweep_stale_entries(_tf.gettempdir(), "fbs_")
-
-
-_SWEPT = False
-
-
-def _sweep_once() -> None:
-    """Run the tempdir sweep exactly once per process, on its OWN
-    flag — piggybacking on `if not _SCRATCH_DIRS` silently skipped
-    the sweep whenever the warehouse registration ran first (r13
-    advisor)."""
-    global _SWEPT
-    if not _SWEPT:
-        _SWEPT = True
-        _sweep_stale_scratch()
+            pass  # JVM already gone at exit: files removed below
+    if _SCRATCH_ROOT is not None:
+        _sh.rmtree(_SCRATCH_ROOT, ignore_errors=True)
+        _os.close(_SCRATCH_LOCK)
+    _SCRATCH_ROOT = _SCRATCH_LOCK = None
 
 
 def _scratch_dir(name: str, sf_dir: str) -> str:
-    import atexit as _atexit
+    """A fresh, not-yet-existing path under this process's root."""
     import os as _os
-    import tempfile as _tf
     import uuid as _uuid
 
-    base = _os.path.join(
-        _tf.gettempdir(),
-        f"fbs_{name}_{_os.path.basename(sf_dir.rstrip('/'))}"
+    return _os.path.join(
+        _scratch_root(),
+        f"{name}_{_os.path.basename(sf_dir.rstrip('/'))}"
         f"_{_uuid.uuid4().hex[:12]}",
     )
-    _sweep_once()
-    if not _SCRATCH_DIRS:
-        _atexit.register(_cleanup_scratch)
-    _SCRATCH_DIRS.append(base)
-    _write_heartbeats()
-    return base
 
 
 # ---------------------------------------------------------------------------
@@ -4108,55 +3920,20 @@ def q_bucketed_join(spark, sf_dir):
     materialized bucketed+sorted on the join key, then the repeated
     join runs with ZERO Exchange (write once, shuffle never — the
     100 TB fact-table contract; the no-shuffle plan is asserted in
-    tests/test_joins_audit.py::test_bucketed_join_has_no_shuffle).
+    tests/test_joins_audit.py::test_q_bucketed_join_has_no_shuffle).
     Layout never changes data: the oracle is the plain join+agg."""
-    import atexit as _atexit
-    import os as _os
-    import shutil as _sh
     import uuid as _uuid
 
     from fbs_data_pipelines_spark.sources.catalog import save_bucketed
 
-    # uuid-suffixed table names: the same race class as the scratch
-    # dirs (two processes in the same CWD share spark-warehouse/, and
-    # fixed names raced on DROP + LOCATION_ALREADY_EXISTS). The
-    # returned plan reads the catalog tables lazily, so the LOCATIONS
-    # are removed at interpreter exit, not here.
-    wh = spark.conf.get(
-        "spark.sql.warehouse.dir", "spark-warehouse"
-    ).removeprefix("file:")
+    # uuid-suffixed names and external locations under the scratch
+    # root: concurrent runs never share a table, and the files go with
+    # the root at exit. The returned plan reads the tables lazily, so
+    # they are dropped at exit too, not here.
     suffix = _uuid.uuid4().hex[:12]
     t_orders = f"bj_orders_{suffix}"
     t_lineitem = f"bj_lineitem_{suffix}"
-    for t in (t_orders, t_lineitem):
-        loc = _os.path.join(wh, t)
-        if not _SCRATCH_DIRS:
-            _atexit.register(_cleanup_scratch)
-        _SCRATCH_DIRS.append(loc)
-        # registered for a real DROP at cleanup — rmtree of the
-        # location alone leaves a dangling metastore entry per run
-        _SCRATCH_TABLES.append(t)
-    # heartbeats go BESIDE the locations immediately (the sibling
-    # file never trips LOCATION_ALREADY_EXISTS the way a file inside
-    # a managed-table location would), so a killed run's locations
-    # are distinguishable from a live >2h session's
-    _write_heartbeats()
-    # the tempdir sweep runs from here too — previously it was gated
-    # on `if not _SCRATCH_DIRS`, so a process whose FIRST scratch
-    # registration was this warehouse block never swept (r13 advisor)
-    _sweep_once()
-    # sweep legacy fixed-name leftovers from pre-uuid runs
-    for t in ("bj_orders", "bj_lineitem"):
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
-        _sh.rmtree(_os.path.join(wh, t), ignore_errors=True)
-    # and stale uuid-named locations from KILLED runs (their atexit
-    # never fired; uuid names are never reclaimed) — heartbeat-aware,
-    # same rule and threshold as the temp-dir sweep
-    _sweep_stale_entries(
-        wh,
-        "bj_",
-        keep={t_orders, t_lineitem, t_orders + ".hb", t_lineitem + ".hb"},
-    )
+    _SCRATCH_TABLES.extend((t_orders, t_lineitem))
     o = (
         _t(spark, sf_dir, "orders")
         .filter(F.col("o_custkey") <= 100)
@@ -4167,10 +3944,9 @@ def q_bucketed_join(spark, sf_dir):
         "l_quantity",
         "l_extendedprice",
     )
-    save_bucketed(o, t_orders, ["o_orderkey"], 8,
-                  sort_cols=["o_orderkey"])
-    save_bucketed(li, t_lineitem, ["o_orderkey"], 8,
-                  sort_cols=["o_orderkey"])
+    for t, df in ((t_orders, o), (t_lineitem, li)):
+        save_bucketed(df, t, ["o_orderkey"], 8, sort_cols=["o_orderkey"],
+                      path=_scratch_dir(t, sf_dir))
     return (
         spark.table(t_orders)
         .join(spark.table(t_lineitem), "o_orderkey")

@@ -303,13 +303,11 @@ def main() -> None:
             sys.path.insert(
                 0, os.path.join(os.path.dirname(os.path.abspath(__file__)), "tools")
             )
-            from make_sf1 import make_sf1
+            from make_sf1 import DEFAULT_DST, make_sf1
 
             sf1_dir = make_sf1(
                 src=sf_dir,
-                dst=os.environ.get(
-                    "SPARK_GRAFT_SF1_DIR", "/root/repo/.localdata/sf1"
-                ),
+                dst=os.environ.get("SPARK_GRAFT_SF1_DIR", DEFAULT_DST),
             )
             sf1_spark: dict[str, float] = {}
             sf1_duck: dict[str, float] = {}

@@ -91,6 +91,7 @@ def save_bucketed(
     num_buckets: int = 32,
     sort_cols: list[str] | None = None,
     mode: str = "overwrite",
+    path: str | None = None,
 ) -> None:
     """Materialize a table bucketed (and optionally sorted) on its
     join/agg key — the co-location contract that lets repeated joins
@@ -100,10 +101,16 @@ def save_bucketed(
     At 100 TB this is the difference between shuffling the fact table
     on every join vs once at write time. Requires saveAsTable (bucket
     metadata lives in the catalog).
+
+    ``path`` places the files there instead of the warehouse, making
+    an EXTERNAL table: ``DROP TABLE`` removes only the catalog entry
+    and leaves the files on disk for the caller to delete.
     """
     w = df.write.mode(mode).bucketBy(num_buckets, *bucket_cols)
     if sort_cols:
         w = w.sortBy(*sort_cols)
+    if path is not None:
+        w = w.option("path", path)
     w.saveAsTable(name)
 
 

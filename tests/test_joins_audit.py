@@ -289,16 +289,11 @@ def test_runtime_bloom_filter_injected_and_exact(spark, sf_dir):
     )
 
 
-def test_bucketed_join_has_no_shuffle(spark):
+def test_bucketed_join_has_no_shuffle(spark, tmp_path):
     """Co-located bucketed tables join with zero Exchange — the
     write-once-shuffle-never contract for 100 TB fact tables."""
     from fbs_data_pipelines_spark.sources.catalog import save_bucketed
     import pyspark.sql.functions as F
-    import shutil
-
-    for t in ("t_bucket_a", "t_bucket_b"):
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
-        shutil.rmtree(f"/root/repo/spark-warehouse/{t}", ignore_errors=True)
 
     a = spark.range(0, 1000).select(
         F.col("id").alias("k"), (F.col("id") * 2).alias("va")
@@ -306,8 +301,10 @@ def test_bucketed_join_has_no_shuffle(spark):
     b = spark.range(0, 1000).select(
         F.col("id").alias("k"), (F.col("id") * 3).alias("vb")
     )
-    save_bucketed(a, "t_bucket_a", ["k"], num_buckets=4)
-    save_bucketed(b, "t_bucket_b", ["k"], num_buckets=4)
+    save_bucketed(a, "t_bucket_a", ["k"], num_buckets=4,
+                  path=str(tmp_path / "t_bucket_a"))
+    save_bucketed(b, "t_bucket_b", ["k"], num_buckets=4,
+                  path=str(tmp_path / "t_bucket_b"))
     # force the non-broadcast path: bucketing is what must kill the
     # shuffle, not a broadcast of these (deliberately tiny) fixtures
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
@@ -319,6 +316,26 @@ def test_bucketed_join_has_no_shuffle(spark):
         plan = plan.split("== Initial Plan ==")[0]
         assert "Exchange hashpartitioning" not in plan  # no shuffle
         assert "SortMergeJoin" in plan  # co-located bucket SMJ
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+
+
+def test_q_bucketed_join_has_no_shuffle(spark, sf_dir):
+    """The registry's bucketed_join joins its external bucketed tables
+    without shuffling either side on the join key, even with broadcast
+    joins off (the only Exchange left is the group-by's, on
+    o_orderpriority)."""
+    import __spark_entry__ as entry
+
+    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        df = entry.q_bucketed_join(spark, sf_dir)
+        assert len(df.collect()) == 5
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        plan = plan.split("== Initial Plan ==")[0]
+        assert "Exchange hashpartitioning(o_orderkey" not in plan
+        assert "SortMergeJoin" in plan
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
 

@@ -1,466 +1,258 @@
-"""Pins for the entry file's scratch-space lifecycle (r12 advisor):
-uuid-keyed dirs/tables must not leak across killed runs (age-based
-sweep) and must be FULLY released at cleanup (DROP TABLE, not just
-location rmtree)."""
+"""Pins for the entry file's scratch-space lifecycle: one flock-held
+``fbs_*`` root per process, removed at exit; the first allocation
+removes the roots of dead owners and nothing else.
+
+Ownership is per process, so most pins run real subprocesses, each
+with its own private TMPDIR as the sweep domain."""
 
 from __future__ import annotations
 
+import json
 import os
+import signal
+import subprocess
+import sys
 import tempfile
 import time
 import uuid
+from pathlib import Path
+
+import pytest
 
 import __spark_entry__ as entry
 
+REPO = Path(__file__).resolve().parents[1]
 
-def test_sweep_removes_stale_keeps_fresh(tmp_path):
-    tmp = tempfile.gettempdir()
-    stale = os.path.join(tmp, f"fbs_stale_pin_{uuid.uuid4().hex[:8]}")
-    fresh = os.path.join(tmp, f"fbs_fresh_pin_{uuid.uuid4().hex[:8]}")
-    os.makedirs(stale)
-    os.makedirs(fresh)
-    try:
-        old = time.time() - entry._SCRATCH_STALE_SECONDS - 60
-        os.utime(stale, (old, old))
-        entry._sweep_stale_scratch()
-        assert not os.path.exists(stale), "stale fbs_* dir not swept"
-        assert os.path.exists(fresh), (
-            "fresh fbs_* dir wrongly swept — a concurrent run's live "
-            "scratch would be destroyed"
+OWNER = """
+import os, time
+import __spark_entry__ as e
+d = e._scratch_dir("owner", "sf")
+os.makedirs(d)
+with open(os.path.join(d, "part"), "w") as fh:
+    fh.write("x")
+print(e._SCRATCH_ROOT, flush=True)
+time.sleep(300)
+"""
+
+ALLOC = """
+import json, os
+import __spark_entry__ as e
+a = e._scratch_dir("x", "/data/sf1/")
+b = e._scratch_dir("x", "/data/sf1/")
+print(json.dumps({"a": a, "b": b, "root": e._SCRATCH_ROOT,
+                  "exist": [os.path.exists(a), os.path.exists(b)]}))
+"""
+
+# a sweeper removes the new root after its .lock is opened but before
+# the owner's flock lands; the owner must notice and make another root
+RACE = """
+import fcntl, json, os, shutil
+import __spark_entry__ as e
+real_flock = fcntl.flock
+swept = []
+def flock(fd, op):
+    if not swept:
+        swept.append(os.path.dirname(os.readlink(f"/proc/self/fd/{fd}")))
+        shutil.rmtree(swept[0])
+    return real_flock(fd, op)
+fcntl.flock = flock
+d = e._scratch_dir("race", "sf")
+fcntl.flock = real_flock
+root = e._SCRATCH_ROOT
+fd = os.open(os.path.join(root, ".lock"), os.O_RDWR)
+try:
+    fcntl.flock(fd, fcntl.LOCK_EX | fcntl.LOCK_NB)
+    locked = False
+except BlockingIOError:
+    locked = True
+print(json.dumps({"swept": swept[0], "root": root, "dir": d,
+                  "root_exists": os.path.isdir(root), "locked": locked}))
+"""
+
+
+ONCE = """
+import json, os, sys
+import __spark_entry__ as e
+tmp = sys.argv[1]
+os.makedirs(os.path.join(tmp, "fbs_dead_a"))
+e._SCRATCH_TABLES.append("placeholder_table")  # registered before any root
+e._scratch_dir("x", "sf")
+first = os.path.exists(os.path.join(tmp, "fbs_dead_a"))
+os.makedirs(os.path.join(tmp, "fbs_dead_b"))
+e._scratch_dir("x", "sf")
+second = os.path.exists(os.path.join(tmp, "fbs_dead_b"))
+e._SCRATCH_TABLES.clear()
+print(json.dumps({"a_kept": first, "b_kept": second}))
+"""
+
+
+def _env(tmp: Path) -> dict:
+    return {**os.environ, "TMPDIR": str(tmp), "PYTHONPATH": str(REPO)}
+
+
+def _run(code: str, tmp: Path, *args: str) -> dict:
+    out = subprocess.run(
+        [sys.executable, "-c", code, *args], env=_env(tmp), check=True,
+        capture_output=True, text=True, timeout=120,
+    ).stdout
+    return json.loads(out.strip().splitlines()[-1])
+
+
+def _age(paths, hours: float = 25) -> None:
+    old = time.time() - hours * 3600
+    for p in paths:
+        os.utime(p, (old, old))
+
+
+def _tree(root: str) -> list:
+    out = []
+    for dirpath, _, files in os.walk(root):
+        out += [dirpath, *(os.path.join(dirpath, f) for f in files)]
+    return out
+
+
+@pytest.fixture
+def owners(tmp_path):
+    """Starts live processes that each hold a non-empty root; calling
+    the fixture returns (proc, root). All are killed at teardown."""
+    procs = []
+
+    def start():
+        proc = subprocess.Popen(
+            [sys.executable, "-c", OWNER], env=_env(tmp_path),
+            stdout=subprocess.PIPE, text=True,
         )
-    finally:
-        for d in (stale, fresh):
-            if os.path.exists(d):
-                os.rmdir(d)
+        procs.append(proc)
+        root = proc.stdout.readline().strip()
+        assert root and os.listdir(root), "owner made no root"
+        return proc, root
 
-
-def test_sweep_ignores_foreign_tempdir_entries(tmp_path):
-    tmp = tempfile.gettempdir()
-    foreign = os.path.join(tmp, f"notfbs_pin_{uuid.uuid4().hex[:8]}")
-    os.makedirs(foreign)
     try:
-        old = time.time() - entry._SCRATCH_STALE_SECONDS - 60
-        os.utime(foreign, (old, old))
-        entry._sweep_stale_scratch()
-        assert os.path.exists(foreign), (
-            "sweep must only touch the fbs_* namespace"
-        )
+        yield start
     finally:
-        os.rmdir(foreign)
+        for proc in procs:
+            proc.kill()
+            proc.wait()
+            proc.stdout.close()
 
 
-def _old():
-    return time.time() - entry._SCRATCH_STALE_SECONDS - 60
+def _kill(proc) -> None:
+    proc.send_signal(signal.SIGKILL)
+    proc.wait()
 
 
-def _make(path, mtime=None):
-    os.makedirs(path)
-    if mtime is not None:
-        os.utime(path, (mtime, mtime))
+def test_sweep_removes_stale_keeps_fresh(owners, tmp_path):
+    """Of two roots, the one whose owner was killed goes and the one
+    whose owner is alive stays."""
+    dead, dead_root = owners()
+    _, live_root = owners()
+    _kill(dead)
+    _run(ALLOC, tmp_path)
+    assert not os.path.exists(dead_root), "killed owner's root not swept"
+    assert os.path.isdir(live_root), (
+        "live owner's root swept: a concurrent run's scratch destroyed"
+    )
+    assert os.listdir(tmp_path) == [os.path.basename(live_root)]
 
 
-def _hb(path, pid, mtime=None):
-    with open(path + ".hb", "w") as fh:
-        fh.write(str(pid))
-    if mtime is not None:
-        os.utime(path + ".hb", (mtime, mtime))
+def test_sweep_keeps_stale_dir_with_fresh_heartbeat(owners, tmp_path):
+    """Nested writes never refresh the root's own mtime, so its age
+    says nothing about liveness. A live owner's root with an old mtime
+    and fresh contents survives: the held flock is the heartbeat."""
+    _, root = owners()
+    _age([root])
+    before = sorted(os.listdir(root))
+    _run(ALLOC, tmp_path)
+    assert os.path.isdir(root), "live owner's old root swept"
+    assert sorted(os.listdir(root)) == before
 
 
-def _dead_pid():
-    import subprocess
-
-    p = subprocess.Popen(["true"])
-    p.wait()
-    return p.pid  # reaped: os.kill(pid, 0) raises ProcessLookupError
-
-
-def test_sweep_keeps_stale_dir_with_fresh_heartbeat(tmp_path):
-    """The r13 advisor's gap: nested writes never refresh the
-    top-level dir mtime, so dir age alone would sweep a LIVE run's
-    scratch. The heartbeat sentinel beside the dir is the liveness
-    signal — a >2h-old dir with a fresh heartbeat must survive."""
-    tmp = tempfile.gettempdir()
-    d = os.path.join(tmp, f"fbs_hbfresh_pin_{uuid.uuid4().hex[:8]}")
-    _make(d, mtime=_old())
-    _hb(d, os.getpid())  # fresh mtime
-    try:
-        entry._sweep_stale_scratch()
-        assert os.path.exists(d), (
-            "dir with fresh heartbeat swept — a live session that "
-            "stopped writing early would lose its scratch"
-        )
-    finally:
-        if os.path.exists(d):
-            os.rmdir(d)
-        if os.path.exists(d + ".hb"):
-            os.remove(d + ".hb")
+def test_sweep_removes_stale_heartbeat_dead_owner(owners, tmp_path):
+    """A SIGKILLed owner runs no cleanup; its root, .lock included, is
+    removed by the next process that allocates."""
+    proc, root = owners()
+    _kill(proc)
+    _age(_tree(root))
+    assert len(os.listdir(root)) == 2, "root should hold .lock + a dir"
+    _run(ALLOC, tmp_path)
+    assert not os.path.exists(root), "killed owner's root not swept"
+    assert os.listdir(tmp_path) == [], "allocating process left its root"
 
 
-def test_sweep_removes_stale_heartbeat_dead_owner(tmp_path):
-    """Stale heartbeat + dead recorded pid = a killed run; both the
-    dir and its sentinel must go."""
-    tmp = tempfile.gettempdir()
-    d = os.path.join(tmp, f"fbs_hbdead_pin_{uuid.uuid4().hex[:8]}")
-    _make(d, mtime=_old())
-    _hb(d, _dead_pid(), mtime=_old())
-    try:
-        entry._sweep_stale_scratch()
-        assert not os.path.exists(d), "dead run's dir not swept"
-        assert not os.path.exists(d + ".hb"), "sentinel left behind"
-    finally:
-        if os.path.exists(d):
-            os.rmdir(d)
-        if os.path.exists(d + ".hb"):
-            os.remove(d + ".hb")
-
-
-def test_sweep_keeps_stale_heartbeat_live_owner(tmp_path):
-    """Even a stale heartbeat must not be swept while its recorded
-    pid is alive — pid liveness is the final guard (a legitimately
-    >2h session whose last allocation was hours ago)."""
-    tmp = tempfile.gettempdir()
-    d = os.path.join(tmp, f"fbs_hblive_pin_{uuid.uuid4().hex[:8]}")
-    _make(d, mtime=_old())
-    _hb(d, os.getpid(), mtime=_old())
-    try:
-        entry._sweep_stale_scratch()
-        assert os.path.exists(d), "live owner's dir swept"
-    finally:
-        if os.path.exists(d):
-            os.rmdir(d)
-        if os.path.exists(d + ".hb"):
-            os.remove(d + ".hb")
-
-
-def test_sweep_removes_orphan_heartbeat(tmp_path):
-    """A heartbeat whose dir is already gone ages out; a fresh orphan
-    (its dir not created yet — the warehouse flow writes the sentinel
-    before save_bucketed creates the location) is kept."""
-    tmp = tempfile.gettempdir()
-    stale = os.path.join(tmp, f"fbs_orph_pin_{uuid.uuid4().hex[:8]}")
-    fresh = os.path.join(tmp, f"fbs_orph_pin_{uuid.uuid4().hex[:8]}")
-    _hb(stale, 1, mtime=_old())
-    _hb(fresh, os.getpid())
-    try:
-        entry._sweep_stale_scratch()
-        assert not os.path.exists(stale + ".hb"), "stale orphan kept"
-        assert os.path.exists(fresh + ".hb"), "fresh orphan swept"
-    finally:
-        for p in (stale + ".hb", fresh + ".hb"):
-            if os.path.exists(p):
-                os.remove(p)
+def test_sweep_keeps_stale_heartbeat_live_owner(owners, tmp_path):
+    """Even when everything in it, .lock included, is 25 h old, a root
+    is kept while its owner lives (a long session that stopped
+    allocating hours ago)."""
+    _, root = owners()
+    before = sorted(os.listdir(root))
+    _age(_tree(root))
+    _run(ALLOC, tmp_path)
+    assert os.path.isdir(root), "live owner's root swept"
+    assert sorted(os.listdir(root)) == before
 
 
 def test_sweep_once_flag_is_independent_of_registration_order(tmp_path):
-    """_sweep_once keys on its OWN module flag, not on _SCRATCH_DIRS
-    being empty (r13 advisor: the warehouse registration running
-    first used to skip the tempdir sweep for the whole process)."""
-    saved_flag = entry._SWEPT
-    saved_dirs = entry._SCRATCH_DIRS[:]
-    try:
-        entry._SWEPT = False
-        entry._SCRATCH_DIRS.append("/nonexistent/placeholder")
-        stale = os.path.join(
-            tempfile.gettempdir(), f"fbs_once_pin_{uuid.uuid4().hex[:8]}"
-        )
-        _make(stale, mtime=_old())
-        entry._sweep_once()  # must sweep despite non-empty _SCRATCH_DIRS
-        assert not os.path.exists(stale)
-        assert entry._SWEPT is True
-        # second call is a no-op (flag, not state)
-        again = os.path.join(
-            tempfile.gettempdir(), f"fbs_once_pin_{uuid.uuid4().hex[:8]}"
-        )
-        _make(again, mtime=_old())
-        try:
-            entry._sweep_once()
-            assert os.path.exists(again), "_sweep_once ran twice"
-        finally:
-            os.rmdir(again)
-    finally:
-        entry._SWEPT = saved_flag
-        entry._SCRATCH_DIRS.clear()
-        entry._SCRATCH_DIRS.extend(saved_dirs)
+    """A table registered before the first allocation does not skip the
+    sweep; the sweep runs once, when the root is made, not on every
+    allocation."""
+    got = _run(ONCE, tmp_path, str(tmp_path))
+    assert got["a_kept"] is False, "first allocation skipped the sweep"
+    assert got["b_kept"] is True, "sweep ran again on a later allocation"
 
 
-def test_scratch_dir_writes_and_refreshes_heartbeats(tmp_path):
-    """Every allocation writes the new dir's sentinel AND refreshes
-    the heartbeats of every dir this process already owns — the
-    'touch on each query start' rule that keeps a long multi-query
-    session sweep-proof; _cleanup_scratch removes the sentinels."""
-    saved_dirs = entry._SCRATCH_DIRS[:]
-    saved_tables = entry._SCRATCH_TABLES[:]
-    entry._SCRATCH_DIRS.clear()
-    entry._SCRATCH_TABLES.clear()
-    try:
-        d1 = entry._scratch_dir("hb_pin", "/root/testdata/sf0.001")
-        assert open(d1 + ".hb").read() == str(os.getpid())
-        old = _old()
-        os.utime(d1 + ".hb", (old, old))
-        d2 = entry._scratch_dir("hb_pin2", "/root/testdata/sf0.001")
-        assert os.path.getmtime(d1 + ".hb") > old + 3600, (
-            "existing heartbeat not refreshed by the next allocation"
-        )
-        os.makedirs(d1)
-        os.makedirs(d2)
-        entry._cleanup_scratch()
-        for p in (d1, d2, d1 + ".hb", d2 + ".hb"):
-            assert not os.path.exists(p), f"{p} left behind by cleanup"
-    finally:
-        entry._SCRATCH_DIRS.clear()
-        entry._SCRATCH_TABLES.clear()
-        entry._SCRATCH_DIRS.extend(saved_dirs)
-        entry._SCRATCH_TABLES.extend(saved_tables)
+def test_sweep_ignores_foreign_tempdir_entries(tmp_path):
+    foreign = tmp_path / "other_dir"
+    foreign.mkdir()
+    (foreign / ".lock").write_text("")  # an unlocked lock file
+    (tmp_path / "other.txt").write_text("x")
+    (tmp_path / "fbs_note.txt").write_text("x")  # fbs_ but not a dir
+    _run(ALLOC, tmp_path)
+    assert sorted(os.listdir(tmp_path)) == [
+        "fbs_note.txt", "other.txt", "other_dir",
+    ]
+    assert os.listdir(foreign) == [".lock"]
 
 
-def test_cleanup_drops_registered_tables(spark):
-    """_cleanup_scratch must DROP registered catalog tables — a
-    location-only rmtree leaves a dangling metastore entry that
-    breaks a later CREATE with the same name within the session."""
-    saved_dirs = entry._SCRATCH_DIRS[:]
-    saved_tables = entry._SCRATCH_TABLES[:]
-    entry._SCRATCH_DIRS.clear()
-    entry._SCRATCH_TABLES.clear()
+def test_allocations_share_one_root_with_fresh_paths(tmp_path):
+    got = _run(ALLOC, tmp_path)
+    assert got["a"] != got["b"]
+    assert os.path.dirname(got["a"]) == os.path.dirname(got["b"]) == got["root"]
+    assert os.path.dirname(got["root"]) == str(tmp_path)
+    assert os.path.basename(got["root"]).startswith("fbs_")
+    assert os.path.basename(got["a"]).startswith("x_sf1_")
+    assert got["exist"] == [False, False], "allocated paths must not exist"
+
+
+def test_root_swept_before_lock_is_replaced(tmp_path):
+    got = _run(RACE, tmp_path)
+    assert got["root"] != got["swept"]
+    assert not os.path.exists(got["swept"])
+    assert got["root_exists"] and got["locked"], "replacement root not held"
+    assert os.path.dirname(got["dir"]) == got["root"]
+
+
+def test_cleanup_drops_registered_tables(spark, tmp_path, monkeypatch):
+    """_cleanup_scratch DROPs the registered tables (a location-only
+    rmtree leaves dangling catalog entries), removes the root, and
+    the next allocation makes a new root."""
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    monkeypatch.setattr(entry, "_SCRATCH_ROOT", None)
+    monkeypatch.setattr(entry, "_SCRATCH_LOCK", None)
+    monkeypatch.setattr(entry, "_SCRATCH_TABLES", [])
     name = f"scratch_pin_{uuid.uuid4().hex[:10]}"
     try:
-        spark.sql(f"CREATE TABLE {name} (a INT) USING parquet")
-        assert spark.catalog.tableExists(name)
+        path = entry._scratch_dir("cleanup", "sf")
+        root = entry._SCRATCH_ROOT
+        spark.range(3).write.option("path", path).saveAsTable(name)
         entry._SCRATCH_TABLES.append(name)
         entry._cleanup_scratch()
         assert not spark.catalog.tableExists(name)
+        assert not os.path.exists(root)
+        assert entry._SCRATCH_TABLES == []
+        again = entry._scratch_dir("cleanup", "sf")
+        assert entry._SCRATCH_ROOT not in (None, root)
+        assert os.path.dirname(again) == entry._SCRATCH_ROOT
+        assert os.path.isdir(entry._SCRATCH_ROOT)
     finally:
         spark.sql(f"DROP TABLE IF EXISTS {name}")
-        entry._SCRATCH_DIRS.extend(saved_dirs)
-        entry._SCRATCH_TABLES.extend(saved_tables)
-
-
-def test_pid_alive_rejects_sentinel_pids(tmp_path):
-    """r14 advisor item 1: kill(0,0) signals our own process group,
-    kill(-1,0) signals everything (always succeeds as root), and
-    pid 1 is init — a truncated heartbeat ('12345' cut to '1') must
-    read as DEAD, or its dir is unsweepable forever."""
-    for pid in (0, -1, 1):
-        p = str(tmp_path / f"hb_{pid}")
-        with open(p + ".hb", "w") as fh:
-            fh.write(str(pid))
-        assert entry._pid_alive(p + ".hb") is False, pid
-    # sanity: our own real pid still reads alive
-    p = str(tmp_path / "hb_self")
-    with open(p + ".hb", "w") as fh:
-        fh.write(str(os.getpid()))
-    assert entry._pid_alive(p + ".hb") is True
-
-
-def test_sweep_removes_truncated_heartbeat_dir(tmp_path):
-    """A stale dir whose heartbeat holds a truncated pid ('1') must be
-    swept — before the pid<=1 guard it was pinned forever."""
-    tmp = tempfile.gettempdir()
-    d = os.path.join(tmp, f"fbs_hbtrunc_pin_{uuid.uuid4().hex[:8]}")
-    _make(d, mtime=_old())
-    _hb(d, 1, mtime=_old())
-    try:
-        entry._sweep_stale_scratch()
-        assert not os.path.exists(d), "truncated-heartbeat dir not swept"
-        assert not os.path.exists(d + ".hb"), "sentinel left behind"
-    finally:
-        if os.path.exists(d):
-            os.rmdir(d)
-        if os.path.exists(d + ".hb"):
-            os.remove(d + ".hb")
-
-
-def test_sweep_hard_cap_overrides_live_pid(tmp_path):
-    """Past the 24h hard cap, age alone decides (r14 advisor item 1:
-    bounds pid-reuse pinning): even a heartbeat whose recorded pid IS
-    alive is swept — a live owner would have refreshed it at every
-    allocation, so a day-old heartbeat cannot be a live local session."""
-    tmp = tempfile.gettempdir()
-    ancient = time.time() - entry._SCRATCH_HARD_CAP_SECONDS - 60
-    d = os.path.join(tmp, f"fbs_hbcap_pin_{uuid.uuid4().hex[:8]}")
-    _make(d, mtime=ancient)
-    _hb(d, os.getpid(), mtime=ancient)  # live pid, ancient heartbeat
-    try:
-        entry._sweep_stale_scratch()
-        assert not os.path.exists(d), "hard-capped dir not swept"
-        assert not os.path.exists(d + ".hb"), "sentinel left behind"
-    finally:
-        if os.path.exists(d):
-            os.rmdir(d)
-        if os.path.exists(d + ".hb"):
-            os.remove(d + ".hb")
-
-
-def _stop_refresher():
-    """Stop whatever refresher thread is running and clear the slot
-    so the next _start_hb_refresher call creates a fresh one."""
-    if entry._HB_STOP is not None:
-        entry._HB_STOP.set()
-    if entry._HB_THREAD is not None:
-        entry._HB_THREAD.join(timeout=2)
-    entry._HB_THREAD = None
-    entry._HB_STOP = None
-
-
-def test_hb_refresher_keeps_heartbeats_fresh(tmp_path):
-    """r15 judge item 4: heartbeat freshness must not depend on
-    allocation frequency — one Spark action running past the sweep
-    thresholds (plausible at 100 TB) must keep its scratch
-    unsweepable. The daemon refresher rewrites owned heartbeats on a
-    timer; with a test-injected 50 ms tick the sentinel's mtime must
-    advance with NO allocation in between."""
-    d = str(tmp_path / "fbs_refresh_pin")
-    os.makedirs(d)
-    saved_dirs = entry._SCRATCH_DIRS[:]
-    try:
-        _stop_refresher()
-        entry._SCRATCH_DIRS[:] = [d]
-        entry._write_heartbeats_once()
-        before = os.stat(d + ".hb").st_mtime_ns
-        entry._start_hb_refresher(interval=0.05)
-        deadline = time.time() + 5
-        while time.time() < deadline:
-            if os.stat(d + ".hb").st_mtime_ns > before:
-                break
-            time.sleep(0.05)
-        assert os.stat(d + ".hb").st_mtime_ns > before, (
-            "refresher never rewrote the heartbeat — a >24h Spark "
-            "action's scratch would hit the hard cap mid-job"
-        )
-    finally:
-        _stop_refresher()
-        entry._SCRATCH_DIRS[:] = saved_dirs
-
-
-def test_hb_refresher_start_is_idempotent(tmp_path):
-    saved_dirs = entry._SCRATCH_DIRS[:]
-    try:
-        _stop_refresher()
-        entry._SCRATCH_DIRS[:] = []
-        entry._start_hb_refresher(interval=30)
-        first = entry._HB_THREAD
-        entry._start_hb_refresher(interval=30)
-        assert entry._HB_THREAD is first, (
-            "second start spawned a second refresher thread"
-        )
-        assert first.daemon, "refresher must be a daemon thread"
-    finally:
-        _stop_refresher()
-        entry._SCRATCH_DIRS[:] = saved_dirs
-
-
-def test_cleanup_stops_refresher_and_cannot_orphan_hb(tmp_path):
-    """_cleanup_scratch must (a) stop the refresher BEFORE removing
-    dirs (daemon threads keep running through atexit handlers — a
-    racing refresh would recreate .hb files beside removed dirs) and
-    (b) leave neither the dir nor its sentinel behind."""
-    d = str(tmp_path / "fbs_cleanup_pin")
-    os.makedirs(d)
-    saved_dirs = entry._SCRATCH_DIRS[:]
-    try:
-        _stop_refresher()
-        entry._SCRATCH_DIRS[:] = [d]
-        entry._write_heartbeats()  # writes sentinel + starts refresher
-        hb_thread = entry._HB_THREAD
-        assert hb_thread.is_alive()
         entry._cleanup_scratch()
-        # cleanup nulls the globals (r16 advisor — a later allocation
-        # must see "nothing running"), so join the captured ref
-        assert entry._HB_THREAD is None and entry._HB_STOP is None, (
-            "cleanup left the stopped refresher's globals populated"
-        )
-        hb_thread.join(timeout=5)
-        assert not hb_thread.is_alive(), (
-            "cleanup did not stop the refresher"
-        )
-        assert entry._SCRATCH_DIRS == [], "cleanup left dirs registered"
-        time.sleep(0.1)  # give a hypothetical racing refresh its window
-        assert not os.path.exists(d), "scratch dir survived cleanup"
-        assert not os.path.exists(d + ".hb"), (
-            "sentinel recreated/left after cleanup — would leak an "
-            "orphan .hb per killed run"
-        )
-    finally:
-        _stop_refresher()
-        entry._SCRATCH_DIRS[:] = saved_dirs
-
-
-def test_hb_refresher_restarts_after_cleanup(tmp_path):
-    """r16 advisor (restart race): _cleanup_scratch signals _HB_STOP
-    but the stopping thread can stay is_alive() for up to one tick.
-    If the process then allocates NEW scratch (cleanup is not only an
-    atexit hook — tests and long sessions call it mid-process), the
-    next _start_hb_refresher must not mistake the still-draining
-    corpse for a live refresher and return without starting one —
-    that would silently revert the process to allocation-only
-    heartbeat freshness, the exact r15 gap the daemon closes."""
-    saved_dirs = entry._SCRATCH_DIRS[:]
-    try:
-        _stop_refresher()
-        entry._SCRATCH_DIRS[:] = []
-        # long tick: the old thread stays parked in Event.wait, still
-        # is_alive() when cleanup returns — the advisor's exact shape
-        entry._start_hb_refresher(interval=30)
-        old = entry._HB_THREAD
-        assert old.is_alive()
-        entry._cleanup_scratch()
-        # (the signalled thread usually drains within microseconds —
-        # the deterministic stopping-thread shape is pinned in
-        # test_hb_refresher_start_ignores_stopping_thread below)
-        d = str(tmp_path / "fbs_restart_pin")
-        os.makedirs(d)
-        entry._SCRATCH_DIRS[:] = [d]
-        entry._write_heartbeats_once()
-        before = os.stat(d + ".hb").st_mtime_ns
-        entry._start_hb_refresher(interval=0.05)
-        assert entry._HB_THREAD is not None and entry._HB_THREAD is not old, (
-            "start treated the stopping thread as a live refresher — "
-            "no refresher is running after a cleanup+reallocation"
-        )
-        assert entry._HB_THREAD.is_alive()
-        deadline = time.time() + 5
-        while time.time() < deadline:
-            if os.stat(d + ".hb").st_mtime_ns > before:
-                break
-            time.sleep(0.05)
-        assert os.stat(d + ".hb").st_mtime_ns > before, (
-            "restarted refresher never rewrote the heartbeat"
-        )
-    finally:
-        _stop_refresher()
-        entry._SCRATCH_DIRS[:] = saved_dirs
-
-
-def test_hb_refresher_start_ignores_stopping_thread():
-    """Deterministic pin of the r16 advisor's exact window: _HB_STOP
-    is SET but the old thread is still is_alive() (it can drain for
-    up to one tick, or be mid-heartbeat-write). _start_hb_refresher
-    must treat that corpse as 'not running' and start a fresh
-    refresher — the pre-r17 `is_alive()`-only check returned early
-    and left the process with no refresher once the thread drained."""
-    import threading
-
-    saved_dirs = entry._SCRATCH_DIRS[:]
-    park = threading.Event()
-    try:
-        _stop_refresher()
-        entry._SCRATCH_DIRS[:] = []
-        # Hand-build the stopping-but-alive state: a thread parked on
-        # OUR event (so it deterministically stays alive), with the
-        # refresher's stop event already signalled.
-        dummy = threading.Thread(target=park.wait, daemon=True)
-        dummy.start()
-        stop = threading.Event()
-        stop.set()
-        entry._HB_THREAD = dummy
-        entry._HB_STOP = stop
-        entry._start_hb_refresher(interval=30)
-        assert entry._HB_THREAD is not dummy, (
-            "a set _HB_STOP with a still-alive thread was treated as "
-            "a live refresher — no new refresher started"
-        )
-        assert entry._HB_THREAD.is_alive()
-        assert entry._HB_STOP is not stop and not entry._HB_STOP.is_set()
-    finally:
-        park.set()
-        _stop_refresher()
-        entry._SCRATCH_DIRS[:] = saved_dirs

@@ -33,13 +33,17 @@ files (DuckDB ``COPY``), matching the bench harness's
 
 Usage:
     python tools/make_sf1.py [--src /root/testdata/sf0.1] \
-        [--dst /root/repo/.localdata/sf1] [--replicas 10]
+        [--dst <repo>/.localdata/sf1] [--replicas 10]
 """
 
 from __future__ import annotations
 
 import argparse
 import os
+from pathlib import Path
+
+#: default output dir: ``.localdata/sf1`` in this checkout
+DEFAULT_DST = str(Path(__file__).resolve().parents[1] / ".localdata" / "sf1")
 
 TABLES = [
     "region", "nation", "customer", "supplier", "part",
@@ -123,7 +127,7 @@ def _selects(off: dict[str, int]) -> dict[str, str]:
 
 def make_sf1(
     src: str = "/root/testdata/sf0.1",
-    dst: str = "/root/repo/.localdata/sf1",
+    dst: str = DEFAULT_DST,
     replicas: int = 10,
 ) -> str:
     """Build (or reuse) the derived sf1 directory; returns ``dst``.
@@ -162,7 +166,7 @@ def make_sf1(
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--src", default="/root/testdata/sf0.1")
-    ap.add_argument("--dst", default="/root/repo/.localdata/sf1")
+    ap.add_argument("--dst", default=DEFAULT_DST)
     ap.add_argument("--replicas", type=int, default=10)
     args = ap.parse_args()
     out = make_sf1(args.src, args.dst, args.replicas)
