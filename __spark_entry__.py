@@ -1341,9 +1341,9 @@ def q_dedup_clusters(spark, sf_dir):
 
     d = _t(spark, sf_dir, "documents")
     pairs = minhash_lsh_pairs(d, "doc_id", "text", threshold=0.5)
-    return carry_cache(
-        dup_clusters(pairs).withColumnRenamed("id", "doc_id"), pairs
-    )
+    clusters = dup_clusters(pairs)
+    out = carry_cache(clusters.withColumnRenamed("id", "doc_id"), clusters)
+    return carry_cache(out, pairs)
 
 
 def q_tfidf(spark, sf_dir):
@@ -2960,7 +2960,8 @@ def q_canonical_docs(spark, sf_dir):
 
     d = _t(spark, sf_dir, "documents")
     pairs = minhash_lsh_pairs(d, "doc_id", "text", threshold=0.5)
-    clusters = dup_clusters(pairs).withColumnRenamed("id", "doc_id")
+    components = dup_clusters(pairs)
+    clusters = components.withColumnRenamed("id", "doc_id")
     scored = d.select(
         "doc_id", quality_score(F.col("text")).alias("quality")
     )
@@ -2976,7 +2977,7 @@ def q_canonical_docs(spark, sf_dir):
         ).alias("w"),
         F.count("*").alias("n_members"),
     )
-    return carry_cache(
+    out = carry_cache(
         winners.select(
             "cluster_id",
             F.col("w.doc_id").alias("doc_id"),
@@ -2985,6 +2986,7 @@ def q_canonical_docs(spark, sf_dir):
         ),
         pairs,
     )
+    return carry_cache(out, components)
 
 
 def q_source_overlap(spark, sf_dir):
@@ -3383,7 +3385,8 @@ def q_leakage_safe_split(spark, sf_dir):
         cluster_key="id", cluster_label="cluster_id",
         eval_fraction=0.1, salt="split",
     )
-    return carry_cache(out.select("doc_id", "rep", "split"), pairs)
+    out = carry_cache(out.select("doc_id", "rep", "split"), pairs)
+    return carry_cache(out, clusters)
 
 
 def q_collocations(spark, sf_dir):

@@ -40,6 +40,7 @@ class CacheScope:
 
     def __init__(self) -> None:
         self._dfs: list[DataFrame] = []
+        self._checkpoints: list[DataFrame] = []
 
     def persist(
         self,
@@ -50,13 +51,39 @@ class CacheScope:
         self._dfs.append(out)
         return out
 
+    def checkpoint(self, df: DataFrame, eager: bool = True) -> DataFrame:
+        """``df.localCheckpoint(eager)``, freed by :meth:`release`.
+
+        A local checkpoint is an RDD pinned in the block manager, not a
+        CacheManager entry: ``DataFrame.unpersist`` cannot reach it, and
+        it stays until a JVM GC collects the RDD. The scope unpersists
+        the RDD itself (the checkpoint's plan is a ``LogicalRDD`` over
+        it)."""
+        out = df.localCheckpoint(eager)
+        self._checkpoints.append(out)
+        return out
+
+    def unpersist(self, df: DataFrame) -> None:
+        """Free one :meth:`checkpoint` result ahead of the rest of the
+        scope (an intermediate nothing reads any more). Spark logs a
+        warning that the RDD's lineage is truncated and cannot be
+        recomputed: expected, since nothing reads it again."""
+        self._checkpoints.remove(df)
+        df._jdf.logicalPlan().rdd().unpersist(False)
+
     def release(self, blocking: bool = False) -> None:
         for d in self._dfs:
             try:
                 d.unpersist(blocking)
             except Exception:
                 pass  # session already stopped — nothing to free
+        for d in self._checkpoints:
+            try:
+                d._jdf.logicalPlan().rdd().unpersist(blocking)
+            except Exception:
+                pass
         self._dfs.clear()
+        self._checkpoints.clear()
 
     def attach(self, result: DataFrame) -> DataFrame:
         """Tag ``result`` with this scope and return it."""
@@ -89,5 +116,7 @@ def carry_cache(dst: DataFrame, src: DataFrame) -> DataFrame:
         setattr(dst, _ATTR, s)
     else:
         d._dfs.extend(s._dfs)
+        d._checkpoints.extend(s._checkpoints)
         s._dfs = []
+        s._checkpoints = []
     return dst

@@ -64,7 +64,7 @@ def whitespace_token_count(c: Column | str) -> Column:
 def word_shingles(c: Column | str, n: int = 3) -> Column:
     """Word n-gram shingles (array<string>); < n words → empty array.
 
-    Built with sequence+transform (JVM-side), no explode needed at the
+    Built JVM-side (see ``word_shingles_arr``), no explode needed at the
     call site: callers explode lazily so Spark streams the expansion.
     """
     return word_shingles_arr(tokens(c), n)
@@ -368,10 +368,21 @@ def pmi_collocations(
 
 def word_shingles_arr(toks_col, n: int):
     """word_shingles over an ALREADY-tokenized array column (avoids
-    re-normalizing when the caller holds the token array)."""
+    re-normalizing when the caller holds the token array).
+
+    Shingle i joins tokens i..i+n-1: ``arrays_zip`` lines up the n
+    offset slices of ``t`` (each of length size(t)-n+1), so the lambda
+    reads only its own struct. A lambda that captured ``t`` itself
+    would re-evaluate it (for ``word_shingles``: lower → regexp →
+    split of the whole document) once per shingle, because Spark runs
+    higher-order-function bodies interpreted, element by element."""
     t = F.col(toks_col) if isinstance(toks_col, str) else toks_col
-    idx = F.sequence(F.lit(0), F.size(t) - n)
-    shingle = lambda i: F.concat_ws(" ", F.slice(t, i + 1, n))  # noqa: E731
-    return F.when(F.size(t) >= n, F.transform(idx, shingle)).otherwise(
-        F.array().cast("array<string>")
+    length = F.size(t) - n + 1
+    zipped = F.arrays_zip(*[F.slice(t, k, length) for k in range(1, n + 1)])
+    shingle = lambda s: F.concat_ws(" ", *[s[str(k)] for k in range(n)])  # noqa: E731
+    # coalesce, not otherwise: the zip is nullable (t is), and only a
+    # non-null last argument keeps the result non-nullable
+    return F.coalesce(
+        F.when(F.size(t) >= n, F.transform(zipped, shingle)),
+        F.array().cast("array<string>"),
     )

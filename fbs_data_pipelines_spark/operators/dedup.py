@@ -65,6 +65,19 @@ def dedup_exact(
     )
 
 
+def _shingle_sets(
+    df: DataFrame, id_col: str, text_col: str, n: int
+) -> DataFrame:
+    """(id, sh): each doc's distinct shingles as one array — a narrow
+    map, no shuffle (shingle sets are per-document)."""
+    from fbs_data_pipelines_spark.operators.partitioning import ensure_parallelism
+
+    src = ensure_parallelism(df.select(F.col(id_col), F.col(text_col)))
+    return src.select(
+        F.col(id_col), F.array_distinct(word_shingles(text_col, n)).alias("sh")
+    )
+
+
 def shingle_table(
     df: DataFrame, id_col: str, text_col: str, n: int = 3
 ) -> DataFrame:
@@ -74,12 +87,8 @@ def shingle_table(
     the shingle array), so this is a pure narrow map — no shuffle at
     all. (Shingle sets are per-document; no cross-doc distinct needed.)
     """
-    from fbs_data_pipelines_spark.operators.partitioning import ensure_parallelism
-
-    src = ensure_parallelism(df.select(F.col(id_col), F.col(text_col)))
-    return src.select(
-        F.col(id_col),
-        F.explode(F.array_distinct(word_shingles(text_col, n))).alias("shingle"),
+    return _shingle_sets(df, id_col, text_col, n).select(
+        F.col(id_col), F.explode("sh").alias("shingle")
     )
 
 
@@ -114,8 +123,10 @@ def minhash_signatures(
     partial aggregation — the only shuffle carries ≤ K·8 bytes per
     doc. (A zero-shuffle array_min/transform variant was measured 5×
     slower: Spark's higher-order lambdas are interpreted, while
-    explode+groupBy stays in whole-stage codegen.) Docs with < n words
-    produce no signature (empty shingle set)."""
+    explode+groupBy stays in whole-stage codegen. That measurement
+    predates the shingle fix in ``word_shingles_arr`` — it ran with the
+    lambda that re-tokenized the whole document per shingle.) Docs with
+    < n words produce no signature (empty shingle set)."""
     sh = shingle_table(df, id_col, text_col, n)
     return sh.groupBy(id_col).agg(*_minhash_aggs(num_hashes))
 
@@ -143,21 +154,18 @@ def minhash_lsh_pairs(
 
     rows_per_band = num_hashes // bands
 
-    # The shingle table feeds BOTH the signature pass and the verify
-    # pass, and each self-join streams its subtree twice — without
-    # materialization the shingling work runs ~4×. Persist the two
-    # small intermediates (sh: ids+shingles, sig: K hex codes per doc;
-    # both ≪ input size). On a cluster the same role is played by a
-    # shuffle-materialized temp or exchange reuse; MEMORY_AND_DISK
-    # spills safely if a 100 TB corpus makes sh large.
+    # ONE persisted table, one row per doc: (id, its distinct shingles
+    # as an array). Each doc is tokenized and shingled once; the
+    # signature pass explodes the arrays, and the verify pass reads
+    # both docs' arrays of each candidate pair. Without the persist
+    # the shingling subtree would run once per consumer. The table is
+    # ≪ the input text; MEMORY_AND_DISK spills safely at scale.
     scope = CacheScope()
-    sh = scope.persist(shingle_table(df, id_col, text_col, n))
-    # fuse the per-doc shingle-set size into the signature aggregate:
-    # one pass over sh produces signatures AND the |A| sizes the
-    # Jaccard verification needs (saves a second full groupBy scan)
-    sig = scope.persist(
-        sh.groupBy(id_col)
-        .agg(*_minhash_aggs(num_hashes), F.count("*").alias("sz"))
+    docs = scope.persist(_shingle_sets(df, id_col, text_col, n))
+    sig = (
+        docs.select(F.col(id_col), F.explode("sh").alias("shingle"))
+        .groupBy(id_col)
+        .agg(*_minhash_aggs(num_hashes))
     )
 
     # band bucket key = ONE xxhash64 over (band index, band's minhash
@@ -191,38 +199,23 @@ def minhash_lsh_pairs(
         .distinct()
     )
 
-    # verification restricted to candidate pairs: intersection counts
-    # come from joining each candidate's shingle set — never the full
-    # all-pairs-sharing-a-shingle blowup (that's ngram_jaccard's job).
-    # Cost: |cand| × shingles-per-doc, bounded by the banding.
-    sizes = sig.select(F.col(id_col), "sz")
-    sh_a = sh.select(F.col(id_col).alias("id_a"), "shingle")
-    sh_b = sh.select(F.col(id_col).alias("id_b"), "shingle")
-    inter = (
-        cand.join(sh_a, "id_a")
-        .join(sh_b, ["id_b", "shingle"])
-        .groupBy("id_a", "id_b")
-        .agg(F.count("*").alias("inter"))
-    )
-    jac = (
-        inter.join(
-            sizes.select(F.col(id_col).alias("id_a"), F.col("sz").alias("sz_a")),
-            "id_a",
-        )
-        .join(
-            sizes.select(F.col(id_col).alias("id_b"), F.col("sz").alias("sz_b")),
-            "id_b",
-        )
-        .select(
-            "id_a",
-            "id_b",
-            round_half_up(
-                F.col("inter") / (F.col("sz_a") + F.col("sz_b") - F.col("inter")), 4
-            ).alias("jaccard"),
-        )
-    )
+    # verification restricted to candidate pairs: each pair joins the
+    # two docs' shingle arrays (one row per pair, never per shingle)
+    # and intersects them; the arrays are already distinct, so
+    # |A∩B| = size(array_intersect). Cost: |cand| × shingles-per-doc,
+    # bounded by the banding.
+    sh_a = docs.select(F.col(id_col).alias("id_a"), F.col("sh").alias("sh_a"))
+    sh_b = docs.select(F.col(id_col).alias("id_b"), F.col("sh").alias("sh_b"))
+    inter = F.size(F.array_intersect("sh_a", "sh_b"))
+    jaccard = round_half_up(inter / (F.size("sh_a") + F.size("sh_b") - inter), 4)
+    keep = jaccard >= threshold
+    if threshold <= 0:  # a pair sharing no shingle is no near-dup
+        keep = keep & (inter > 0)
     return scope.attach(
-        jac.filter(F.col("jaccard") >= threshold).select("id_a", "id_b", "jaccard")
+        cand.join(sh_a, "id_a")
+        .join(sh_b, "id_b")
+        .filter(keep)
+        .select("id_a", "id_b", jaccard.alias("jaccard"))
     )
 
 
@@ -468,18 +461,34 @@ def dup_clusters(
     per round locally, one extra shuffle of the full label table per
     round at scale) is gone. The round's checkpoint is LAZY; the
     changed-count action materializes it.
+
+    Round 1 is folded into the initial labels: each node starts at
+    ``least(id, min(dst))`` over its edges, which is what the first
+    propagation round would give. The fixed point is unchanged (the
+    minimum id of each component), and a star whose centre holds the
+    minimum id converges in the first round's count.
+
+    Storage: each superseded round's labels are unpersisted as soon as
+    the next round has materialized (a local checkpoint otherwise stays
+    pinned until a JVM GC). The edges and the final labels sit in a
+    :class:`~fbs_data_pipelines_spark.caching.CacheScope` attached to
+    the result — call ``caching.release_cache(result)`` after
+    consuming it.
     """
-    edges = (
+    from fbs_data_pipelines_spark.caching import CacheScope
+
+    scope = CacheScope()
+    edges = scope.checkpoint(
         pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
         .unionByName(pairs.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst")))
-        .distinct()
-        .localCheckpoint()
+        .distinct(),
+        eager=False,
     )
-    labels = (
-        edges.select(F.col("src").alias("id"))
-        .distinct()
-        .select("id", F.col("id").alias("label"))
-        .localCheckpoint()
+    labels = scope.checkpoint(
+        edges.groupBy("src")
+        .agg(F.least(F.col("src"), F.min("dst")).alias("label"))
+        .select(F.col("src").alias("id"), "label"),
+        eager=False,
     )
     label_type = labels.schema["label"].dataType
     for _ in range(max_iter):
@@ -491,22 +500,27 @@ def dup_clusters(
         base = labels.select(
             "id", "label", F.col("label").alias("__old")
         )
-        new_labels = (
+        new_labels = scope.checkpoint(
             base.unionByName(prop)
             .groupBy("id")
             # every id has exactly one non-null __old (its base row),
             # so min(__old) == the previous label and the change test
             # needs no join back
-            .agg(F.min("label").alias("label"), F.min("__old").alias("__old"))
-            .localCheckpoint(eager=False)
+            .agg(F.min("label").alias("label"), F.min("__old").alias("__old")),
+            eager=False,
         )
         changed = new_labels.filter(
             F.col("label") != F.col("__old")
         ).count()
-        labels = new_labels.select("id", "label")
+        # the count checkpointed new_labels (lineage cut): the
+        # superseded round's blocks are garbage now
+        scope.unpersist(labels)
+        labels = new_labels
         if changed == 0:
             break
-    return labels.select(F.col("id"), F.col("label").alias("cluster_id"))
+    return scope.attach(
+        labels.select(F.col("id"), F.col("label").alias("cluster_id"))
+    )
 
 
 def decontaminate(

@@ -10,6 +10,16 @@ Conventions (SURVEY §7 step 1):
 - Arrow enabled for the pandas-UDF slow path.
 - ``spark.sql.shuffle.partitions`` sized from the local parallelism for
   tests; on a real cluster leave AQE's coalescing to right-size it.
+- DataFrame debugging off (``spark.python.sql.dataFrameDebugging.enabled
+  =false``). With it on, PySpark wraps every ``F.*`` and ``DataFrame``
+  call in about six extra py4j round-trips to record the Python call
+  site, which doubles plan-build cost (building ``minhash_lsh_pairs``
+  takes 1,443 round-trips with it on, 723 off). The trade-off:
+  analysis and runtime errors no longer name the Python line that
+  built the failing expression. To get that context back, pass
+  ``extra_conf={"spark.python.sql.dataFrameDebugging.enabled": "true"}``
+  to :func:`get_spark`; PySpark reads the setting once per process, at
+  the first API call after a session exists.
 """
 
 from __future__ import annotations
@@ -117,6 +127,7 @@ def get_spark(
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
