@@ -20,6 +20,29 @@ def _col(c: Column | str) -> Column:
     return F.col(c) if isinstance(c, str) else c
 
 
+def quote_ident(name: str) -> str:
+    """``name`` as a backtick-quoted SQL identifier (dots, spaces and
+    backticks in the name stay part of it)."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def rewrite_by_type(df: DataFrame, programs: Mapping[str, str]) -> DataFrame:
+    """Rewrite every column whose type's ``simpleString`` is a key of
+    ``programs`` with that SQL template (``{c}`` = the quoted column),
+    keeping its name and position; other columns pass through.
+
+    The whole projection is ONE ``selectExpr`` of SQL text: building
+    it per column from ``F.*`` calls costs several py4j round trips
+    per column (the ``functions.vectors.lit_array`` lesson), and the
+    parser hands Catalyst the same expression tree."""
+    exprs = []
+    for f in df.schema.fields:
+        c = quote_ident(f.name)
+        program = programs.get(f.dataType.simpleString())
+        exprs.append(f"{program.format(c=c)} AS {c}" if program else c)
+    return df.selectExpr(*exprs)
+
+
 def clean_percent(c: Column | str) -> Column:
     """``' 950847 %'`` → double 950847.0; junk → null.
 
@@ -45,13 +68,9 @@ def empty_to_null(c: Column | str) -> Column:
 def empty_to_null_all(df: DataFrame) -> DataFrame:
     """Empty-string→null across every string column (F8,
     /root/reference/src/transformation_layer.py:165-167)."""
-    exprs = []
-    for f in df.schema.fields:
-        if f.dataType.simpleString() == "string":
-            exprs.append(empty_to_null(f.name).alias(f.name))
-        else:
-            exprs.append(F.col(f.name))
-    return df.select(*exprs)
+    return rewrite_by_type(
+        df, {"string": "CASE WHEN {c} = '' THEN NULL ELSE {c} END"}
+    )
 
 
 def nan_to_null(c: Column | str) -> Column:
@@ -63,13 +82,8 @@ def nan_to_null(c: Column | str) -> Column:
 def nan_to_null_all(df: DataFrame) -> DataFrame:
     """NaN→null for every float/double column (N5,
     /root/reference/src/transformation_layer.py:118)."""
-    exprs = []
-    for f in df.schema.fields:
-        if f.dataType.simpleString() in ("double", "float"):
-            exprs.append(nan_to_null(f.name).alias(f.name))
-        else:
-            exprs.append(F.col(f.name))
-    return df.select(*exprs)
+    program = "CASE WHEN isnan({c}) THEN NULL ELSE {c} END"
+    return rewrite_by_type(df, {"double": program, "float": program})
 
 
 def round_half_up(c: Column | str, scale: int) -> Column:

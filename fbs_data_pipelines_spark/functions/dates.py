@@ -13,6 +13,8 @@ import datetime as _dt
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from fbs_data_pipelines_spark.functions.cleaning import rewrite_by_type
+
 _EPOCH_UTC = _dt.datetime(1970, 1, 1, tzinfo=_dt.timezone.utc)
 
 
@@ -81,13 +83,10 @@ def format_dates_for_export(df: DataFrame) -> DataFrame:
     """Export normalization (K3/D6, transformation_layer.py:101-119):
     date cols → ``yyyy-MM-dd`` strings, timestamp cols →
     ``yyyy-MM-dd HH:mm:ss`` strings (JSON-safe payloads)."""
-    exprs = []
-    for f in df.schema.fields:
-        t = f.dataType.simpleString()
-        if t == "date":
-            exprs.append(F.date_format(f.name, "yyyy-MM-dd").alias(f.name))
-        elif t == "timestamp":
-            exprs.append(F.date_format(f.name, "yyyy-MM-dd HH:mm:ss").alias(f.name))
-        else:
-            exprs.append(F.col(f.name))
-    return df.select(*exprs)
+    return rewrite_by_type(
+        df,
+        {
+            "date": "date_format({c}, 'yyyy-MM-dd')",
+            "timestamp": "date_format({c}, 'yyyy-MM-dd HH:mm:ss')",
+        },
+    )

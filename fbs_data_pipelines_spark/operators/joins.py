@@ -194,7 +194,10 @@ def temporal_join(
 
 
 def latest_snapshot(
-    df: DataFrame, partition_by: Sequence[str], order_col: str
+    df: DataFrame,
+    partition_by: Sequence[str],
+    order_col: str,
+    tiebreak: Sequence[str] = (),
 ) -> DataFrame:
     """Newest row per key (S8/O2 generalized: sort-by-createdTime-desc
     take-first, /root/reference/src/extraction_layer.py:35-36).
@@ -203,12 +206,15 @@ def latest_snapshot(
     while keys are high-cardinality and balanced. For low-cardinality
     or Zipfian keys use ``latest_snapshot_agg`` (two-phase max_by) —
     window skew is unsplittable, aggregation skew combines map-side.
+
+    Nulls in ``order_col`` sort last. Ties pick an arbitrary row unless
+    ``tiebreak`` columns (compared descending, after ``order_col``)
+    decide them.
     """
     from pyspark.sql import Window
 
-    w = (
-        Window.partitionBy(*partition_by)
-        .orderBy(F.col(order_col).desc())
+    w = Window.partitionBy(*partition_by).orderBy(
+        *[F.col(c).desc() for c in (order_col, *tiebreak)]
     )
     return (
         df.withColumn("__rn", F.row_number().over(w))

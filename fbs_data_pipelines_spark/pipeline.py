@@ -10,32 +10,44 @@ and the engine's sinks. The reference's error model is preserved:
 a failing stage logs and the pipeline continues with the remaining
 entities (etl.py:56-60,76-79) — but unlike the reference, a failed
 extract never leaks a stale DataFrame into the next transform.
+
+Extract picks the newest file per (layer, entity) on the driver from
+the listing rows and runs no Spark job: the newest ``created_time``
+wins, a null ``created_time`` loses, and equal times go to the larger
+file name (``catalog.newest_rows``; ``latest_files`` is the same rule
+as a DataFrame operator). Load writes the tables concurrently, one
+thread per table, under the caller's job group; if writes fail, the
+first failure in ``output`` order is raised once every write has
+finished.
 """
 
 from __future__ import annotations
 
 import datetime as _dt
 import logging
-from collections.abc import Callable
+from concurrent.futures import ThreadPoolExecutor
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 
-from fbs_data_pipelines_spark.plans.creditos import modeled_creditos, raw_creditos
-from fbs_data_pipelines_spark.plans.radicados import modeled_radicados, raw_radicados
+from fbs_data_pipelines_spark.plans import TRANSFORMS
 from fbs_data_pipelines_spark.sinks.writers import export_payload, write_parquet
-from fbs_data_pipelines_spark.sources.catalog import latest_files, list_layer
+# list_layer and latest_files are the DataFrame forms of extract's
+# selection; they stay importable from this module
+from fbs_data_pipelines_spark.sources.catalog import (
+    latest_files,  # noqa: F401
+    layer_rows,
+    list_layer,  # noqa: F401
+    newest_rows,
+)
 from fbs_data_pipelines_spark.sources.csv import read_dialected_csv
 
 log = logging.getLogger(__name__)
 
 #: {(layer, entity): transform} — the reference's getattr dispatch
-#: (etl.py:73-74) made explicit and importable
-TRANSFORM_REGISTRY: dict[tuple[str, str], Callable[..., DataFrame]] = {
-    ("raw", "creditos"): raw_creditos,
-    ("raw", "radicados"): raw_radicados,
-    ("modeled", "creditos"): modeled_creditos,
-    ("modeled", "radicados"): modeled_radicados,
-}
+#: (etl.py:73-74) made explicit and importable; the same object as
+#: ``plans.TRANSFORMS``
+TRANSFORM_REGISTRY = TRANSFORMS
 
 #: per-entity CSV dialect quirks (creditos has 1 junk leading row,
 #: gdrive_handler.py:247)
@@ -73,23 +85,21 @@ class ETLPipeline:
     def extract(self, layer: str) -> dict[str, DataFrame]:
         """Latest snapshot per entity in ``layer`` → permissive DF.
 
-        Same S7/S8 operators over either catalog: the listing DF comes
+        Same S7/S8 selection over either catalog: the listing rows come
         from the Drive API transport or os.scandir; `path` carries a
         file id or a filesystem path respectively."""
         if self.drive is not None and layer in self.drive_folders:
-            listing = self.drive.listing_df(
-                self.spark, self.drive_folders[layer], layer
-            )
+            rows = self.drive.listing_rows(self.drive_folders[layer], layer)
             reader = lambda r: self.drive.download_csv(  # noqa: E731
                 self.spark, r.path, skip_rows=SKIP_ROWS.get(r.entity, 0)
             )
         else:
-            listing = list_layer(self.spark, self.root, layer)
+            rows = layer_rows(self.root, layer)
             reader = lambda r: read_dialected_csv(  # noqa: E731
                 self.spark, r.path, skip_rows=SKIP_ROWS.get(r.entity, 0)
             )
         out: dict[str, DataFrame] = {}
-        for r in latest_files(listing).collect():
+        for r in newest_rows(rows):
             try:
                 out[r.entity] = reader(r)
             except Exception:  # noqa: BLE001 — reference logs & continues
@@ -117,15 +127,32 @@ class ETLPipeline:
         self, out_dir: str, as_payload: bool = False
     ) -> dict[tuple[str, str], object]:
         """Persist every transformed table: parquet (scale sink), or
-        additionally return the row payload (the Sheets-edge shape)."""
-        results: dict[tuple[str, str], object] = {}
-        for (layer, entity), df in self.output.items():
-            path = f"{out_dir}/{layer}_{entity}"
+        additionally return the row payload (the Sheets-edge shape).
+
+        The tables are independent single-stage jobs, so each is
+        written from its own thread and Spark schedules them side by
+        side; every thread inherits the caller's job group, description
+        and tags. Results keep ``output``'s order; the first failure in
+        that order is raised after every write has finished."""
+
+        def persist(df: DataFrame, path: str) -> object:
             write_parquet(df, path)
-            results[(layer, entity)] = (
-                export_payload(df) if as_payload else path
-            )
-        return results
+            return export_payload(df) if as_payload else path
+
+        if not self.output:
+            return {}
+        with ThreadPoolExecutor(max_workers=len(self.output)) as pool:
+            # one wrapper per table: each clones the caller's local
+            # properties, so no two threads share (and mutate) one copy
+            futures = {
+                (layer, entity): pool.submit(
+                    inheritable_thread_target(self.spark)(persist),
+                    df,
+                    f"{out_dir}/{layer}_{entity}",
+                )
+                for (layer, entity), df in self.output.items()
+            }
+        return {key: f.result() for key, f in futures.items()}
 
     def load_to_sheets(
         self, sheets, spreadsheet_ids: dict[tuple[str, str], str]

@@ -9,10 +9,12 @@ file metadata + declarative latest-snapshot selection, plus the real
 
 from __future__ import annotations
 
+import datetime as _dt
 import os
+from collections.abc import Iterable
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from fbs_data_pipelines_spark.operators.joins import latest_snapshot
@@ -30,17 +32,27 @@ LISTING_SCHEMA = T.StructType(
 
 
 def entity_from_filename(name: str) -> str:
-    """``{date}_{entity}.csv`` → entity (etl.py:34,70-71)."""
-    return name.split("_")[1].split(".")[0]
+    """``{date}_{entity}.csv`` → entity (etl.py:34,70-71); a name
+    without ``_`` is its own entity."""
+    return name.split("_")[1].split(".")[0] if "_" in name else name
 
 
-def list_layer(spark: SparkSession, root: str, layer: str) -> DataFrame:
-    """Listing DF for ``root/layer/*`` — the Drive-walk analogue.
+class ListingRow(NamedTuple):
+    """One file's metadata, in LISTING_SCHEMA order; ``created_time``
+    is naive UTC."""
 
-    Driver-side os.scandir (metadata-only, like the API listing); the
-    result is a small DataFrame that downstream ops treat
-    declaratively (filter = the reference's ``q=`` pushdown).
-    """
+    path: str
+    name: str
+    layer: str
+    entity: str
+    created_time: _dt.datetime | None
+    size_bytes: int
+
+
+def layer_rows(root: str, layer: str) -> list[ListingRow]:
+    """Metadata of the files in ``root/layer`` — the Drive-walk
+    analogue, as plain driver-side rows (os.scandir reads metadata
+    only, like the API listing)."""
     rows = []
     layer_dir = os.path.join(root, layer)
     if os.path.isdir(layer_dir):
@@ -48,24 +60,69 @@ def list_layer(spark: SparkSession, root: str, layer: str) -> DataFrame:
             if not e.is_file():
                 continue
             st = e.stat()
-            import datetime as _dt
-
             rows.append(
-                (
+                ListingRow(
                     e.path,
                     e.name,
                     layer,
-                    entity_from_filename(e.name) if "_" in e.name else e.name,
-                    _dt.datetime.utcfromtimestamp(st.st_mtime),
+                    entity_from_filename(e.name),
+                    _dt.datetime.fromtimestamp(st.st_mtime, _dt.timezone.utc).replace(
+                        tzinfo=None
+                    ),
                     st.st_size,
                 )
             )
-    return spark.createDataFrame(rows, schema=LISTING_SCHEMA)
+    return rows
+
+
+def to_listing_df(spark: SparkSession, rows: Iterable[ListingRow]) -> DataFrame:
+    """Listing rows → a LISTING_SCHEMA DataFrame. ``created_time`` goes
+    in as an aware UTC datetime: PySpark converts a NAIVE one through
+    the Python process's local zone, so the stored instant would
+    depend on the host's TZ."""
+    return spark.createDataFrame(
+        [
+            r._replace(created_time=r.created_time.replace(tzinfo=_dt.timezone.utc))
+            if r.created_time is not None
+            else r
+            for r in rows
+        ],
+        schema=LISTING_SCHEMA,
+    )
+
+
+def list_layer(spark: SparkSession, root: str, layer: str) -> DataFrame:
+    """Listing DF for ``root/layer/*``; downstream ops treat it
+    declaratively (filter = the reference's ``q=`` pushdown)."""
+    return to_listing_df(spark, layer_rows(root, layer))
+
+
+def _recency(r: ListingRow) -> tuple:
+    # a null created_time sorts below every time; equal times go to
+    # the larger name
+    t = r.created_time
+    return (t is not None, t or _dt.datetime.min, r.name or "")
+
+
+def newest_rows(rows: Iterable[ListingRow]) -> list[ListingRow]:
+    """Newest row per (layer, entity), ordered by (layer, entity) — S8
+    on the driver, with no Spark job. The newest ``created_time`` wins,
+    a null ``created_time`` loses, and equal times go to the larger
+    ``name``: the order :func:`latest_files` uses."""
+    best: dict[tuple[str, str], ListingRow] = {}
+    for r in rows:
+        key = (r.layer, r.entity)
+        if key not in best or _recency(r) > _recency(best[key]):
+            best[key] = r
+    return [best[k] for k in sorted(best)]
 
 
 def latest_files(listing: DataFrame) -> DataFrame:
-    """Newest file per (layer, entity) — S8 as a window op."""
-    return latest_snapshot(listing, ["layer", "entity"], "created_time")
+    """Newest file per (layer, entity) — S8 as a window op, with the
+    tie rule of :func:`newest_rows`."""
+    return latest_snapshot(
+        listing, ["layer", "entity"], "created_time", tiebreak=["name"]
+    )
 
 
 def save_table(df: DataFrame, name: str, mode: str = "overwrite") -> None:

@@ -63,17 +63,14 @@ from pyspark.sql.types import StringType, StructField, StructType
 from fbs_data_pipelines_spark.sources.catalog import (
     LISTING_SCHEMA,
     entity_from_filename,
+    newest_rows,
 )
 from fbs_data_pipelines_spark.sources.csv import dedup_headers
 from fbs_data_pipelines_spark.sources.gdrive import (
     FOLDER_MIME,
     DriveClient,
-    _parse_rfc3339,
+    listing_row,
 )
-
-
-def _entity(name: str) -> str:
-    return entity_from_filename(name) if "_" in name else name
 
 
 def _build_transport(options: dict):
@@ -122,20 +119,11 @@ def _select_files(options: dict) -> list[dict]:
         files = [
             f
             for f in files
-            if _entity(f.get("name", "")) == entity
+            if entity_from_filename(f.get("name", "")) == entity
         ]
     if str(options.get("latest_only", "")).lower() == "true":
-        best: dict[str, dict] = {}
-        for f in files:
-            e = _entity(f.get("name", ""))
-            ts = _parse_rfc3339(f.get("createdTime"))
-            cur = best.get(e)
-            if cur is None or (
-                ts is not None
-                and (cur[0] is None or ts > cur[0])
-            ):
-                best[e] = (ts, f)
-        files = [f for _, f in best.values()]
+        newest = {r.path for r in newest_rows(listing_row(f, "") for f in files)}
+        files = [f for f in files if f["id"] in newest]
     return sorted(files, key=lambda f: f.get("name", ""))
 
 
@@ -187,15 +175,7 @@ class DriveReader(DataSourceReader):
         transport = _build_transport(self.options)
         if self.mode == "listing":
             for f in _select_files(self.options):
-                name = f.get("name", "")
-                yield (
-                    f["id"],
-                    name,
-                    partition.layer,
-                    _entity(name),
-                    _parse_rfc3339(f.get("createdTime")),
-                    int(f.get("size", 0)),
-                )
+                yield tuple(listing_row(f, partition.layer))
             return
         if not partition.file_id:
             return

@@ -35,9 +35,10 @@ from pyspark.sql import DataFrame, SparkSession
 
 from fbs_data_pipelines_spark.sinks.writers import normalize_for_export
 from fbs_data_pipelines_spark.sources.catalog import (
-    LISTING_SCHEMA,
+    ListingRow,
     entity_from_filename,
     latest_files,
+    to_listing_df,
 )
 from fbs_data_pipelines_spark.sources.csv import read_dialected_csv
 from fbs_data_pipelines_spark.sources.rows import (
@@ -182,6 +183,19 @@ def _parse_rfc3339(ts: str | None) -> _dt.datetime | None:
     return dt.astimezone(_dt.timezone.utc).replace(tzinfo=None)
 
 
+def listing_row(f: dict, layer: str) -> ListingRow:
+    """A Drive file resource as a listing row (``path`` = file id)."""
+    name = f.get("name", "")
+    return ListingRow(
+        f["id"],
+        name,
+        layer,
+        entity_from_filename(name),
+        _parse_rfc3339(f.get("createdTime")),
+        int(f.get("size", 0)),
+    )
+
+
 class DriveClient:
     """Reference-shaped Drive access over an injected transport."""
 
@@ -212,29 +226,22 @@ class DriveClient:
             current = hits[0]["id"]
         return current
 
+    def listing_rows(self, folder_id: str, layer: str) -> list[ListingRow]:
+        """Folder contents as the engine's listing rows (the Drive-walk
+        analogue of ``catalog.layer_rows``; ``path`` carries the file
+        id)."""
+        return [
+            listing_row(f, layer)
+            for f in self.transport.list_files(parent_id=folder_id)
+            if f.get("mimeType") != FOLDER_MIME
+        ]
+
     def listing_df(
         self, spark: SparkSession, folder_id: str, layer: str
     ) -> DataFrame:
-        """Folder contents → the engine's LISTING_SCHEMA DataFrame
-        (the Drive-walk analogue of ``catalog.list_layer``; ``path``
-        carries the file id). Downstream ops — latest-snapshot pick,
-        metadata filters — are the same declarative S7/S8 operators."""
-        rows = []
-        for f in self.transport.list_files(parent_id=folder_id):
-            if f.get("mimeType") == FOLDER_MIME:
-                continue
-            name = f.get("name", "")
-            rows.append(
-                (
-                    f["id"],
-                    name,
-                    layer,
-                    entity_from_filename(name) if "_" in name else name,
-                    _parse_rfc3339(f.get("createdTime")),
-                    int(f.get("size", 0)),
-                )
-            )
-        return spark.createDataFrame(rows, schema=LISTING_SCHEMA)
+        """:meth:`listing_rows` as a LISTING_SCHEMA DataFrame, for the
+        same declarative S7/S8 operators as the filesystem catalog."""
+        return to_listing_df(spark, self.listing_rows(folder_id, layer))
 
     def latest_per_entity(
         self, spark: SparkSession, folder_id: str, layer: str

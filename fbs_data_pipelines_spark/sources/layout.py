@@ -33,6 +33,8 @@ from functools import reduce
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from fbs_data_pipelines_spark.functions.cleaning import quote_ident
+
 #: floor on the quantile sketch accuracy used for boundary estimation.
 #: The effective error is half a bucket width (1 / (2 * n_buckets)) —
 #: tight enough that no two adjacent equi-depth boundaries collapse,
@@ -54,7 +56,7 @@ def _value_sql(df: DataFrame, col: str) -> str:
     ``DATATYPE_MISMATCH`` at plan time because Spark rejects
     date→double casts (r17 advisor item, date-column coverage now in
     tests/test_layout.py)."""
-    quoted = "`{}`".format(col.replace("`", "``"))
+    quoted = quote_ident(col)
     dtype = dict(df.dtypes)[col]
     if dtype == "date":
         return f"CAST(DATEDIFF({quoted}, DATE'1970-01-01') AS DOUBLE)"

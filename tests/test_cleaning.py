@@ -88,3 +88,59 @@ def test_fold_accents(spark):
     out = [r.f for r in df.select(fold_accents("v").alias("f")).collect()]
     assert out[0] == "Credito anejo GOMEZ u"
     assert out[1] is None
+
+
+def test_whole_frame_programs_match_the_column_forms(spark):
+    """``empty_to_null_all``, ``nan_to_null_all`` and
+    ``format_dates_for_export`` are parsed SQL; each matches its
+    per-column ``F.when`` / ``F.date_format`` form (kept here as the
+    reference) on schema, nullability included, and on rows — over
+    names with spaces, accents, a dot and a backtick."""
+    import datetime as dt
+
+    from fbs_data_pipelines_spark.functions.dates import format_dates_for_export
+
+    schema = (
+        "`a b` string, `Fecha Acta Aprobación` string, `x.y` double, "
+        "`we``ird` float, `día` date, `t.s` timestamp, `n` int not null"
+    )
+    df = spark.createDataFrame(
+        [
+            ("", "x", float("nan"), float("nan"), dt.date(2020, 2, 1),
+             dt.datetime(2020, 2, 1, 10, 30, 5), 1),
+            (None, "", 1.5, 2.5, None, None, 2),
+            ("v", None, None, None, dt.date(1999, 12, 31),
+             dt.datetime(1999, 12, 31, 23, 59, 59), 3),
+        ],
+        schema,
+    )
+
+    def col(name):
+        return F.col("`" + name.replace("`", "``") + "`")
+
+    def per_column(frame, rewrite):
+        exprs = []
+        for f in frame.schema.fields:
+            c = rewrite(col(f.name), f.dataType.simpleString())
+            exprs.append(col(f.name) if c is None else c.alias(f.name))
+        return frame.select(*exprs)
+
+    def empty_ref(c, t):
+        return F.when(c == "", F.lit(None)).otherwise(c) if t == "string" else None
+
+    def nan_ref(c, t):
+        return F.when(F.isnan(c), F.lit(None)).otherwise(c) if t in ("double", "float") else None
+
+    def dates_ref(c, t):
+        fmt = {"date": "yyyy-MM-dd", "timestamp": "yyyy-MM-dd HH:mm:ss"}.get(t)
+        return F.date_format(c, fmt) if fmt else None
+
+    for fn, ref in [
+        (empty_to_null_all, empty_ref),
+        (nan_to_null_all, nan_ref),
+        (format_dates_for_export, dates_ref),
+    ]:
+        got, want = fn(df), per_column(df, ref)
+        assert got.schema == want.schema, fn.__name__
+        # repr compares NaN cells as equal
+        assert repr(got.collect()) == repr(want.collect()), fn.__name__

@@ -4,6 +4,7 @@ the guarded export payload."""
 
 import datetime as dt
 import os
+import time
 
 import pytest
 from pyspark.sql import functions as F
@@ -12,10 +13,13 @@ from fbs_data_pipelines_spark.sinks.writers import export_payload, normalize_for
 from fbs_data_pipelines_spark.sources.catalog import (
     entity_from_filename,
     latest_files,
+    layer_rows,
     list_layer,
+    newest_rows,
     read_table,
     save_table,
     table_list,
+    to_listing_df,
 )
 from fbs_data_pipelines_spark.sources.csv import dedup_headers, read_dialected_csv
 from fbs_data_pipelines_spark.sources.rows import (
@@ -101,6 +105,65 @@ def test_listing_and_latest(spark, tmp_path):
         "creditos": "20240201_creditos.csv",
         "radicados": "20240115_radicados.csv",
     }
+
+    # created_time is the mtime instant whatever the Python process's
+    # zone: read back through the session (UTC) render, and as the
+    # driver-side naive-UTC rows
+    utc = {
+        "20240101_creditos.csv": dt.datetime(2023, 11, 14, 22, 13, 21),
+        "20240201_creditos.csv": dt.datetime(2023, 11, 14, 22, 13, 22),
+        "20240115_radicados.csv": dt.datetime(2023, 11, 14, 22, 13, 23),
+    }
+    want = {n: t.strftime("%Y-%m-%d %H:%M:%S") for n, t in utc.items()}
+    old_tz = os.environ.get("TZ")
+    try:
+        for tz in ("UTC", "Asia/Kathmandu", "America/Bogota"):
+            os.environ["TZ"] = tz
+            time.tzset()
+            rendered = list_layer(spark, str(tmp_path), "raw").select(
+                "name", F.date_format("created_time", "yyyy-MM-dd HH:mm:ss")
+            )
+            assert dict(map(tuple, rendered.collect())) == want, tz
+            rows = layer_rows(str(tmp_path), "raw")
+            assert {r.name: r.created_time for r in rows} == utc, tz
+    finally:
+        if old_tz is None:
+            os.environ.pop("TZ", None)
+        else:
+            os.environ["TZ"] = old_tz
+        time.tzset()
+
+
+def test_newest_snapshot_tie_rule_is_shared(spark, monkeypatch):
+    """The driver-side pick, the DataFrame operator and the Drive
+    DataSource's ``latest_only`` choose the same file per entity on
+    equal times, a null time and a single file."""
+    from fbs_data_pipelines_spark.sources import drive_datasource
+    from fbs_data_pipelines_spark.sources.gdrive import CSV_MIME, listing_row
+
+    files = [
+        # equal created_time: the larger name wins, whatever comes first
+        {"id": "t1", "name": "20240101_tie.csv", "createdTime": "2024-03-01T10:00:00.000Z"},
+        {"id": "t2", "name": "20240102_tie.csv", "createdTime": "2024-03-01T10:00:00.000Z"},
+        # a null created_time loses, whatever its name
+        {"id": "n1", "name": "20240909_nul.csv"},
+        {"id": "n2", "name": "20240101_nul.csv", "createdTime": "2024-01-01T00:00:00.000Z"},
+        # a single file wins, even with a null created_time
+        {"id": "s1", "name": "20240101_one.csv"},
+    ]
+    want = {"tie": "t2", "nul": "n2", "one": "s1"}
+    rows = [listing_row(f, "raw") for f in files]
+    assert {r.entity: r.path for r in newest_rows(rows)} == want
+    window = latest_files(to_listing_df(spark, rows)).collect()
+    assert {r.entity: r.path for r in window} == want
+
+    class Transport:
+        def list_files(self, parent_id=None, name=None, mime_type=None):
+            return [dict(f, mimeType=CSV_MIME) for f in files]
+
+    monkeypatch.setattr(drive_datasource, "_build_transport", lambda options: Transport())
+    picked = drive_datasource._select_files({"latest_only": "true"})
+    assert {entity_from_filename(f["name"]): f["id"] for f in picked} == want
 
 
 def test_table_staging_roundtrip(spark):
