@@ -966,19 +966,16 @@ def q_sessionize(spark, sf_dir):
 
 
 def q_first_seen(spark, sf_dir):
-    """Driver-gated batch twin of streaming/stateful.streaming_first_seen
-    (whose transformWithStateInPandas runtime is protobuf-gated in this
-    sandbox — the admission SEMANTICS get driver evidence here):
-    exactly-once-per-key admission across a whole stream. The events
+    """Exactly-once-per-key admission across a whole stream. The events
     log is replayed as three ingest batches in arrival order
     (= event_id); each batch admits its first arrival per key
-    (first_seen_batch), anti-joins the carried seen-key state exactly
-    like the operator's ValueState probe, then extends the state —
-    so both in-batch duplicates and cross-batch re-arrivals are
-    dropped. The final admitted set is the stream's: first event per
-    user_id in arrival order. Scale: per-batch key-partitioned window
-    + anti-join against a keys-only state table (16 B/key)."""
-    from fbs_data_pipelines_spark.streaming.stateful import first_seen_batch
+    (first_seen_batch), anti-joins the carried seen-key state, then
+    extends the state — so both in-batch duplicates and cross-batch
+    re-arrivals are dropped. The final admitted set is the stream's:
+    first event per user_id in arrival order. Scale: per-batch
+    key-partitioned window + anti-join against a keys-only state table
+    (16 B/key)."""
+    from fbs_data_pipelines_spark.operators.dedup import first_seen_batch
 
     e = _t(spark, sf_dir, "events")
     hi = (e.agg(F.max("event_id")).collect()[0][0] or 0) + 1
@@ -1329,7 +1326,7 @@ def q_multimodal_features(spark, sf_dir):
         "doc_id", F.encode(F.col("text"), "UTF-8").alias("content")
     )
     media = attach_media_meta(media, "content", "image", "png")
-    return extract_image_features(media, "doc_id", "content", fake=True)
+    return extract_image_features(media, "doc_id", "content")
 
 
 def q_dedup_clusters(spark, sf_dir):
@@ -2049,83 +2046,6 @@ def q_decontaminate(spark, sf_dir):
     return decontaminate(
         d.filter(~is_eval), d.filter(is_eval), "doc_id", "text", n=3
     )
-
-
-def q_tws_first_seen(spark, sf_dir):
-    """The REAL transformWithStateInPandas first-seen admission under
-    the oracle gate (streaming/stateful.streaming_first_seen): typed
-    per-key ValueState in RocksDB, spoken over the protobuf state
-    protocol (vendored minimal runtime where no protobuf wheel
-    exists). The events log is replayed as TWO separate availableNow
-    query RUNS over one checkpoint — the second run resumes from a
-    cold restart, so the oracle verifies cross-run state recovery,
-    not just micro-batch carryover.
-
-    Each half is pre-reduced to its per-key first arrival by event_id
-    (first_seen_batch) so the admitted row per key is deterministic;
-    the streaming operator's job — dropping cross-batch re-arrivals
-    via state — is exactly what the oracle checks: the final admitted
-    set must equal first-event-per-user over the WHOLE log. Scale:
-    keyed state shuffle per batch, state linear in distinct keys."""
-    import os
-
-    base = _scratch_dir("q_tws_first_seen", sf_dir)
-    in_dir = os.path.join(base, "in")
-    out_dir = os.path.join(base, "out")
-    ckpt = os.path.join(base, "ckpt")
-    os.makedirs(in_dir)
-
-    e = _t(spark, sf_dir, "events").select("user_id", "event_id", "event_type")
-    hi = (e.agg(F.max("event_id")).collect()[0][0] or 0) + 1
-
-    # a stateful query's state partition count is pinned by
-    # spark.sql.shuffle.partitions at FIRST run and recorded in the
-    # checkpoint; a vanilla session's 200 is oversized for this state
-    # (150 keys at sf0.01). Scope it down for the two runs, restore
-    # after — correctness is partition-count-independent, the compare
-    # is order-insensitive, and the checkpoint is recreated per call.
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "16")
-    try:
-        _run_tws_batches(spark, e, hi, in_dir, out_dir, ckpt)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-
-    return spark.read.parquet(out_dir).select(
-        "user_id", "event_id", "event_type"
-    )
-
-
-def _run_tws_batches(spark, e, hi, in_dir, out_dir, ckpt):
-    import os
-
-    from fbs_data_pipelines_spark.streaming.stateful import (
-        first_seen_batch,
-        streaming_first_seen,
-    )
-
-    for i, (lo, up) in enumerate([(0, hi // 2), (hi // 2, hi)]):
-        half = e.filter((F.col("event_id") >= lo) & (F.col("event_id") < up))
-        # deterministic in-batch representative; cross-batch dedup is
-        # the state's job
-        first_seen_batch(half, "user_id", "event_id").write.mode(
-            "overwrite"
-        ).parquet(os.path.join(in_dir, f"batch{i}"))
-        stream = (
-            spark.readStream.schema(
-                "user_id long, event_id long, event_type string"
-            ).option("recursiveFileLookup", "true").parquet(in_dir)
-        )
-        q = (
-            streaming_first_seen(stream, "user_id")
-            .writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
 
 
 def q_streaming_merge(spark, sf_dir):
@@ -5437,8 +5357,8 @@ def oracle_sql() -> dict[str, str]:
         FROM numbered GROUP BY user_id, session_seq
     """
 
-    # batch twin of streaming_first_seen: the state-loop replay in the
-    # Spark query reduces to "first event per user in arrival order"
+    # the state-loop replay in the Spark query reduces to "first event
+    # per user in arrival order"
     sql["first_seen"] = """
         SELECT user_id, event_id,
                strftime(ts, '%Y-%m-%d %H:%M:%S') AS ts_s,
@@ -6739,15 +6659,8 @@ def oracle_sql() -> dict[str, str]:
         GROUP BY o_orderstatus
     """
 
-    # the real transformWithStateInPandas admission: final admitted
-    # set == first event per user over the whole log (state carries
-    # across a cold query restart; the oracle checks the union)
     # tws_first_seen: CONSOLIDATED into `first_seen` r13 (SURVEY §8
-    # rule 4) — same exactly-once-per-key admission semantics; the
-    # streaming-vs-batch equivalence is pinned in
-    # tests/test_consolidated_keys.py and the
-    # transformWithStateInPandas runtime keeps its own suite
-    # (tests/test_stateful_tws.py).
+    # rule 4) — same exactly-once-per-key admission semantics.
 
     # weighted bottom-k quantile sketch mirrored sample-for-sample:
     # identical md5 hash ranks over DISTINCT values -> identical

@@ -231,16 +231,6 @@ def doc_fingerprint(c: Column | str, length: int = 16) -> Column:
     return F.substring(F.md5(normalize_text(c)), 1, length)
 
 
-def md5_hash_hex(c: Column | str, salt: int | None = None, length: int = 8) -> Column:
-    """Portable hash primitive: first ``length`` hex chars of
-    md5(salt:value). Lexicographic order == numeric order (fixed
-    width), so ``min()`` over these is a valid MinHash component."""
-    col = _col(c)
-    if salt is not None:
-        col = F.concat(F.lit(f"{salt}:"), col)
-    return F.substring(F.md5(col), 1, length)
-
-
 def rolling_fingerprint(
     c: Column | str, base: int = 31, mod: int = 2_147_483_647
 ) -> Column:

@@ -119,18 +119,6 @@ def cosine_similarity(a: Column | str, b: Column | str) -> Column:
     return F.when(denom == 0, F.lit(None)).otherwise(dot_product(a, b) / denom)
 
 
-def sign_bits(a: Column | str, planes: Column) -> Column:
-    """Random-hyperplane LSH signature: for each plane p (array of
-    arrays), bit = 1 if a·p ≥ 0. Returns array<int>. ``planes`` must
-    be a deterministic literal array so executors agree."""
-    vec = _as_double(_col(a))
-    def bit(p: Column) -> Column:
-        prod = F.zip_with(vec, p, lambda x, y: x * y)
-        s = F.aggregate(prod, F.lit(0.0), lambda acc, v: acc + v)
-        return F.when(s >= 0, F.lit(1)).otherwise(F.lit(0))
-    return F.transform(planes, bit)
-
-
 def standardize_embeddings(
     df,
     id_col: str = "vec_id",

@@ -51,13 +51,6 @@ def change_predicate(target_cols: Sequence[str], suffix: str = "_modeled") -> Co
     return reduce(or_, tests)
 
 
-def unchanged_predicate(target_cols: Sequence[str], suffix: str = "_b") -> Column:
-    """AND-fold of not-changed tests (P5, log_handler.py:102-104):
-    ``~(a != a_b)`` per column — Kleene: null comparison ⇒ unchanged."""
-    tests = [~(F.col(c) != F.col(f"{c}{suffix}")) for c in target_cols]
-    return reduce(lambda x, y: x & y, tests)
-
-
 def authlog_table(
     df_raw: DataFrame,
     df_modeled: DataFrame,

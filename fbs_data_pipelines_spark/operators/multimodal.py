@@ -1,19 +1,15 @@
 """Multimodal (image/audio/video) column plumbing.
 
 Design: media lives as an opaque ``binary`` column plus a typed
-metadata struct; transforms run as Arrow-batched pandas functions over
-``mapInPandas`` so each task decodes a batch at a time without ever
-materializing the corpus on the driver.
+metadata struct; feature extraction runs as an Arrow-batched pandas
+function over ``mapInPandas`` so each task handles a batch at a time
+without ever materializing the corpus on the driver.
 
-Decode kernels: ``decode_png``, ``decode_bmp``, ``decode_gif``,
-``decode_ppm`` and ``decode_wav`` are REAL pure-stdlib decoders
-(struct + zlib + a self-contained GIF-LZW inflater — work with no
-media libraries installed); ``decode_media`` dispatches between them
-on magic bytes, with formats that need external codecs (JPEG, MP4)
-routed to the deterministic sha256-derived fake decode, which also
-keeps the whole pipeline oracle-checkable. A production deployment
-plugs PIL/ffmpeg into exactly that dispatch seam; schema,
-partitioning, UDF signature, and batch shape are identical.
+The decode is a deterministic sha256-derived stub: it keeps the whole
+pipeline oracle-checkable (DuckDB reproduces every output column from
+the digest). A production deployment plugs PIL/ffmpeg into the
+kernel; schema, partitioning, UDF signature and batch shape are
+identical.
 """
 
 from __future__ import annotations
@@ -66,764 +62,28 @@ def attach_media_meta(
     return df.withColumn(f"{binary_col}_meta", meta)
 
 
-def _fake_decode(payload: bytes) -> tuple[int, int, float]:
-    """Deterministic fake decode: derive (width, height, mean_luma)
-    from the content hash. Stands in for decodes of formats that need
-    external codecs (JPEG/video), and keeps the whole pipeline
-    oracle-checkable."""
-    h = hashlib.sha256(payload).digest()
-    width = 16 + h[0] % 64
-    height = 16 + h[1] % 64
-    mean_luma = round(h[2] / 255.0, 6)
-    return width, height, mean_luma
-
-
-def _png_pixels(payload: bytes) -> tuple[int, int, int, bytearray]:
-    """PNG → (width, height, channels, unfiltered pixel bytes): the
-    pixel-plane core shared by ``decode_png`` (luma features) and the
-    resize kernel. Pure stdlib (struct + zlib), filters 0-4."""
-    import struct
-    import zlib
-
-    if payload[:8] != b"\x89PNG\r\n\x1a\n":
-        raise ValueError("not a PNG payload")
-    pos = 8
-    idat = b""
-    width = height = None
-    bit_depth = color_type = None
-    while pos + 8 <= len(payload):
-        length, ctype = struct.unpack(">I4s", payload[pos : pos + 8])
-        data = payload[pos + 8 : pos + 8 + length]
-        if ctype == b"IHDR":
-            width, height, bit_depth, color_type, _comp, _filt, interlace = (
-                struct.unpack(">IIBBBBB", data)
-            )
-            if bit_depth != 8 or interlace != 0 or color_type not in (0, 2, 4, 6):
-                raise NotImplementedError(
-                    "only 8-bit non-interlaced grey/GA/RGB/RGBA PNGs"
-                )
-        elif ctype == b"IDAT":
-            idat += data
-        elif ctype == b"IEND":
-            break
-        pos += 12 + length
-    if width is None or not idat:
-        raise ValueError("truncated PNG")
-    raw = zlib.decompress(idat)
-    channels = {0: 1, 2: 3, 4: 2, 6: 4}[color_type]
-    stride = width * channels
-    prev = bytearray(stride)
-    out = bytearray()
-    i = 0
-    for _y in range(height):
-        f = raw[i]
-        i += 1
-        line = bytearray(raw[i : i + stride])
-        i += stride
-        if f == 1:  # Sub
-            for x in range(channels, stride):
-                line[x] = (line[x] + line[x - channels]) & 0xFF
-        elif f == 2:  # Up
-            for x in range(stride):
-                line[x] = (line[x] + prev[x]) & 0xFF
-        elif f == 3:  # Average
-            for x in range(stride):
-                a = line[x - channels] if x >= channels else 0
-                line[x] = (line[x] + (a + prev[x]) // 2) & 0xFF
-        elif f == 4:  # Paeth
-            for x in range(stride):
-                a = line[x - channels] if x >= channels else 0
-                b = prev[x]
-                c = prev[x - channels] if x >= channels else 0
-                p = a + b - c
-                pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-                pr = a if (pa <= pb and pa <= pc) else (b if pb <= pc else c)
-                line[x] = (line[x] + pr) & 0xFF
-        elif f != 0:
-            raise ValueError(f"bad PNG filter {f}")
-        out += line
-        prev = line
-    return width, height, channels, out
-
-
-def decode_png(payload: bytes) -> tuple[int, int, float]:
-    """REAL image decode for PNG — pure stdlib (struct + zlib), no
-    PIL/cv2 required: parses IHDR/IDAT, inflates, un-filters each
-    scanline (filters 0-4 per the PNG spec), and returns
-    (width, height, mean_luma) with luma = Rec.601 over the pixels,
-    rounded 6dp. Supports 8-bit greyscale / grey+alpha / RGB / RGBA,
-    non-interlaced — the shapes a training-data pipeline normalizes
-    to anyway. Raises ValueError on non-PNG bytes and
-    NotImplementedError on exotic variants (16-bit, palette,
-    interlaced), which real deployments route to a PIL kernel."""
-    width, height, channels, out = _png_pixels(payload)
-    n = width * height
-    if channels == 1:
-        luma = sum(out) / n
-    elif channels == 2:
-        luma = sum(out[0::2]) / n
-    else:
-        rs = sum(out[0::channels])
-        gs = sum(out[1::channels])
-        bs = sum(out[2::channels])
-        luma = (0.299 * rs + 0.587 * gs + 0.114 * bs) / n
-    return width, height, round(luma / 255.0, 6)
-
-
-def decode_bmp(payload: bytes) -> tuple[int, int, float]:
-    """REAL image decode for BMP — pure stdlib struct: parses the
-    BITMAPFILEHEADER + BITMAPINFOHEADER, walks the (bottom-up or
-    top-down) pixel array, and returns (width, height, mean_luma)
-    with Rec.601 luma rounded 6dp. Supports uncompressed 24/32-bit
-    BGR(A) and 8-bit greyscale-palette — the common uncompressed
-    shapes. Raises ValueError on non-BMP bytes, NotImplementedError
-    on compressed/exotic variants (RLE, 16-bit, core headers)."""
-    import struct
-
-    if payload[:2] != b"BM":
-        raise ValueError("not a BMP payload")
-    if len(payload) < 54:
-        raise ValueError("truncated BMP")
-    pixel_off = struct.unpack("<I", payload[10:14])[0]
-    hdr_size = struct.unpack("<I", payload[14:18])[0]
-    if hdr_size < 40:
-        raise NotImplementedError("BITMAPCOREHEADER BMPs unsupported")
-    width, height_raw = struct.unpack("<ii", payload[18:26])
-    planes, bpp = struct.unpack("<HH", payload[26:30])
-    compression = struct.unpack("<I", payload[30:34])[0]
-    if compression != 0 or bpp not in (8, 24, 32):
-        raise NotImplementedError(f"BMP compression={compression} bpp={bpp}")
-    height = abs(height_raw)
-    top_down = height_raw < 0
-    if width <= 0 or height == 0:
-        raise ValueError("bad BMP dimensions")
-    channels = bpp // 8
-    stride = (width * channels + 3) & ~3  # rows pad to 4 bytes
-    if len(payload) < pixel_off + stride * height:
-        raise ValueError("truncated BMP pixel array")
-
-    palette = None
-    if bpp == 8:
-        # palette sits between header and pixels: BGRX quads
-        pal_off = 14 + hdr_size
-        n_colors = struct.unpack("<I", payload[46:50])[0] or 256
-        raw_pal = payload[pal_off : pal_off + 4 * n_colors]
-        palette = [
-            0.299 * raw_pal[i + 2] + 0.587 * raw_pal[i + 1] + 0.114 * raw_pal[i]
-            for i in range(0, len(raw_pal), 4)
-        ]
-
-    total = 0.0
-    for row in range(height):
-        y = row if top_down else height - 1 - row
-        base = pixel_off + y * stride
-        line = payload[base : base + width * channels]
-        if bpp == 8:
-            total += sum(palette[v] for v in line)
-        else:
-            # BGR(A) order
-            bs = sum(line[0::channels])
-            gs = sum(line[1::channels])
-            rs = sum(line[2::channels])
-            total += 0.299 * rs + 0.587 * gs + 0.114 * bs
-    luma = total / (width * height)
-    return width, height, round(luma / 255.0, 6)
-
-
-def _gif_lzw(min_code_size: int, data: bytes) -> bytes:
-    """GIF-variant LZW decode (LSB-first bitstream, CLEAR/END codes,
-    code width growing to 12 bits) — the one compression every GIF
-    carries, per the GIF89a spec appendix."""
-    clear = 1 << min_code_size
-    end = clear + 1
-    base = {i: bytes([i]) for i in range(clear)}
-    table = dict(base)
-    code_size = min_code_size + 1
-    next_code = end + 1
-    out = bytearray()
-    prev: bytes | None = None
-    acc = nbits = 0
-    for byte in data:
-        acc |= byte << nbits
-        nbits += 8
-        while nbits >= code_size:
-            code = acc & ((1 << code_size) - 1)
-            acc >>= code_size
-            nbits -= code_size
-            if code == clear:
-                table = dict(base)
-                code_size = min_code_size + 1
-                next_code = end + 1
-                prev = None
-                continue
-            if code == end:
-                return bytes(out)
-            if code in table:
-                entry = table[code]
-            elif code == next_code and prev is not None:
-                entry = prev + prev[:1]  # the KwKwK special case
-            else:
-                raise ValueError("corrupt GIF LZW stream")
-            out += entry
-            if prev is not None and next_code < 4096:
-                table[next_code] = prev + entry[:1]
-                next_code += 1
-                if next_code == (1 << code_size) and code_size < 12:
-                    code_size += 1
-            prev = entry
-    return bytes(out)
-
-
-def decode_gif(payload: bytes) -> tuple[int, int, float]:
-    """REAL image decode for GIF — pure Python LZW (no external
-    codec): parses the logical screen descriptor and color tables,
-    skips extension blocks, inflates the FIRST frame's LZW-compressed
-    index stream, and returns (width, height, mean_luma) with Rec.601
-    luma over the palette-mapped pixels, rounded 6dp. Raises
-    ValueError on non-GIF bytes, NotImplementedError on interlaced
-    frames (the progressive-render variant a PIL kernel would cover).
-    """
-    import struct
-
-    if payload[:6] not in (b"GIF87a", b"GIF89a"):
-        raise ValueError("not a GIF payload")
-    scr_w, scr_h, packed, _bg, _aspect = struct.unpack(
-        "<HHBBB", payload[6:13]
-    )
-    pos = 13
-    gct = None
-    if packed & 0x80:
-        n = 3 * (2 << (packed & 0x07))
-        gct = payload[pos : pos + n]
-        pos += n
-    while pos < len(payload):
-        b = payload[pos]
-        if b == 0x21:  # extension: label + length-prefixed sub-blocks
-            pos += 2
-            while payload[pos] != 0:
-                pos += 1 + payload[pos]
-            pos += 1
-        elif b == 0x2C:  # image descriptor — decode this frame
-            _left, _top, w, h, ipacked = struct.unpack(
-                "<HHHHB", payload[pos + 1 : pos + 10]
-            )
-            pos += 10
-            pal = gct
-            if ipacked & 0x80:
-                n = 3 * (2 << (ipacked & 0x07))
-                pal = payload[pos : pos + n]
-                pos += n
-            if ipacked & 0x40:
-                raise NotImplementedError("interlaced GIF frames")
-            if pal is None:
-                raise ValueError("GIF frame without a color table")
-            min_code = payload[pos]
-            pos += 1
-            lzw = bytearray()
-            while payload[pos] != 0:
-                ln = payload[pos]
-                lzw += payload[pos + 1 : pos + 1 + ln]
-                pos += 1 + ln
-            idx = _gif_lzw(min_code, bytes(lzw))[: w * h]
-            if len(idx) < w * h:
-                raise ValueError("truncated GIF pixel data")
-            luma_pal = [
-                0.299 * pal[3 * i] + 0.587 * pal[3 * i + 1] + 0.114 * pal[3 * i + 2]
-                for i in range(len(pal) // 3)
-            ]
-            luma = sum(luma_pal[v] for v in idx) / (w * h)
-            return scr_w or w, scr_h or h, round(luma / 255.0, 6)
-        elif b == 0x3B:  # trailer
-            break
-        else:
-            raise ValueError(f"unknown GIF block 0x{b:02x}")
-    raise ValueError("GIF contains no image frame")
-
-
-def decode_ppm(payload: bytes) -> tuple[int, int, float]:
-    """REAL image decode for binary PPM/PGM (netpbm P6/P5) — the
-    plainest raster format there is: an ASCII header (magic, width,
-    height, maxval, with '#' comments) followed by the raw raster.
-    Returns (width, height, mean_luma): PGM averages the grey plane,
-    PPM applies Rec.601, both normalized by maxval and rounded 6dp.
-    Raises ValueError on other netpbm variants (ASCII P1-P3) and
-    maxval > 255 (16-bit rasters)."""
-    if payload[:2] not in (b"P5", b"P6"):
-        raise ValueError("not a binary PGM/PPM payload")
-    # header tokens: magic, width, height, maxval; '#' starts a comment
-    tokens: list[bytes] = []
-    pos = 2
-    while len(tokens) < 3 and pos < len(payload):
-        c = payload[pos : pos + 1]
-        if c == b"#":
-            while pos < len(payload) and payload[pos] not in (10, 13):
-                pos += 1
-        elif c.isspace():
-            pos += 1
-        else:
-            start = pos
-            while pos < len(payload) and not payload[pos : pos + 1].isspace():
-                pos += 1
-            tokens.append(payload[start:pos])
-    pos += 1  # the single whitespace after maxval
-    if len(tokens) < 3:
-        raise ValueError("truncated netpbm header")
-    width, height, maxval = (int(t) for t in tokens)
-    if maxval > 255:
-        raise ValueError("16-bit netpbm rasters unsupported")
-    channels = 3 if payload[:2] == b"P6" else 1
-    need = width * height * channels
-    raster = payload[pos : pos + need]
-    if len(raster) < need:
-        raise ValueError("truncated netpbm raster")
-    if channels == 1:
-        luma = sum(raster) / (width * height)
-    else:
-        rs = sum(raster[0::3])
-        gs = sum(raster[1::3])
-        bs = sum(raster[2::3])
-        luma = (0.299 * rs + 0.587 * gs + 0.114 * bs) / (width * height)
-    return width, height, round(luma / maxval, 6)
-
-
-def decode_wav(payload: bytes) -> tuple[int, int, float]:
-    """REAL audio decode for WAV — pure stdlib struct: parses the
-    RIFF/WAVE chunk list (fmt + data), and returns
-    (n_channels, n_frames, mean_abs_amplitude) with amplitude
-    normalized to [0, 1] and rounded 6dp — the audio analogue of the
-    image kernels' (width, height, mean_luma) triple, so one dispatch
-    kernel can emit a uniform feature row. Supports PCM 8/16-bit.
-    Raises ValueError on non-WAV bytes, NotImplementedError on
-    non-PCM encodings (float32, ADPCM, …)."""
-    import struct
-
-    if payload[:4] != b"RIFF" or payload[8:12] != b"WAVE":
-        raise ValueError("not a WAV payload")
-    pos = 12
-    fmt = None
-    data = None
-    while pos + 8 <= len(payload):
-        cid, clen = struct.unpack("<4sI", payload[pos : pos + 8])
-        body = payload[pos + 8 : pos + 8 + clen]
-        if cid == b"fmt ":
-            fmt = body
-        elif cid == b"data":
-            data = body
-        pos += 8 + clen + (clen & 1)  # chunks are word-aligned
-    if fmt is None or data is None:
-        raise ValueError("truncated WAV (missing fmt/data chunk)")
-    audio_format, n_channels, _rate = struct.unpack("<HHI", fmt[:8])
-    bits = struct.unpack("<H", fmt[14:16])[0]
-    if audio_format != 1 or bits not in (8, 16):
-        raise NotImplementedError(f"WAV format={audio_format} bits={bits}")
-    bytes_per = bits // 8
-    n_frames = len(data) // (bytes_per * n_channels)
-    n_samples = n_frames * n_channels
-    if n_samples == 0:
-        return n_channels, 0, 0.0
-    if bits == 8:
-        # unsigned 8-bit PCM centered at 128
-        total = sum(abs(v - 128) for v in data[: n_samples])
-        level = total / n_samples / 127.0
-    else:
-        vals = struct.unpack(f"<{n_samples}h", data[: n_samples * 2])
-        level = sum(abs(v) for v in vals) / n_samples / 32767.0
-    return n_channels, n_frames, round(level, 6)
-
-
-#: magic-byte table for the dispatch kernel, ordered by specificity
-_MAGIC = (
-    (b"\x89PNG\r\n\x1a\n", "image", "png"),
-    (b"GIF87a", "image", "gif"),
-    (b"GIF89a", "image", "gif"),
-    (b"P5", "image", "pgm"),
-    (b"P6", "image", "ppm"),
-    (b"BM", "image", "bmp"),
-    (b"RIFF", "audio", "wav"),  # refined by the WAVE tag in sniff
-    (b"ID3", "audio", "mp3"),   # ID3v2-tagged MP3
-    (b"\xff\xd8\xff", "image", "jpeg"),
-    (b"\x00\x00\x00", "video", "mp4"),  # ftyp box length prefix
-)
-
-
-def probe_jpeg_dims(payload: bytes) -> tuple[int, int]:
-    """(width, height) from a JPEG's SOF marker WITHOUT decoding —
-    the marker-segment walk every media pipeline runs first at scale
-    (pixel decode is codec-bound; dimensions are 20 bytes of header
-    arithmetic). Walks the segment chain skipping non-SOF markers by
-    their length fields; any SOF0-SOF15 frame header (except the
-    DHT/DAC/RST family) carries height/width big-endian at offsets
-    3/5 of the segment body. Raises on malformed streams (the
-    dispatch kernel maps that to the '!err' fallback)."""
-    import struct
-
-    if payload[:3] != b"\xff\xd8\xff":
-        raise ValueError("not a JPEG stream")
-    i = 2
-    n = len(payload)
-    while i + 4 <= n:
-        if payload[i] != 0xFF:
-            raise ValueError("lost marker sync")
-        # ITU T.81 B.1.1.2: any number of 0xFF fill bytes may pad a
-        # marker — skip them instead of mis-parsing 0xFF as a marker
-        while i + 1 < n and payload[i + 1] == 0xFF:
-            i += 1
-        marker = payload[i + 1]
-        if marker == 0xD8 or 0xD0 <= marker <= 0xD7 or marker == 0x01:
-            i += 2  # standalone markers carry no length
-            continue
-        (seg_len,) = struct.unpack(">H", payload[i + 2 : i + 4])
-        # SOF0..SOF15 minus DHT(C4)/DAC(CC) — frame headers
-        if 0xC0 <= marker <= 0xCF and marker not in (0xC4, 0xC8, 0xCC):
-            if i + 9 > n:
-                raise ValueError("truncated SOF segment")
-            h, w = struct.unpack(">HH", payload[i + 5 : i + 9])
-            return w, h
-        i += 2 + seg_len
-    raise ValueError("no SOF marker found")
-
-
-def probe_jpeg_exif_orientation(payload: bytes) -> int | None:
-    """EXIF orientation (1-8) from a JPEG's APP1 segment, or None when
-    the image carries no EXIF/orientation tag — the one EXIF field a
-    training pipeline must read before any resize (a portrait photo
-    stored rotated ships width/height swapped). Same marker-segment
-    walk as ``probe_jpeg_dims``, then a minimal TIFF IFD0 scan
-    (byte-order aware) for tag 0x0112. Pure stdlib byte arithmetic;
-    malformed EXIF returns None rather than failing the payload (the
-    image itself may still be perfectly decodable)."""
-    import struct
-
-    if payload[:3] != b"\xff\xd8\xff":
-        raise ValueError("not a JPEG stream")
-    i = 2
-    n = len(payload)
-    while i + 4 <= n:
-        if payload[i] != 0xFF:
-            return None
-        while i + 1 < n and payload[i + 1] == 0xFF:
-            i += 1
-        marker = payload[i + 1]
-        if marker == 0xD8 or 0xD0 <= marker <= 0xD7 or marker == 0x01:
-            i += 2
-            continue
-        if marker == 0xDA:  # start of scan: no EXIF past this point
-            return None
-        (seg_len,) = struct.unpack(">H", payload[i + 2 : i + 4])
-        if marker == 0xE1 and payload[i + 4 : i + 10] == b"Exif\x00\x00":
-            t = i + 10  # TIFF header origin (offsets are relative to it)
-            try:
-                order = payload[t : t + 2]
-                if order == b"II":
-                    u16, u32 = "<H", "<I"
-                elif order == b"MM":
-                    u16, u32 = ">H", ">I"
-                else:
-                    return None
-                (ifd_off,) = struct.unpack(u32, payload[t + 4 : t + 8])
-                (n_entries,) = struct.unpack(
-                    u16, payload[t + ifd_off : t + ifd_off + 2]
-                )
-                for k in range(n_entries):
-                    e = t + ifd_off + 2 + 12 * k
-                    (tag,) = struct.unpack(u16, payload[e : e + 2])
-                    if tag == 0x0112:
-                        (val,) = struct.unpack(u16, payload[e + 8 : e + 10])
-                        return val if 1 <= val <= 8 else None
-            except (struct.error, IndexError):
-                return None
-            return None
-        i += 2 + seg_len
-    return None
-
-
-#: MPEG bitrate (kbps) and sample-rate tables, Layer III only — the
-#: header fields a CBR duration estimate needs. Index 0 is the "free"
-#: bitrate (not estimable), 15 is forbidden.
-_MP3_KBPS = {
-    3: (None, 32, 40, 48, 56, 64, 80, 96, 112, 128, 160, 192, 224, 256, 320),
-    2: (None, 8, 16, 24, 32, 40, 48, 56, 64, 80, 96, 112, 128, 144, 160),
-    0: (None, 8, 16, 24, 32, 40, 48, 56, 64, 80, 96, 112, 128, 144, 160),
-}
-_MP3_HZ = {
-    3: (44100, 48000, 32000),  # MPEG-1
-    2: (22050, 24000, 16000),  # MPEG-2
-    0: (11025, 12000, 8000),   # MPEG-2.5
-}
-
-
-def probe_mp3_meta(payload: bytes) -> tuple[int, int, int, float]:
-    """(n_channels, sample_rate_hz, bitrate_kbps, duration_seconds)
-    from an MP3's first frame header — the stdlib byte walk an audio
-    pipeline runs before any codec: skip the ID3v2 tag (syncsafe
-    length), find the 11-bit frame sync, decode the version/layer/
-    bitrate/samplerate/mode fields, and estimate duration as
-    audio_bytes × 8 / bitrate (exact for CBR, the dominant case;
-    VBR would need a Xing/VBRI header — out of header-walk scope and
-    documented as the estimate's error source). Raises ValueError on
-    non-MP3 bytes, NotImplementedError for non-Layer-III streams and
-    the free-bitrate mode."""
-    i = 0
-    n = len(payload)
-    if payload[:3] == b"ID3" and n >= 10:
-        # ID3v2 length: 4 syncsafe bytes (7 bits each)
-        size = 0
-        for b in payload[6:10]:
-            size = (size << 7) | (b & 0x7F)
-        i = 10 + size
-    # scan to the frame sync (some encoders pad between tag and audio)
-    while i + 4 <= n and not (
-        payload[i] == 0xFF and (payload[i + 1] & 0xE0) == 0xE0
-    ):
-        i += 1
-    if i + 4 > n:
-        raise ValueError("no MP3 frame sync found")
-    b1, b2, b3 = payload[i + 1], payload[i + 2], payload[i + 3]
-    version = (b1 >> 3) & 0x03  # 3=MPEG1, 2=MPEG2, 0=MPEG2.5
-    layer = (b1 >> 1) & 0x03    # 1=Layer III
-    if version == 1 or layer != 1:
-        raise NotImplementedError(
-            f"not a Layer III stream (version={version} layer={layer})"
-        )
-    kbps = _MP3_KBPS[version][(b2 >> 4) & 0x0F]
-    if kbps is None:
-        raise NotImplementedError("free-bitrate MP3 (no CBR duration)")
-    sr_idx = (b2 >> 2) & 0x03
-    if sr_idx == 3:
-        raise ValueError("forbidden sample-rate index")
-    sample_rate = _MP3_HZ[version][sr_idx]
-    channels = 1 if ((b3 >> 6) & 0x03) == 3 else 2
-    duration_s = (n - i) * 8.0 / (kbps * 1000.0)
-    return channels, sample_rate, kbps, round(duration_s, 6)
-
-
-def probe_mp4_meta(payload: bytes) -> tuple[int, int, float]:
-    """(width, height, duration_seconds) from an ISO-BMFF (MP4) box
-    walk — the metadata a video pipeline extracts long before any
-    codec runs. Walks top-level boxes to ``moov``, reads
-    ``mvhd`` (timescale + duration) and the first ``trak``'s
-    ``tkhd`` (16.16 fixed-point presentation width/height). Raises
-    on malformed streams (dispatch maps that to '!err')."""
-    import struct
-
-    def boxes(buf, start, end):
-        i = start
-        while i + 8 <= end:
-            (size,) = struct.unpack(">I", buf[i : i + 4])
-            btype = buf[i + 4 : i + 8]
-            if size == 1:  # 64-bit largesize
-                (size,) = struct.unpack(">Q", buf[i + 8 : i + 16])
-                body = i + 16
-            elif size == 0:  # box extends to end
-                size = end - i
-                body = i + 8
-            else:
-                body = i + 8
-            if size < 8 or i + size > end:
-                raise ValueError("malformed box size")
-            yield btype, body, i + size
-            i += size
-
-    moov = None
-    for btype, body, stop in boxes(payload, 0, len(payload)):
-        if btype == b"moov":
-            moov = (body, stop)
-            break
-    if moov is None:
-        raise ValueError("no moov box")
-    duration_s, width, height = None, None, None
-    for btype, body, stop in boxes(payload, *moov):
-        if btype == b"mvhd":
-            version = payload[body]
-            if version == 1:
-                (tscale,) = struct.unpack(">I", payload[body + 20 : body + 24])
-                (dur,) = struct.unpack(">Q", payload[body + 24 : body + 32])
-            else:
-                (tscale,) = struct.unpack(">I", payload[body + 12 : body + 16])
-                (dur,) = struct.unpack(">I", payload[body + 16 : body + 20])
-            duration_s = dur / tscale if tscale else 0.0
-        elif btype == b"trak" and not width:
-            # audio traks carry a legal all-zero tkhd size — keep
-            # walking until a trak with nonzero presentation size
-            for t2, b2, s2 in boxes(payload, body, stop):
-                if t2 == b"tkhd":
-                    w_fp, h_fp = struct.unpack(">II", payload[s2 - 8 : s2])
-                    if w_fp >> 16:
-                        width, height = w_fp >> 16, h_fp >> 16
-    if duration_s is None:
-        raise ValueError("no mvhd box")
-    return width or 0, height or 0, round(duration_s, 6)
-
-
-def sniff_format(payload: bytes) -> tuple[str, str]:
-    """(media_type, format) from magic bytes; ('unknown','bin') when
-    nothing matches. RIFF is only 'wav' when the WAVE form tag
-    follows (AVI shares the container)."""
-    for magic, mtype, fmt in _MAGIC:
-        if payload[: len(magic)] == magic:
-            if fmt == "wav" and payload[8:12] != b"WAVE":
-                return ("video", "avi") if payload[8:12] == b"AVI " else (
-                    "unknown", "riff"
-                )
-            return mtype, fmt
-    # tagless MP3: 11-bit frame sync (0xFFE0 mask) — checked AFTER the
-    # table so the more specific \xff\xd8\xff JPEG prefix wins
-    if len(payload) >= 2 and payload[0] == 0xFF and (payload[1] & 0xE0) == 0xE0:
-        return "audio", "mp3"
-    return "unknown", "bin"
-
-
-def decode_media(payload: bytes) -> tuple[str, str, int, int, float]:
-    """One decode entry point for mixed-format corpora: dispatch on
-    magic bytes to the REAL stdlib kernels (PNG, BMP, WAV) and to the
-    deterministic stub for codec-bound formats (JPEG, MP4, unknown —
-    the seam where a production deployment plugs PIL/ffmpeg; see
-    module docstring). Returns (media_type, format, dim_x, dim_y,
-    level): images use (width, height, mean_luma), audio uses
-    (n_channels, n_frames, mean_abs_amplitude). A payload whose real
-    decode fails mid-stream (truncated/exotic) falls back to the stub
-    with format suffixed '!err' so corrupt media is countable
-    downstream instead of killing the task."""
-    mtype, fmt = sniff_format(payload)
-    try:
-        if fmt == "png":
-            w, h, v = decode_png(payload)
-        elif fmt == "gif":
-            w, h, v = decode_gif(payload)
-        elif fmt in ("ppm", "pgm"):
-            w, h, v = decode_ppm(payload)
-        elif fmt == "bmp":
-            w, h, v = decode_bmp(payload)
-        elif fmt == "wav":
-            w, h, v = decode_wav(payload)
-        elif fmt == "jpeg":
-            # pixel decode is codec-bound (the PIL seam), but the
-            # dimensions are a pure header walk — real metadata, stub
-            # luma
-            w, h = probe_jpeg_dims(payload)
-            v = _fake_decode(payload)[2]
-        elif fmt == "mp3":
-            # real header metadata (channels, total-sample estimate);
-            # sample decode stays the codec seam, same split as JPEG
-            ch, sr, _kbps, dur = probe_mp3_meta(payload)
-            w, h, v = ch, int(dur * sr), _fake_decode(payload)[2]
-        elif fmt == "mp4":
-            # same split for video: real (width, height, duration)
-            # from the box walk; frame decode stays the ffmpeg seam
-            w, h, v = probe_mp4_meta(payload)
-        else:
-            w, h, v = _fake_decode(payload)
-    except Exception:
-        # corrupt/truncated media breaks in arbitrary ways
-        # (struct.error, zlib.error, index math) — never the task
-        w, h, v = _fake_decode(payload)
-        fmt = fmt + "!err"
-    return mtype, fmt, w, h, v
-
-
-MEDIA_FEATURE_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("media_type", T.StringType()),
-        T.StructField("format", T.StringType()),
-        T.StructField("n_bytes", T.LongType()),
-        T.StructField("content_sha", T.StringType()),
-        T.StructField("dim_x", T.IntegerType()),
-        T.StructField("dim_y", T.IntegerType()),
-        T.StructField("level", T.DoubleType()),
-    ]
-)
-
-
-def extract_media_features(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    binary_col: str = "content",
-    include_orientation: bool = False,
-) -> DataFrame:
-    """Mixed-format batch feature extraction: ONE ``mapInPandas``
-    kernel, magic-byte dispatch per payload (``decode_media``). Same
-    Arrow batch shape and partition parallelism as the single-format
-    kernel; the output adds (media_type, format) so downstream
-    filters can route by modality. ``include_orientation=True``
-    appends an ``orientation`` column: the EXIF orientation (1-8) for
-    JPEG payloads that carry it (``probe_jpeg_exif_orientation``),
-    null for everything else — read it before any resize step, since
-    values 5-8 mean the stored width/height are transposed."""
-    schema = MEDIA_FEATURE_SCHEMA
-    if include_orientation:
-        schema = T.StructType(
-            list(MEDIA_FEATURE_SCHEMA.fields)
-            + [T.StructField("orientation", T.IntegerType())]
-        )
-
-    def _orientation(payload: bytes):
-        if payload[:3] != b"\xff\xd8\xff":
-            return None
-        try:
-            return probe_jpeg_exif_orientation(payload)
-        except ValueError:
-            return None
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = [bytes(p) for p in pdf[binary_col]]
-            decoded = [decode_media(p) for p in payloads]
-            cols = {
-                "doc_id": pdf[id_col].to_numpy(),
-                "media_type": [t for t, _, _, _, _ in decoded],
-                "format": [f for _, f, _, _, _ in decoded],
-                "n_bytes": [len(p) for p in payloads],
-                "content_sha": [
-                    hashlib.sha256(p).hexdigest() for p in payloads
-                ],
-                "dim_x": [x for _, _, x, _, _ in decoded],
-                "dim_y": [y for _, _, _, y, _ in decoded],
-                "level": [v for _, _, _, _, v in decoded],
-            }
-            if include_orientation:
-                cols["orientation"] = pd.array(
-                    [_orientation(p) for p in payloads], dtype="Int32"
-                )
-            yield pd.DataFrame(
-                cols, columns=[f.name for f in schema.fields]
-            )
-
-    return df.select(id_col, binary_col).mapInPandas(kernel, schema=schema)
-
-
 def extract_image_features(
     df: DataFrame,
     id_col: str = "doc_id",
     binary_col: str = "content",
-    fake: bool = False,
 ) -> DataFrame:
-    """Batch feature extraction over ``mapInPandas``.
-
-    ``fake=False`` runs the REAL decode: ``decode_png`` (pure stdlib,
-    works in this environment) — non-PNG payloads raise inside the
-    task, where a production kernel would dispatch to PIL/ffmpeg by
-    magic bytes. ``fake=True`` substitutes the deterministic
-    sha256-derived stub (oracle-checkable end to end). Either way the
-    Arrow batch shape, output schema, and partition parallelism are
-    identical.
+    """Batch feature extraction over ``mapInPandas``: per payload its
+    byte count, sha256 hex digest and the sha256-derived stub decode
+    (width, height, mean_luma) taken from the digest's leading bytes.
     """
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             # columnar batch construction: the per-payload work is
-            # inherently row-wise (hash/decode), but each output column
+            # inherently row-wise (hashing), but each output column
             # is built as a plain list over the arrays (no iterrows —
             # pandas row materialization is ~10× slower)
             payloads = [bytes(p) for p in pdf[binary_col]]
             digests = [hashlib.sha256(p).digest() for p in payloads]
-            if fake:
-                dims = [
-                    (16 + d[0] % 64, 16 + d[1] % 64, round(d[2] / 255.0, 6))
-                    for d in digests
-                ]
-            else:
-                dims = [decode_png(p) for p in payloads]
+            dims = [
+                (16 + d[0] % 64, 16 + d[1] % 64, round(d[2] / 255.0, 6))
+                for d in digests
+            ]
             yield pd.DataFrame(
                 {
                     "doc_id": pdf[id_col].to_numpy(),
@@ -837,467 +97,3 @@ def extract_image_features(
             )
 
     return df.select(id_col, binary_col).mapInPandas(kernel, schema=FEATURE_SCHEMA)
-
-
-def frame_sample_plan(
-    df: DataFrame, id_col: str = "doc_id", every_n: int = 10
-) -> DataFrame:
-    """Video frame-sampling *plan*: one output row per sampled frame
-    index (decode stubbed). Shows the explode-side plumbing: frame
-    counts derive from metadata; the decode kernel would consume
-    (doc_id, frame_idx) batches."""
-    n_frames = (F.length(F.col("content")) % 240 + 1).alias("n_frames")
-    frames = df.select(F.col(id_col), n_frames)
-    return frames.select(
-        F.col(id_col),
-        F.explode(
-            F.sequence(F.lit(0), F.col("n_frames") - 1, F.lit(every_n))
-        ).alias("frame_idx"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# Image resize — the remaining multimodal plumbing op (decode /
-# feature-extract / RESIZE / frame-sample): REAL nearest-neighbor
-# resampling over the stdlib-decodable raster formats (PNG via the
-# shared _png_pixels core, netpbm P5/P6, uncompressed 24/32-bit BMP),
-# normalized to an RGB PPM (P6) output — the plainest interchange
-# raster, feedable straight back into decode_ppm / extract_*.
-# Codec-bound formats (JPEG/GIF pixels, MP4) surface as '!'-prefixed
-# err markers per the extract_media_features convention; a production
-# deployment swaps _rgb_pixels for a PIL/cv2 kernel without touching
-# the Spark plumbing.
-# ---------------------------------------------------------------------------
-
-
-def _netpbm_pixels(payload: bytes) -> tuple[int, int, int, bytes]:
-    """P5/P6 → (width, height, channels, raster). 8-bit only."""
-    if payload[:2] not in (b"P5", b"P6"):
-        raise ValueError("not a binary PGM/PPM payload")
-    tokens: list[bytes] = []
-    pos = 2
-    while len(tokens) < 3 and pos < len(payload):
-        c = payload[pos : pos + 1]
-        if c == b"#":
-            while pos < len(payload) and payload[pos] not in (10, 13):
-                pos += 1
-        elif c.isspace():
-            pos += 1
-        else:
-            start = pos
-            while pos < len(payload) and not payload[pos : pos + 1].isspace():
-                pos += 1
-            tokens.append(payload[start:pos])
-    pos += 1
-    if len(tokens) < 3:
-        raise ValueError("truncated netpbm header")
-    width, height, maxval = (int(t) for t in tokens)
-    if maxval > 255:
-        raise ValueError("16-bit netpbm rasters unsupported")
-    channels = 3 if payload[:2] == b"P6" else 1
-    need = width * height * channels
-    raster = payload[pos : pos + need]
-    if len(raster) < need:
-        raise ValueError("truncated netpbm raster")
-    return width, height, channels, bytes(raster)
-
-
-def _bmp_pixels(payload: bytes) -> tuple[int, int, int, bytes]:
-    """Uncompressed 24/32-bit BMP → (width, height, 3, RGB raster,
-    top-down row order regardless of the file's orientation)."""
-    import struct
-
-    if payload[:2] != b"BM":
-        raise ValueError("not a BMP payload")
-    if len(payload) < 54:
-        raise ValueError("truncated BMP")
-    pixel_off = struct.unpack("<I", payload[10:14])[0]
-    hdr_size = struct.unpack("<I", payload[14:18])[0]
-    if hdr_size < 40:
-        raise NotImplementedError("BITMAPCOREHEADER BMPs unsupported")
-    width, height_raw = struct.unpack("<ii", payload[18:26])
-    _planes, bpp = struct.unpack("<HH", payload[26:30])
-    compression = struct.unpack("<I", payload[30:34])[0]
-    if compression != 0 or bpp not in (24, 32):
-        raise NotImplementedError(
-            f"resize supports uncompressed 24/32-bit BMP only "
-            f"(compression={compression} bpp={bpp})"
-        )
-    height = abs(height_raw)
-    top_down = height_raw < 0
-    channels = bpp // 8
-    stride = (width * channels + 3) & ~3
-    if len(payload) < pixel_off + stride * height:
-        raise ValueError("truncated BMP pixel array")
-    out = bytearray()
-    for row in range(height):
-        y = row if top_down else height - 1 - row
-        base = pixel_off + y * stride
-        line = payload[base : base + width * channels]
-        for x in range(width):
-            b, g, r = line[x * channels : x * channels + 3]
-            out += bytes((r, g, b))
-    return width, height, 3, bytes(out)
-
-
-def _rgb_pixels(payload: bytes) -> tuple[int, int, "object"]:
-    """Decode any stdlib-decodable raster to an RGB uint8 array of
-    shape (h, w, 3): grey replicates to 3 channels, alpha drops (the
-    standard training-pipeline normalization)."""
-    import numpy as np
-
-    _mtype, fmt = sniff_format(payload)
-    if fmt == "png":
-        w, h, ch, raw = _png_pixels(payload)
-    elif fmt in ("ppm", "pgm"):
-        w, h, ch, raw = _netpbm_pixels(payload)
-    elif fmt == "bmp":
-        w, h, ch, raw = _bmp_pixels(payload)
-    else:
-        raise NotImplementedError(
-            f"resize needs a stdlib-decodable raster, got {fmt!r} "
-            "(codec-bound formats route to a PIL/cv2 kernel in a real "
-            "deployment)"
-        )
-    arr = np.frombuffer(bytes(raw), dtype=np.uint8).reshape(h, w, ch)
-    if ch == 1:
-        arr = np.repeat(arr, 3, axis=2)
-    elif ch == 2:  # grey + alpha
-        arr = np.repeat(arr[:, :, :1], 3, axis=2)
-    elif ch == 4:  # RGBA
-        arr = arr[:, :, :3]
-    return w, h, arr
-
-
-def resize_image(payload: bytes, target_w: int, target_h: int) -> bytes:
-    """Nearest-neighbor resize → binary PPM (P6) bytes. Pixel-center
-    sampling (index = floor((i + 0.5) · src/dst)), the classic NN
-    kernel — deterministic, aspect-agnostic (callers pick letterbox /
-    crop policy upstream)."""
-    import numpy as np
-
-    w, h, arr = _rgb_pixels(payload)
-    ys = np.minimum(
-        ((np.arange(target_h) + 0.5) * h / target_h).astype(np.int64),
-        h - 1,
-    )
-    xs = np.minimum(
-        ((np.arange(target_w) + 0.5) * w / target_w).astype(np.int64),
-        w - 1,
-    )
-    out = arr[ys][:, xs]
-    header = f"P6\n{target_w} {target_h}\n255\n".encode()
-    return header + out.tobytes()
-
-
-def resize_images(
-    df: DataFrame,
-    id_col: str = "media_id",
-    content_col: str = "content",
-    target_w: int = 64,
-    target_h: int = 64,
-) -> DataFrame:
-    """Batch resize as a mapInPandas kernel (Arrow batches, zero
-    shuffle — the same plumbing shape as extract_media_features):
-    output (id, resized P6 bytes or null, out_format 'ppm' or an
-    '!'-prefixed err marker, width, height). Corrupt/codec-bound
-    payloads mark, never kill, the batch."""
-    out_schema = (
-        f"{id_col} long, resized binary, out_format string, "
-        "width int, height int"
-    )
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, blobs, fmts, ws, hs = [], [], [], [], []
-            for mid, payload in zip(pdf[id_col], pdf[content_col]):
-                ids.append(mid)
-                try:
-                    blob = resize_image(bytes(payload), target_w, target_h)
-                    blobs.append(blob)
-                    fmts.append("ppm")
-                    ws.append(target_w)
-                    hs.append(target_h)
-                except Exception as exc:
-                    blobs.append(None)
-                    fmts.append(f"!{type(exc).__name__}")
-                    ws.append(None)
-                    hs.append(None)
-            yield pd.DataFrame(
-                {
-                    id_col: ids,
-                    "resized": blobs,
-                    "out_format": fmts,
-                    "width": pd.array(ws, dtype="Int32"),
-                    "height": pd.array(hs, dtype="Int32"),
-                }
-            )
-
-    return df.select(id_col, content_col).mapInPandas(kernel, out_schema)
-
-
-# ---------------------------------------------------------------------------
-# Audio resample — the audio twin of the image resize op: every
-# speech/audio training pipeline normalizes sample rates (16 kHz for
-# ASR encoders) before featurization. REAL linear-interpolation
-# resampling over stdlib-decodable PCM WAV, re-encoded as 16-bit PCM
-# WAV; a production deployment swaps the kernel body for
-# soxr/librosa without touching the Spark plumbing.
-# ---------------------------------------------------------------------------
-
-
-def _wav_samples(payload: bytes) -> tuple[int, int, "object"]:
-    """PCM WAV → (sample_rate, n_channels, int16 array of shape
-    (n_frames, n_channels)). 8-bit PCM widens to 16-bit."""
-    import struct
-
-    import numpy as np
-
-    if payload[:4] != b"RIFF" or payload[8:12] != b"WAVE":
-        raise ValueError("not a WAV payload")
-    pos = 12
-    fmt = None
-    data = None
-    while pos + 8 <= len(payload):
-        cid, clen = struct.unpack("<4sI", payload[pos : pos + 8])
-        body = payload[pos + 8 : pos + 8 + clen]
-        if cid == b"fmt ":
-            fmt = body
-        elif cid == b"data":
-            data = body
-        pos += 8 + clen + (clen & 1)
-    if fmt is None or data is None:
-        raise ValueError("truncated WAV (missing fmt/data chunk)")
-    audio_format, n_channels, rate = struct.unpack("<HHI", fmt[:8])
-    bits = struct.unpack("<H", fmt[14:16])[0]
-    if audio_format != 1 or bits not in (8, 16):
-        raise NotImplementedError(f"WAV format={audio_format} bits={bits}")
-    if bits == 8:
-        arr = (
-            np.frombuffer(data, dtype=np.uint8).astype(np.int16) - 128
-        ) * 256
-    else:
-        n = (len(data) // 2) * 2
-        arr = np.frombuffer(data[:n], dtype="<i2").astype(np.int16)
-    n_frames = len(arr) // n_channels
-    return rate, n_channels, arr[: n_frames * n_channels].reshape(
-        n_frames, n_channels
-    )
-
-
-def _wav_encode_pcm16(rate: int, samples: "object") -> bytes:
-    """(n_frames, n_channels) int16 → PCM16 WAV bytes."""
-    import struct
-
-    import numpy as np
-
-    n_frames, n_channels = samples.shape
-    data = np.ascontiguousarray(samples.astype("<i2")).tobytes()
-    byte_rate = rate * n_channels * 2
-    fmt = struct.pack("<HHIIHH", 1, n_channels, rate, byte_rate,
-                      n_channels * 2, 16)
-    body = (
-        b"WAVE"
-        + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-        + b"data" + struct.pack("<I", len(data)) + data
-    )
-    return b"RIFF" + struct.pack("<I", len(body)) + body
-
-
-def resample_wav(payload: bytes, target_rate: int) -> bytes:
-    """Linear-interpolation resample to ``target_rate`` (per channel,
-    pixel-center-free: output frame t maps to source position
-    t·src/dst, the standard polyphase-free linear kernel). Integer
-    rate ratios land exactly on source samples (a 2× downsample picks
-    every other frame; a 2× upsample interpolates midpoints).
-    Deterministic; returns PCM16 WAV."""
-    import numpy as np
-
-    rate, n_channels, samples = _wav_samples(payload)
-    if rate == target_rate or samples.shape[0] < 2:
-        return _wav_encode_pcm16(target_rate, samples)
-    n_out = max(1, int(round(samples.shape[0] * target_rate / rate)))
-    pos = np.arange(n_out, dtype=np.float64) * rate / target_rate
-    pos = np.minimum(pos, samples.shape[0] - 1)
-    lo = pos.astype(np.int64)
-    hi = np.minimum(lo + 1, samples.shape[0] - 1)
-    frac = (pos - lo)[:, None]
-    out = (
-        samples[lo].astype(np.float64) * (1.0 - frac)
-        + samples[hi].astype(np.float64) * frac
-    )
-    return _wav_encode_pcm16(
-        target_rate, np.round(out).astype(np.int16)
-    )
-
-
-def resample_audio(
-    df: DataFrame,
-    id_col: str = "media_id",
-    content_col: str = "content",
-    target_rate: int = 16_000,
-) -> DataFrame:
-    """Batch resample as a mapInPandas kernel (Arrow batches, zero
-    shuffle — the plumbing twin of ``resize_images``): output
-    (id, resampled PCM16 WAV bytes or null, out_format 'wav' or an
-    '!'-prefixed err marker, sample_rate, n_frames)."""
-    out_schema = (
-        f"{id_col} long, resampled binary, out_format string, "
-        "sample_rate int, n_frames int"
-    )
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, blobs, fmts, rates, frames = [], [], [], [], []
-            for mid, payload in zip(pdf[id_col], pdf[content_col]):
-                ids.append(mid)
-                try:
-                    blob = resample_wav(bytes(payload), target_rate)
-                    n_ch, n_fr, _ = decode_wav(blob)
-                    blobs.append(blob)
-                    fmts.append("wav")
-                    rates.append(target_rate)
-                    frames.append(n_fr)
-                except Exception as exc:
-                    blobs.append(None)
-                    fmts.append(f"!{type(exc).__name__}")
-                    rates.append(None)
-                    frames.append(None)
-            yield pd.DataFrame(
-                {
-                    id_col: ids,
-                    "resampled": blobs,
-                    "out_format": fmts,
-                    "sample_rate": pd.array(rates, dtype="Int32"),
-                    "n_frames": pd.array(frames, dtype="Int32"),
-                }
-            )
-
-    return df.select(id_col, content_col).mapInPandas(kernel, out_schema)
-
-
-# ---------------------------------------------------------------------------
-# Video frame sampling — REAL on the one video-ish format the stdlib
-# can fully decode: animated GIF (the engine's LZW inflater already
-# handles frame streams). Every image descriptor is a frame;
-# ``sample_video_frames`` strides over them and emits each sampled
-# frame as a standalone P6 raster + luma. Scope note: frames are
-# decoded STANDALONE (own rect + palette) — GIF disposal/transparency
-# COMPOSITING is codec-kernel territory (PIL), exactly like JPEG
-# pixels; frame enumeration, per-frame LZW decode, and the sampling
-# stride are real. ``frame_sample_plan`` above remains the
-# metadata-only plan shape for codec-bound containers (MP4).
-# ---------------------------------------------------------------------------
-
-
-def gif_frames(payload: bytes):
-    """Yield (frame_idx, left, top, width, height, rgb_bytes) for
-    every frame of a (possibly animated) GIF — pure stdlib, the same
-    LZW core as decode_gif, continuing past the first frame."""
-    import struct
-
-    if payload[:6] not in (b"GIF87a", b"GIF89a"):
-        raise ValueError("not a GIF payload")
-    packed = payload[10]
-    pos = 13
-    gct = None
-    if packed & 0x80:
-        n = 3 * (2 << (packed & 0x07))
-        gct = payload[pos : pos + n]
-        pos += n
-    frame_idx = 0
-    while pos < len(payload):
-        b = payload[pos]
-        if b == 0x21:  # extension
-            pos += 2
-            while payload[pos] != 0:
-                pos += 1 + payload[pos]
-            pos += 1
-        elif b == 0x2C:
-            left, top, w, h, ipacked = struct.unpack(
-                "<HHHHB", payload[pos + 1 : pos + 10]
-            )
-            pos += 10
-            pal = gct
-            if ipacked & 0x80:
-                n = 3 * (2 << (ipacked & 0x07))
-                pal = payload[pos : pos + n]
-                pos += n
-            if ipacked & 0x40:
-                raise NotImplementedError("interlaced GIF frames")
-            if pal is None:
-                raise ValueError("GIF frame without a color table")
-            min_code = payload[pos]
-            pos += 1
-            lzw = bytearray()
-            while payload[pos] != 0:
-                ln = payload[pos]
-                lzw += payload[pos + 1 : pos + 1 + ln]
-                pos += 1 + ln
-            pos += 1  # block terminator
-            idx = _gif_lzw(min_code, bytes(lzw))[: w * h]
-            if len(idx) < w * h:
-                raise ValueError("truncated GIF pixel data")
-            rgb = bytearray()
-            for v in idx:
-                rgb += pal[3 * v : 3 * v + 3]
-            yield frame_idx, left, top, w, h, bytes(rgb)
-            frame_idx += 1
-        elif b == 0x3B:  # trailer
-            return
-        else:
-            raise ValueError(f"bad GIF block 0x{b:02x}")
-
-
-def sample_video_frames(
-    df: DataFrame,
-    id_col: str = "media_id",
-    content_col: str = "content",
-    every_n: int = 2,
-) -> DataFrame:
-    """Stride-sample frames from animated GIFs as a mapInPandas
-    kernel: one output row per sampled frame — (id, frame_idx,
-    width, height, mean_luma, P6 frame bytes, err). Non-GIF /
-    codec-bound payloads emit a single '!'-marked row (the
-    extract_media_features convention); a PIL/ffmpeg deployment swaps
-    the frame iterator, not the plumbing."""
-    out_schema = (
-        f"{id_col} long, frame_idx int, width int, height int, "
-        "mean_luma double, frame binary, err string"
-    )
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf[id_col], pdf[content_col]):
-                try:
-                    for fi, _l, _t, w, h, rgb in gif_frames(bytes(payload)):
-                        if fi % every_n != 0:
-                            continue
-                        rs = sum(rgb[0::3])
-                        gs = sum(rgb[1::3])
-                        bs = sum(rgb[2::3])
-                        luma = round(
-                            (0.299 * rs + 0.587 * gs + 0.114 * bs)
-                            / (w * h) / 255.0,
-                            6,
-                        )
-                        header = f"P6\n{w} {h}\n255\n".encode()
-                        rows.append(
-                            (mid, fi, w, h, luma, header + rgb, None)
-                        )
-                except Exception as exc:
-                    rows.append(
-                        (mid, None, None, None, None, None,
-                         f"!{type(exc).__name__}")
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    id_col, "frame_idx", "width", "height",
-                    "mean_luma", "frame", "err",
-                ],
-            ).astype({"frame_idx": "Int32", "width": "Int32",
-                      "height": "Int32"})
-
-    return df.select(id_col, content_col).mapInPandas(kernel, out_schema)

@@ -79,19 +79,6 @@ def hll_state(
     )
 
 
-def hll_merge(
-    a: DataFrame, b: DataFrame, group_cols: Sequence[str]
-) -> DataFrame:
-    """Merge two register tables: union + per-register max. The merge
-    never revisits raw data — same delta-maintenance contract as
-    ``operators/incremental.py``."""
-    return (
-        a.unionByName(b)
-        .groupBy(*group_cols, "bucket")
-        .agg(F.max("max_rho").alias("max_rho"))
-    )
-
-
 def hll_estimate(
     state: DataFrame, group_cols: Sequence[str]
 ) -> DataFrame:
@@ -177,15 +164,6 @@ def cms_state(df: DataFrame, col: str) -> DataFrame:
     )
 
 
-def cms_merge(a: DataFrame, b: DataFrame) -> DataFrame:
-    """Merge two counter tables: union + per-counter sum."""
-    return (
-        a.unionByName(b)
-        .groupBy("hash_row", "bucket")
-        .agg(F.sum("cnt").alias("cnt"))
-    )
-
-
 def cms_lookup(state: DataFrame, keys: DataFrame, col: str) -> DataFrame:
     """Point frequency estimates for every row of ``keys``:
     (col, approx_count) with approx = min over the d hash rows.
@@ -247,7 +225,7 @@ def cms_lookup(state: DataFrame, keys: DataFrame, col: str) -> DataFrame:
 # standard weighted-sample merge contract (a count-independent rank,
 # which is what made the old merge exact, is exactly what made the
 # sample weight-blind; the two guarantees are mutually exclusive).
-# Same delta-maintenance shape as hll_merge/cms_merge — a 100 TB
+# Same delta-maintenance shape as the HLL/CMS states — a 100 TB
 # corpus maintains per-partition states and merges, never re-scans.
 # ---------------------------------------------------------------------------
 
@@ -305,57 +283,6 @@ def qsketch_state(
         .withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") <= k + 1)
         .drop("rn")
-    )
-
-
-def qsketch_merge(
-    a: DataFrame, b: DataFrame, group_cols: Sequence[str], k: int = _QSK_K
-) -> DataFrame:
-    """Merge two priority-sample states built over DISJOINT row sets:
-    union + sum counts per (group, value) + recompute priorities from
-    the summed counts + re-top-(k+1). Exact when each input state is
-    untruncated (≤ k+1 distinct values per group — the state is then
-    a lossless count table); otherwise one-sided per the block
-    comment above (heavy values are never lost: priority ≥ cnt).
-    Never revisits raw data; both inputs are already ≤ k+1 rows per
-    group, so the merge window sees ≤ 2k+2 rows.
-
-    Inputs MUST cover disjoint row sets (the standard sketch-merge
-    contract, as for cms_merge): counts are summed, so overlapping
-    inputs double-count multiplicities."""
-    gcols = list(group_cols)
-    merged = (
-        a.unionByName(b)
-        .groupBy(*gcols, "value")
-        .agg(F.sum("cnt").alias("cnt"))
-        .withColumn("priority", _qsk_priority(F.col("value"), F.col("cnt")))
-    )
-    # per-group n_total adds across disjoint inputs; within one input
-    # every state row of a group carries the same n_total, so max()
-    # reads it back out
-    ntot = (
-        a.groupBy(*gcols)
-        .agg(F.max("n_total").alias("_na"))
-        .join(b.groupBy(*gcols).agg(F.max("n_total").alias("_nb")), gcols, "full")
-        .select(
-            *gcols,
-            (
-                F.coalesce(F.col("_na"), F.lit(0))
-                + F.coalesce(F.col("_nb"), F.lit(0))
-            ).alias("n_total"),
-        )
-    )
-    w = Window.partitionBy(*gcols).orderBy(
-        F.col("priority").desc(), F.col("value").asc()
-    )
-    return (
-        merged.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k + 1)
-        .drop("rn")
-        # states are ≤ k+1 rows/group, so the group-level totals are tiny
-        .join(F.broadcast(ntot), gcols)
-        # same column order as qsketch_state output
-        .select(*gcols, "value", "cnt", "priority", "n_total")
     )
 
 
@@ -477,44 +404,6 @@ def kmv_state(
         .filter(F.col("rn") <= k)
         .drop("rn")
     )
-
-
-def kmv_merge(
-    a: DataFrame, b: DataFrame, group_cols: Sequence[str], k: int = _KMV_K
-) -> DataFrame:
-    """Merge two KMV states: union-distinct + re-bottom-k. EXACT
-    (merge(state(A), state(B)) == state(A ∪ B)): the hash is a
-    function of the value alone, so any hash in the union's bottom-k
-    is in the bottom-k of every input containing it. Idempotent —
-    overlapping inputs are fine (hashes dedup), unlike count-summing
-    sketches."""
-    gcols = list(group_cols)
-    w = Window.partitionBy(*gcols).orderBy(F.col("hv").asc())
-    return (
-        a.unionByName(b)
-        .select(*gcols, "hv")
-        .distinct()
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .drop("rn")
-    )
-
-
-def kmv_estimate(
-    state: DataFrame, group_cols: Sequence[str], k: int = _KMV_K
-) -> DataFrame:
-    """Distinct-count estimate per group: EXACT row count m when the
-    state is untruncated (m < k); otherwise the classic KMV estimator
-    (k−1)/θ with θ = (k-th smallest hash)/2^48. Mirrored exactly by
-    the SQL oracle (integer max + one double division)."""
-    gcols = list(group_cols)
-    agg = state.groupBy(*gcols).agg(
-        F.count("*").alias("m"), F.max("hv").alias("max_hv")
-    )
-    est = F.when(F.col("m") < k, F.col("m").cast("double")).otherwise(
-        F.lit(float(k - 1)) * F.lit(_KMV_SPACE) / F.col("max_hv")
-    )
-    return agg.select(*gcols, F.round(est, 4).alias("est_distinct"))
 
 
 def kmv_intersect_estimate(

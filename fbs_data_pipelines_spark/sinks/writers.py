@@ -49,42 +49,3 @@ def write_parquet(
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.parquet(path)
-
-
-def write_training_shards(
-    df: DataFrame,
-    path: str,
-    n_shards: int,
-    key_col: str,
-    salt: str = "",
-) -> None:
-    """The last-mile trainer export: N balanced parquet shards in a
-    DETERMINISTIC pseudo-random order.
-
-    Trainers want (a) a global shuffle of the corpus that is
-    reproducible run-to-run (data ordering is part of the training
-    recipe), (b) shards of near-equal size for data-parallel workers,
-    (c) a stable doc→shard assignment for resumption. All three fall
-    out of ordering by the portable md5 hash of the document key:
-    `repartitionByRange` on the hash splits the uniform hash space
-    into ``n_shards`` contiguous, balanced ranges (range boundaries
-    from Spark's reservoir sample of the hash column — the assignment
-    is hash-determined, boundaries approximate), and the
-    within-shard sort fixes the intra-shard order exactly.
-
-    One shuffle; each shard lands as one sorted parquet file. Change
-    ``salt`` to get an independent epoch-level reshuffle.
-    """
-    from pyspark.sql import functions as F
-
-    okey = F.md5(
-        F.concat(F.lit(f"{salt}:"), F.col(key_col).cast("string"))
-    )
-    (
-        df.withColumn("__shuffle_order", okey)
-        .repartitionByRange(n_shards, "__shuffle_order")
-        .sortWithinPartitions("__shuffle_order")
-        .drop("__shuffle_order")
-        .write.mode("overwrite")
-        .parquet(path)
-    )

@@ -193,12 +193,3 @@ def read_dialected_csv_positional(
         ).alias("__row")
     )
     return parsed.select(*[F.col(f"__row.{n}").alias(n) for n in names])
-
-
-def read_csv_text(path: str, encoding: str = "latin-1") -> list[list[str]]:
-    """Stdlib fallback (S2, gdrive_handler.py:263-275): bytes →
-    list[list] rows. Driver-side; for ≲10 MB API-edge payloads only."""
-    import csv
-
-    with codecs.open(path, "r", encoding=encoding) as fh:
-        return [row for row in csv.reader(fh)]

@@ -246,75 +246,6 @@ def windowed_event_rollup(
     )
 
 
-def stream_stream_interval_join(
-    left: DataFrame,
-    right: DataFrame,
-    on: str,
-    left_ts: str,
-    right_ts: str,
-    within: str = "1 hour",
-    watermark: str = "2 hours",
-    how: str = "inner",
-) -> DataFrame:
-    """Stream-stream join: right events within ``within`` AFTER the
-    left event, same key. Both sides are watermarked and the join
-    condition is time-bounded — Structured Streaming's requirement for
-    bounding join state (rows older than watermark+interval are
-    evicted from the state store; unbounded-condition stream joins
-    would grow state forever).
-
-    ``how='left_outer'`` emits the unmatched left rows with nulls —
-    but only once the watermark has passed their interval (the engine
-    cannot know "no match will come" earlier), so outer results
-    trail the inner ones by up to watermark+within of event time.
-    That delayed-null semantics is the part of stream-stream joins
-    that surprises people; see the test for the two-batch emission
-    pattern. Outer joins REQUIRE the time bound + both watermarks
-    (enforced by the engine).
-
-    Works on batch DataFrames too (the condition is plain SQL there).
-    """
-    l_wm = left.withWatermark(left_ts, watermark) if left.isStreaming else left
-    r_wm = right.withWatermark(right_ts, watermark) if right.isStreaming else right
-    lt, rt = F.col(left_ts), F.col(right_ts)
-    cond = (
-        (l_wm[on] == r_wm[on])
-        & (rt >= lt)
-        & (rt <= lt + F.expr(f"INTERVAL {within}"))
-    )
-    return l_wm.alias("l").join(r_wm.alias("r"), cond, how)
-
-
-def streaming_dedup(
-    df: DataFrame,
-    key_cols: Sequence[str],
-    ts_col: str = "ts",
-    watermark: str = "1 hour",
-    within_watermark: bool = True,
-) -> DataFrame:
-    """Streaming deduplication — the ingest-side exact-dedup twin of
-    the batch ``dedup_exact`` operator: drop re-deliveries of the same
-    key as events flow in.
-
-    ``within_watermark=True`` uses ``dropDuplicatesWithinWatermark``:
-    state for a key is EVICTED once the watermark passes it, so state
-    size is bounded by (keys per watermark window), not by the whole
-    stream history — the only shape that survives an unbounded 100 TB
-    firehose. ``False`` falls back to global ``dropDuplicates`` (exact
-    across all time, state grows with distinct keys — batch parity
-    mode). On a batch DataFrame this degrades to plain dropDuplicates
-    (timestamp column included for the within-watermark variant so
-    batch and stream agree on the no-late-data case).
-    """
-    keys = list(key_cols)
-    if not df.isStreaming:
-        return df.dropDuplicates(keys)
-    wm = df.withWatermark(ts_col, watermark)
-    if within_watermark:
-        return wm.dropDuplicatesWithinWatermark(keys)
-    return wm.dropDuplicates(keys)
-
-
 def streaming_incremental_rollup(
     stream: DataFrame,
     keys: Sequence[str],
@@ -364,33 +295,6 @@ def streaming_incremental_rollup(
         .trigger(availableNow=True)
         .start()
     )
-
-
-def stream_static_enrich(
-    stream: DataFrame,
-    dim: DataFrame,
-    on: str | Sequence[str],
-    how: str = "left",
-) -> DataFrame:
-    """Enrich a stream with a STATIC dimension — the third join kind
-    Structured Streaming supports (beside stream-stream and the
-    foreachBatch merge): stateless, no watermark needed.
-
-    Dimension freshness caveat: for a FILE-backed dimension the file
-    listing is pinned when the DataFrame was created — an overwrite
-    that writes new part files is NOT picked up by later micro-batches
-    (and can throw when old files vanish). For a dimension that
-    changes mid-stream, re-resolve it per batch inside foreachBatch
-    (or use a table format with snapshot reads, sources/versioned.py).
-
-    The dimension gets an explicit broadcast hint: per micro-batch
-    the join must not shuffle the (unbounded) stream side against a
-    table that fits an executor. For dimensions too big to broadcast,
-    pre-bucket BOTH sides on the key instead (sources/catalog
-    save_bucketed) and drop the hint.
-    """
-    keys = [on] if isinstance(on, str) else list(on)
-    return stream.join(F.broadcast(dim), keys, how)
 
 
 def windowed_ohlc(

@@ -8,10 +8,10 @@ these tests are that proof, run at every local gate.
   the same gap-merged sessionization semantics; the surviving gated
   key's oracle therefore covers both formulations.
 - `tws_first_seen` → `first_seen`: the transformWithStateInPandas
-  streaming admission and the batch replay admit the same
-  first-event-per-key set; the runtime itself keeps its own suite
-  (tests/test_stateful_tws.py), this pins the SURFACE equivalence
-  the consolidation relies on.
+  form of the admission was deleted with the typed-state streaming
+  stack; `first_seen` gates the same first-event-per-key set through
+  its batch replay with carried seen-key state, so there is no
+  second surface left to pin.
 - `sql_nested_semi` → `semi_join` (r15): the Q20-shape SQL front
   door (IN against an aggregated-HAVING subquery) is exactly the
   `semi_join` operator over a grouped-HAVING build side — both
@@ -46,20 +46,6 @@ def test_session_window_subsumed_by_sessionize(spark):
     got_manual = _rows(manual, cols)
     assert got_native == got_manual
     assert len(got_native) > 0
-
-
-def test_tws_first_seen_subsumed_by_first_seen(spark):
-    """The REAL transformWithStateInPandas admission (two availableNow
-    runs over one checkpoint, RocksDB ValueState) admits exactly the
-    batch twin's set — so `first_seen`'s oracle covers the streaming
-    surface the consolidated key used to gate."""
-    streaming = entry.q_tws_first_seen(spark, SF)
-    batch = entry.q_first_seen(spark, SF)
-    cols = ["user_id", "event_id", "event_type"]
-    got_streaming = _rows(streaming, cols)
-    got_batch = _rows(batch.select(*cols), cols)
-    assert got_streaming == got_batch
-    assert len(got_streaming) > 0
 
 
 @pytest.mark.parametrize("threshold", [3000, 15200])

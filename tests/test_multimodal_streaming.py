@@ -12,11 +12,9 @@ from pyspark.sql import functions as F
 from fbs_data_pipelines_spark.operators.multimodal import (
     attach_media_meta,
     extract_image_features,
-    frame_sample_plan,
 )
 from fbs_data_pipelines_spark.schema.registry import ColumnSpec, DataDictionary
 from fbs_data_pipelines_spark.streaming.merge import (
-    streaming_dedup,
     streaming_snapshot_merge,
     windowed_event_rollup,
 )
@@ -51,226 +49,14 @@ def test_attach_media_meta(spark, media):
 
 
 def test_extract_image_features_fake_deterministic(spark, media):
-    a = {r.doc_id: r.asDict() for r in extract_image_features(media, fake=True).collect()}
-    b = {r.doc_id: r.asDict() for r in extract_image_features(media, fake=True).collect()}
+    a = {r.doc_id: r.asDict() for r in extract_image_features(media).collect()}
+    b = {r.doc_id: r.asDict() for r in extract_image_features(media).collect()}
     assert a == b
     sha = hashlib.sha256(b"fake-png-payload-1").hexdigest()
     assert a[1]["content_sha"] == sha
     assert a[1]["n_bytes"] == 18
     assert 16 <= a[1]["width"] < 80 and 16 <= a[1]["height"] < 80
     assert 0.0 <= a[1]["mean_luma"] <= 1.0
-
-
-def test_extract_image_features_real_decode_rejects_non_png(spark, media):
-    # the real kernel decodes PNG; non-image bytes fail inside the task
-    with pytest.raises(Exception) as exc:
-        extract_image_features(media, fake=False).collect()
-    assert "not a PNG" in str(exc.value)
-
-
-def _png_encode(width, height, pixels, channels=3, filter_type=0):
-    """Minimal test-side PNG writer (filter 0 or 2), stdlib only."""
-    import struct
-    import zlib
-
-    color_type = {1: 0, 2: 4, 3: 2, 4: 6}[channels]
-
-    def chunk(ctype, data):
-        return (
-            struct.pack(">I", len(data))
-            + ctype
-            + data
-            + struct.pack(">I", zlib.crc32(ctype + data) & 0xFFFFFFFF)
-        )
-
-    stride = width * channels
-    raw = b""
-    prev = bytes(stride)
-    for y in range(height):
-        line = bytes(pixels[y * stride : (y + 1) * stride])
-        if filter_type == 0:
-            raw += b"\x00" + line
-        elif filter_type == 2:  # Up: store line - prev
-            raw += b"\x02" + bytes(
-                (line[x] - prev[x]) & 0xFF for x in range(stride)
-            )
-        prev = line
-    ihdr = struct.pack(">IIBBBBB", width, height, 8, color_type, 0, 0, 0)
-    return (
-        b"\x89PNG\r\n\x1a\n"
-        + chunk(b"IHDR", ihdr)
-        + chunk(b"IDAT", zlib.compress(raw))
-        + chunk(b"IEND", b"")
-    )
-
-
-def _bmp_encode(width, height, bgr_rows, bpp=24, top_down=False):
-    """Minimal test-side BMP writer: uncompressed, BITMAPINFOHEADER.
-    ``bgr_rows`` is the pixel array in IMAGE order (top row first);
-    rows are written bottom-up unless top_down."""
-    import struct
-
-    channels = bpp // 8
-    stride = (width * channels + 3) & ~3
-    rows = [
-        bytes(bgr_rows[y * width * channels : (y + 1) * width * channels]).ljust(
-            stride, b"\x00"
-        )
-        for y in range(height)
-    ]
-    if not top_down:
-        rows = rows[::-1]
-    pixels = b"".join(rows)
-    hdr_h = height if not top_down else -height
-    info = struct.pack("<IiiHHIIiiII", 40, width, hdr_h, 1, bpp, 0,
-                       len(pixels), 2835, 2835, 0, 0)
-    off = 14 + 40
-    file_hdr = struct.pack("<2sIHHI", b"BM", off + len(pixels), 0, 0, off)
-    return file_hdr + info + pixels
-
-
-def _wav_encode(samples, n_channels=1, rate=8000, bits=16):
-    """Minimal test-side WAV writer (PCM)."""
-    import struct
-
-    if bits == 16:
-        data = struct.pack(f"<{len(samples)}h", *samples)
-    else:
-        data = bytes(samples)
-    fmt = struct.pack(
-        "<HHIIHH", 1, n_channels, rate,
-        rate * n_channels * bits // 8, n_channels * bits // 8, bits,
-    )
-    body = (
-        b"fmt " + struct.pack("<I", len(fmt)) + fmt
-        + b"data" + struct.pack("<I", len(data)) + data
-    )
-    return b"RIFF" + struct.pack("<I", 4 + len(body)) + b"WAVE" + body
-
-
-def test_decode_bmp_golden_values():
-    from fbs_data_pipelines_spark.operators.multimodal import decode_bmp
-
-    # 2x1 BGR: pure red then pure white (written bottom-up with pad)
-    px = bytes([0, 0, 255, 255, 255, 255])
-    w, h, luma = decode_bmp(_bmp_encode(2, 1, px))
-    assert (w, h) == (2, 1)
-    assert luma == round((0.299 * 255 + 255.0) / 2 / 255.0, 6)
-    # top-down negative-height variant decodes identically
-    assert decode_bmp(_bmp_encode(2, 1, px, top_down=True)) == (w, h, luma)
-    # 32-bit BGRA: alpha ignored
-    px32 = bytes([255, 0, 0, 77])  # pure blue
-    assert decode_bmp(_bmp_encode(1, 1, px32, bpp=32)) == (
-        1, 1, round(0.114, 6)
-    )
-    with pytest.raises(ValueError):
-        decode_bmp(b"not a bitmap")
-
-
-def test_decode_wav_golden_values():
-    from fbs_data_pipelines_spark.operators.multimodal import decode_wav
-
-    ch, frames, level = decode_wav(_wav_encode([0, 16384, -16384, 32767]))
-    assert (ch, frames) == (1, 4)
-    assert level == round((0 + 16384 + 16384 + 32767) / 4 / 32767.0, 6)
-    # stereo: frames = samples / channels
-    ch, frames, _ = decode_wav(_wav_encode([0, 0, 100, -100], n_channels=2))
-    assert (ch, frames) == (2, 2)
-    # 8-bit unsigned centered at 128
-    ch, frames, level = decode_wav(_wav_encode([128, 255], bits=8))
-    assert (ch, frames) == (1, 2)
-    assert level == round((0 + 127) / 2 / 127.0, 6)
-    with pytest.raises(ValueError):
-        decode_wav(b"RIFFxxxxJUNK")
-
-
-def test_extract_media_features_mixed_batch(spark):
-    # ONE kernel, magic-byte dispatch: PNG + BMP + WAV decode for
-    # real, JPEG-ish and unknown payloads route to the stub, corrupt
-    # PNG falls back with '!err' instead of killing the task
-    from fbs_data_pipelines_spark.operators.multimodal import (
-        _fake_decode,
-        extract_media_features,
-    )
-
-    png = _png_encode(2, 2, bytes([255, 0, 0, 0, 255, 0, 0, 0, 255, 255, 255, 255]))
-    bmp = _bmp_encode(2, 1, bytes([0, 0, 255, 255, 255, 255]))
-    wav = _wav_encode([0, 16384, -16384, 32767])
-    jpg = b"\xff\xd8\xff\xe0" + b"\x42" * 64
-    junk = b"neither fish nor fowl"
-    bad_png = png[:20]  # magic ok, truncated body
-    df = spark.createDataFrame(
-        [(1, png), (2, bmp), (3, wav), (4, jpg), (5, junk), (6, bad_png)],
-        "doc_id long, content binary",
-    )
-    out = {r.doc_id: r for r in extract_media_features(df).collect()}
-    assert (out[1].media_type, out[1].format, out[1].dim_x, out[1].dim_y) == (
-        "image", "png", 2, 2
-    )
-    assert (out[2].media_type, out[2].format, out[2].dim_x, out[2].dim_y) == (
-        "image", "bmp", 2, 1
-    )
-    assert (out[3].media_type, out[3].format, out[3].dim_x, out[3].dim_y) == (
-        "audio", "wav", 1, 4
-    )
-    # the payload's magic says JPEG but its segment chain is garbage:
-    # the header probe fails and the kernel tags it corrupt (real
-    # JPEG dimensions are covered by test_probe_jpeg_dims_marker_walk)
-    fw, fh, fv = _fake_decode(jpg)
-    assert (out[4].format, out[4].dim_x, out[4].dim_y, out[4].level) == (
-        "jpeg!err", fw, fh, fv
-    )
-    assert (out[5].media_type, out[5].format) == ("unknown", "bin")
-    assert out[6].format == "png!err"
-    assert out[6].dim_x == _fake_decode(bad_png)[0]
-
-
-def test_decode_png_golden_values(spark):
-    from fbs_data_pipelines_spark.operators.multimodal import decode_png
-
-    # 2x2 RGB: red, green, blue, white — Rec.601 luma known exactly
-    px = bytes([255, 0, 0, 0, 255, 0, 0, 0, 255, 255, 255, 255])
-    payload = _png_encode(2, 2, px)
-    w, h, luma = decode_png(payload)
-    assert (w, h) == (2, 2)
-    expect = (0.299 * (255 + 255) + 0.587 * (255 + 255) + 0.114 * (255 + 255)) / 4
-    assert luma == round(expect / 255.0, 6)
-
-    # same image stored with the Up filter decodes identically
-    assert decode_png(_png_encode(2, 2, px, filter_type=2)) == (w, h, luma)
-
-    # greyscale + RGBA channel layouts
-    grey = _png_encode(3, 1, bytes([0, 128, 255]), channels=1)
-    assert decode_png(grey) == (3, 1, round((0 + 128 + 255) / 3 / 255.0, 6))
-    rgba = _png_encode(1, 1, bytes([255, 0, 0, 9]), channels=4)
-    assert decode_png(rgba) == (1, 1, round(0.299, 6))
-
-    with pytest.raises(ValueError):
-        decode_png(b"definitely not a png")
-
-
-def test_extract_image_features_real_png_end_to_end(spark):
-    # the REAL kernel through the full mapInPandas pipeline
-    img1 = _png_encode(2, 2, bytes([255, 0, 0, 0, 255, 0, 0, 0, 255, 255, 255, 255]))
-    img2 = _png_encode(1, 1, bytes([10, 20, 30]))
-    df = spark.createDataFrame(
-        [(1, img1), (2, img2)], "doc_id long, content binary"
-    )
-    out = {r.doc_id: r for r in extract_image_features(df, fake=False).collect()}
-    assert (out[1].width, out[1].height) == (2, 2)
-    assert (out[2].width, out[2].height) == (1, 1)
-    assert out[2].mean_luma == round(
-        (0.299 * 10 + 0.587 * 20 + 0.114 * 30) / 255.0, 6
-    )
-    assert out[1].n_bytes == len(img1)
-    assert out[1].content_sha == hashlib.sha256(img1).hexdigest()
-
-
-def test_frame_sample_plan(spark, media):
-    rows = frame_sample_plan(media, every_n=10).collect()
-    # one row per sampled frame idx, idx always a multiple of 10
-    assert all(r.frame_idx % 10 == 0 for r in rows)
-    assert len({r.doc_id for r in rows}) == 2
 
 
 # --- streaming ----------------------------------------------------------
@@ -341,48 +127,6 @@ def test_streaming_snapshot_merge_end_to_end(spark):
 
     final = {r.id: r.v for r in spark.read.parquet(pub).collect()}
     assert final == {"1": "a", "2": "B", "3": "c", "4": "d"}
-    shutil.rmtree(tmp, ignore_errors=True)
-
-
-def test_streaming_dedup_drops_redeliveries(spark):
-    # rate-free deterministic stream: one CSV file with duplicate keys
-    tmp = tempfile.mkdtemp(prefix="sdedup_")
-    import os
-
-    os.makedirs(f"{tmp}/in")
-    with open(f"{tmp}/in/events.csv", "w") as f:
-        f.write(
-            "k,ts,v\n"
-            "a,2024-01-01 10:00:00,1\n"
-            "a,2024-01-01 10:05:00,2\n"  # re-delivery of key a
-            "b,2024-01-01 10:01:00,3\n"
-        )
-    stream = (
-        spark.readStream.schema("k string, ts timestamp, v long")
-        .csv(f"{tmp}/in", header=True)
-    )
-    deduped = streaming_dedup(stream, ["k"], ts_col="ts", watermark="10 minutes")
-    q = (
-        deduped.writeStream.format("memory")
-        .queryName("sdedup_out")
-        .outputMode("append")
-        .option("checkpointLocation", f"{tmp}/ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination(60)
-    finally:
-        if q.isActive:
-            q.stop()
-    rows = spark.sql("SELECT k FROM sdedup_out").collect()
-    assert sorted(r.k for r in rows) == ["a", "b"]  # one row per key
-
-    # batch degrade: plain dropDuplicates semantics
-    bdf = spark.createDataFrame(
-        [("a", 1), ("a", 2), ("b", 3)], "k string, v long"
-    )
-    assert streaming_dedup(bdf, ["k"]).count() == 2
     shutil.rmtree(tmp, ignore_errors=True)
 
 
@@ -558,57 +302,6 @@ def test_registry_pk_violation_raises():
         DataDictionary("x", [ColumnSpec("a", "String")]).primary_key()
 
 
-def test_sessionize_stream_stateful(spark):
-    """Two micro-batches: sessions must close across the batch
-    boundary using the persisted per-user state."""
-    import os
-
-    from fbs_data_pipelines_spark.streaming.sessionize import sessionize_stream
-
-    tmp = tempfile.mkdtemp(prefix="sess_stream_")
-    src_dir = f"{tmp}/in"
-    os.makedirs(src_dir)
-    base = 1700000000
-
-    def write_batch(name, rows):
-        with open(f"{tmp}/{name}.csv", "w") as f:
-            f.write("user_id,ts\n")
-            for uid, off in rows:
-                f.write(f"{uid},{dt.datetime.fromtimestamp(base + off, dt.timezone.utc).strftime('%Y-%m-%dT%H:%M:%S')}\n")
-        shutil.move(f"{tmp}/{name}.csv", f"{src_dir}/{name}.csv")
-
-    # batch 1: user 1 has events 0s and 10s (one open session)
-    write_batch("b1", [(1, 0), (1, 10)])
-
-    stream = (
-        spark.readStream.schema("user_id long, ts timestamp")
-        .option("maxFilesPerTrigger", 1)
-        .csv(src_dir, header=True)
-    )
-    out = sessionize_stream(stream, gap_seconds=1800)
-    q = (
-        out.writeStream.format("memory")
-        .queryName("sessions_test")
-        .outputMode("update")
-        .option("checkpointLocation", f"{tmp}/ckpt")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        # batch 2: user 1 event 2 hours later → closes session 1
-        write_batch("b2", [(1, 7200), (1, 7210)])
-        q.processAllAvailable()
-    finally:
-        q.stop()
-
-    rows = spark.sql(
-        "SELECT * FROM sessions_test WHERE session_seq = 1"
-    ).collect()
-    assert len(rows) == 1
-    assert rows[0].n_events == 2  # both batch-1 events, folded via state
-    shutil.rmtree(tmp, ignore_errors=True)
-
-
 def test_excel_source_gated(spark, tmp_path):
     """No Excel engine in this container: the reader must fail with a
     clear NotImplementedError pointing at the CSV fallback (the parse
@@ -658,57 +351,6 @@ def test_rows_datasource_roundtrip(spark, tmp_path):
     written = json.loads(out.read_text())
     assert written["values"][0] == ["id", "name", "city"]
     assert sorted(v[0] for v in written["values"][1:]) == ["1", "3", "4"]
-
-
-def test_stream_stream_interval_join(spark):
-    """Two file streams joined on key within a bounded time interval
-    (watermarked state): click followed by purchase within 1h."""
-    import os
-
-    from fbs_data_pipelines_spark.streaming.merge import (
-        stream_stream_interval_join,
-    )
-
-    tmp = tempfile.mkdtemp(prefix="ssj_")
-    base = 1700000000
-    clicks = spark.createDataFrame(
-        [(1, base), (2, base), (3, base)], "user_id long, sec long"
-    ).select("user_id", F.timestamp_seconds("sec").alias("c_ts"))
-    purchases = spark.createDataFrame(
-        [(1, base + 600), (2, base + 7200), (9, base + 60)],
-        "user_id long, sec long",
-    ).select("user_id", F.timestamp_seconds("sec").alias("p_ts"))
-    clicks.write.parquet(f"{tmp}/clicks")
-    purchases.write.parquet(f"{tmp}/purchases")
-
-    c_stream = spark.readStream.schema("user_id long, c_ts timestamp").parquet(
-        f"{tmp}/clicks"
-    )
-    p_stream = spark.readStream.schema("user_id long, p_ts timestamp").parquet(
-        f"{tmp}/purchases"
-    )
-    joined = stream_stream_interval_join(
-        c_stream, p_stream, "user_id", "c_ts", "p_ts", within="1 hour"
-    )
-    assert joined.isStreaming
-    q = (
-        joined.writeStream.format("memory")
-        .queryName("ssj_test")
-        .outputMode("append")
-        .option("checkpointLocation", f"{tmp}/ckpt")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    rows = spark.sql("SELECT * FROM ssj_test").collect()
-    # user 1: purchase 10 min after click → match; user 2: 2h → outside
-    # the interval; user 3 no purchase; user 9 purchase without click
-    assert [r["l.user_id"] if "l.user_id" in r.asDict() else r.user_id
-            for r in rows].count(1) >= 1
-    assert len(rows) == 1
-    shutil.rmtree(tmp, ignore_errors=True)
 
 
 def test_streaming_merge_checkpoint_restart_exactly_once(spark):
@@ -777,726 +419,6 @@ def test_audit_from_registry(spark, dictionary):
     assert len(rows) == 1 and rows[0]["Credito"] == "C1"
     assert rows[0]["FechaGiro_antiguo"] == "2019-12-31"
     assert rows[0]["FechaGiro_nuevo"] == "2020-01-01"
-
-
-def _gif_encode(width, height, palette, indices):
-    """Minimal spec-valid GIF89a writer for goldens: global color
-    table, one frame, LZW emitting CLEAR before every pixel code so
-    the dictionary never grows (legal, if inefficient)."""
-    import struct
-
-    depth = max(1, (len(palette) - 1).bit_length())
-    field = depth - 1
-    n_entries = 2 << field
-    min_code = max(2, depth)
-    clear, end = 1 << min_code, (1 << min_code) + 1
-    code_size = min_code + 1
-
-    acc = nbits = 0
-    data = bytearray()
-
-    def emit(code):
-        nonlocal acc, nbits
-        acc |= code << nbits
-        nbits += code_size
-        while nbits >= 8:
-            data.append(acc & 0xFF)
-            acc >>= 8
-            nbits -= 8
-
-    emit(clear)
-    for idx in indices:
-        emit(idx)
-        emit(clear)
-    emit(end)
-    if nbits:
-        data.append(acc & 0xFF)
-
-    gct = bytearray()
-    for rgb in list(palette) + [(0, 0, 0)] * (n_entries - len(palette)):
-        gct += bytes(rgb)
-    out = bytearray(b"GIF89a")
-    out += struct.pack("<HHBBB", width, height, 0x80 | field, 0, 0)
-    out += gct
-    out += b"\x2c" + struct.pack("<HHHHB", 0, 0, width, height, 0)
-    out.append(min_code)
-    for i in range(0, len(data), 255):
-        block = data[i : i + 255]
-        out.append(len(block))
-        out += block
-    out += b"\x00\x3b"
-    return bytes(out)
-
-
-def test_decode_gif_golden_values():
-    from fbs_data_pipelines_spark.operators.multimodal import decode_gif
-
-    # 2x2 using a 4-color palette: red, green, blue, white — same
-    # Rec.601 luma as the PNG golden
-    pal = [(255, 0, 0), (0, 255, 0), (0, 0, 255), (255, 255, 255)]
-    payload = _gif_encode(2, 2, pal, [0, 1, 2, 3])
-    w, h, luma = decode_gif(payload)
-    expect = (0.299 * (255 + 255) + 0.587 * (255 + 255) + 0.114 * (255 + 255)) / 4
-    assert (w, h, luma) == (2, 2, round(expect / 255.0, 6))
-
-    # an extension block before the frame is skipped cleanly
-    ext = payload[:13 + 12] + b"\x21\xf9\x04\x00\x00\x00\x00\x00" + payload[13 + 12:]
-    assert decode_gif(ext) == (w, h, luma)
-
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError):
-        decode_gif(b"GIF89a_truncated")
-    with _pytest.raises(ValueError):
-        decode_gif(b"not a gif at all!!")
-
-
-def test_decode_ppm_golden_values():
-    from fbs_data_pipelines_spark.operators.multimodal import decode_ppm
-
-    px = bytes([255, 0, 0, 0, 255, 0, 0, 0, 255, 255, 255, 255])
-    ppm = b"P6\n# golden comment\n2 2\n255\n" + px
-    expect = (0.299 * (255 + 255) + 0.587 * (255 + 255) + 0.114 * (255 + 255)) / 4
-    assert decode_ppm(ppm) == (2, 2, round(expect / 255.0, 6))
-
-    pgm = b"P5 3 1 255 " + bytes([0, 128, 255])
-    assert decode_ppm(pgm) == (3, 1, round((0 + 128 + 255) / 3 / 255.0, 6))
-
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError):
-        decode_ppm(b"P3\n1 1\n255\n1 2 3")  # ASCII variant unsupported
-    with _pytest.raises(ValueError):
-        decode_ppm(b"P6\n2 2\n255\n" + px[:5])  # truncated raster
-
-
-def test_mixed_batch_includes_gif_and_ppm(spark):
-    from fbs_data_pipelines_spark.operators.multimodal import (
-        extract_media_features,
-    )
-
-    pal = [(255, 255, 255), (0, 0, 0)]
-    gif = _gif_encode(2, 1, pal, [0, 1])
-    ppm = b"P6\n1 1\n255\n" + bytes([255, 255, 255])
-    pgm = b"P5\n2 1\n255\n" + bytes([0, 255])
-    df = spark.createDataFrame(
-        [(1, gif), (2, ppm), (3, pgm)], "doc_id long, content binary"
-    )
-    out = {r.doc_id: r for r in extract_media_features(df).collect()}
-    assert (out[1].media_type, out[1].format, out[1].dim_x, out[1].dim_y) == (
-        "image", "gif", 2, 1
-    )
-    assert out[1].level == round(0.5, 6)
-    assert (out[2].format, out[2].level) == ("ppm", 1.0)
-    assert (out[3].format, out[3].dim_x, out[3].level) == ("pgm", 2, 0.5)
-
-
-def test_probe_jpeg_dims_marker_walk():
-    import struct
-
-    from fbs_data_pipelines_spark.operators.multimodal import (
-        decode_media,
-        probe_jpeg_dims,
-    )
-
-    def seg(marker, body):
-        return bytes([0xFF, marker]) + struct.pack(">H", len(body) + 2) + body
-
-    jpeg = (
-        b"\xff\xd8"                                   # SOI
-        + seg(0xE0, b"JFIF\x00\x01\x02\x00\x00\x01\x00\x01\x00\x00")
-        + seg(0xC4, b"\x00" * 10)                      # DHT: must be skipped
-        + seg(0xC0, b"\x08" + struct.pack(">HH", 480, 640) + b"\x03"
-              + b"\x01\x11\x00\x02\x11\x01\x03\x11\x01")
-        + b"\xff\xd9"                                  # EOI
-    )
-    assert probe_jpeg_dims(jpeg) == (640, 480)
-    mtype, fmt, w, h, _level = decode_media(jpeg)
-    assert (mtype, fmt, w, h) == ("image", "jpeg", 640, 480)
-
-    # truncated stream → '!err' fallback, never an exception
-    mtype2, fmt2, *_ = decode_media(jpeg[:6])
-    assert fmt2 == "jpeg!err"
-
-
-def test_probe_jpeg_progressive_sof2():
-    import struct
-
-    from fbs_data_pipelines_spark.operators.multimodal import probe_jpeg_dims
-
-    def seg(marker, body):
-        return bytes([0xFF, marker]) + struct.pack(">H", len(body) + 2) + body
-
-    jpeg = (
-        b"\xff\xd8"
-        + seg(0xC2, b"\x08" + struct.pack(">HH", 33, 77) + b"\x01\x01\x11\x00")
-    )
-    assert probe_jpeg_dims(jpeg) == (77, 33)
-
-
-def test_probe_mp4_box_walk():
-    import struct
-
-    from fbs_data_pipelines_spark.operators.multimodal import (
-        decode_media,
-        probe_mp4_meta,
-    )
-
-    def box(btype, body):
-        return struct.pack(">I", len(body) + 8) + btype + body
-
-    mvhd = box(
-        b"mvhd",
-        b"\x00" + b"\x00" * 3          # version 0 + flags
-        + b"\x00" * 8                   # ctime, mtime
-        + struct.pack(">I", 1000)       # timescale
-        + struct.pack(">I", 2500)       # duration → 2.5 s
-        + b"\x00" * 80,
-    )
-    tkhd_body = b"\x00" * 76 + struct.pack(">II", 640 << 16, 360 << 16)
-    trak = box(b"trak", box(b"tkhd", tkhd_body))
-    mp4 = box(b"ftyp", b"isom\x00\x00\x02\x00isomiso2") + box(
-        b"moov", mvhd + trak
-    )
-    assert probe_mp4_meta(mp4) == (640, 360, 2.5)
-    mtype, fmt, w, h, dur = decode_media(mp4)
-    assert (mtype, fmt, w, h, dur) == ("video", "mp4", 640, 360, 2.5)
-
-    # truncated box chain → tagged corrupt, not raised
-    _, fmt2, *_ = decode_media(mp4[:10])
-    assert fmt2 == "mp4!err"
-
-
-def test_probe_jpeg_fill_bytes_before_marker():
-    """ITU T.81 B.1.1.2: 0xFF fill bytes may pad any marker — the
-    walker must skip them, not mis-parse (review finding)."""
-    import struct
-
-    from fbs_data_pipelines_spark.operators.multimodal import probe_jpeg_dims
-
-    def seg(marker, body):
-        return bytes([0xFF, marker]) + struct.pack(">H", len(body) + 2) + body
-
-    jpeg = (
-        b"\xff\xd8"
-        + b"\xff"  # fill byte before the SOF marker
-        + seg(0xC0, b"\x08" + struct.pack(">HH", 10, 20) + b"\x01\x01\x11\x00")
-    )
-    assert probe_jpeg_dims(jpeg) == (20, 10)
-
-
-def test_probe_mp4_audio_trak_before_video():
-    """An audio trak's legal all-zero tkhd size must not shadow the
-    video trak's dimensions (review finding)."""
-    import struct
-
-    from fbs_data_pipelines_spark.operators.multimodal import probe_mp4_meta
-
-    def box(btype, body):
-        return struct.pack(">I", len(body) + 8) + btype + body
-
-    mvhd = box(
-        b"mvhd",
-        b"\x00" * 12 + struct.pack(">I", 600) + struct.pack(">I", 1800)
-        + b"\x00" * 80,
-    )
-    audio = box(b"trak", box(b"tkhd", b"\x00" * 84))  # zero w/h
-    video = box(
-        b"trak",
-        box(b"tkhd", b"\x00" * 76 + struct.pack(">II", 1920 << 16, 1080 << 16)),
-    )
-    mp4 = box(b"ftyp", b"isom" * 3) + box(b"moov", mvhd + audio + video)
-    assert probe_mp4_meta(mp4) == (1920, 1080, 3.0)
-
-
-def _mp3_frame_v1(kbps_idx=9, sr_idx=0, mono=False):
-    # MPEG-1 Layer III header: sync 111|11(V1)|01(LIII)|1(no CRC)
-    b2 = (kbps_idx << 4) | (sr_idx << 2)
-    b3 = 0xC0 if mono else 0x00
-    return bytes([0xFF, 0xFB, b2, b3])
-
-
-def test_probe_mp3_header_walk():
-    from fbs_data_pipelines_spark.operators.multimodal import (
-        decode_media,
-        probe_mp3_meta,
-    )
-
-    # ID3v2-tagged, 128 kbps 44100 Hz stereo, 16000 audio bytes → 1.0 s
-    id3 = b"ID3\x03\x00\x00" + b"\x00\x00\x00\x00"
-    mp3 = id3 + _mp3_frame_v1() + b"\x00" * (16000 - 4)
-    assert probe_mp3_meta(mp3) == (2, 44100, 128, 1.0)
-    mtype, fmt, ch, samples, _lvl = decode_media(mp3)
-    assert (mtype, fmt, ch, samples) == ("audio", "mp3", 2, 44100)
-
-    # tagless MPEG-2 mono 32 kbps 24000 Hz, 4000 bytes → 1.0 s
-    b2 = (4 << 4) | (1 << 2)
-    mp3v2 = bytes([0xFF, 0xF3, b2, 0xC0]) + b"\x00" * 3996
-    assert probe_mp3_meta(mp3v2) == (1, 24000, 32, 1.0)
-    assert decode_media(mp3v2)[:2] == ("audio", "mp3")
-
-    # ID3v2 syncsafe tag length is honored (duration excludes the tag)
-    tag_body = b"\x00" * 200
-    id3_200 = b"ID3\x03\x00\x00" + b"\x00\x00\x01\x48" + tag_body  # 0b1_1001000 = 200
-    mp3_tagged = id3_200 + _mp3_frame_v1() + b"\x00" * (16000 - 4)
-    assert probe_mp3_meta(mp3_tagged) == (2, 44100, 128, 1.0)
-
-    # garbage → ValueError at the probe, '!err' via dispatch
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError):
-        probe_mp3_meta(b"ID3\x03\x00\x00\x00\x00\x00\x00\xaa\xbb")
-
-
-def _exif_jpeg(orientation, byte_order=b"MM", dims=(640, 480)):
-    import struct
-
-    def seg(marker, body):
-        return bytes([0xFF, marker]) + struct.pack(">H", len(body) + 2) + body
-
-    if byte_order == b"MM":
-        tiff = (
-            b"MM\x00\x2a" + struct.pack(">I", 8)
-            + struct.pack(">H", 1)
-            + struct.pack(">HHI", 0x0112, 3, 1)
-            + struct.pack(">H", orientation) + b"\x00\x00"
-            + struct.pack(">I", 0)
-        )
-    else:
-        tiff = (
-            b"II\x2a\x00" + struct.pack("<I", 8)
-            + struct.pack("<H", 1)
-            + struct.pack("<HHI", 0x0112, 3, 1)
-            + struct.pack("<H", orientation) + b"\x00\x00"
-            + struct.pack("<I", 0)
-        )
-    h, w = dims[1], dims[0]
-    return (
-        b"\xff\xd8"
-        + seg(0xE1, b"Exif\x00\x00" + tiff)
-        + seg(0xC0, b"\x08" + struct.pack(">HH", h, w) + b"\x01\x01\x11\x00")
-        + b"\xff\xd9"
-    )
-
-
-def test_probe_jpeg_exif_orientation():
-    from fbs_data_pipelines_spark.operators.multimodal import (
-        probe_jpeg_dims,
-        probe_jpeg_exif_orientation,
-    )
-
-    big = _exif_jpeg(6, b"MM")
-    little = _exif_jpeg(3, b"II")
-    assert probe_jpeg_exif_orientation(big) == 6
-    assert probe_jpeg_exif_orientation(little) == 3
-    # orientation and dimensions come from independent walks
-    assert probe_jpeg_dims(big) == (640, 480)
-
-    # no APP1 at all → None (not an error: EXIF is optional)
-    import struct
-
-    def seg(marker, body):
-        return bytes([0xFF, marker]) + struct.pack(">H", len(body) + 2) + body
-
-    plain = b"\xff\xd8" + seg(
-        0xC0, b"\x08" + struct.pack(">HH", 1, 1) + b"\x01\x01\x11\x00"
-    ) + b"\xff\xd9"
-    assert probe_jpeg_exif_orientation(plain) is None
-    # out-of-range orientation value → None
-    assert probe_jpeg_exif_orientation(_exif_jpeg(9, b"MM")) is None
-
-
-def test_extract_media_features_orientation_column(spark):
-    # mixed batch through the dispatcher with include_orientation=True:
-    # EXIF JPEGs carry their tag, everything else reads null
-    from fbs_data_pipelines_spark.operators.multimodal import (
-        extract_media_features,
-    )
-
-    png = _png_encode(2, 2, bytes([255, 0, 0, 0, 255, 0, 0, 0, 255, 255, 255, 255]))
-    exif = _exif_jpeg(6, b"MM")
-    id3 = b"ID3\x03\x00\x00" + b"\x00\x00\x00\x00"
-    mp3 = id3 + _mp3_frame_v1() + b"\x00" * (16000 - 4)
-    df = spark.createDataFrame(
-        [(1, png), (2, exif), (3, mp3)], "doc_id long, content binary"
-    )
-    out = {
-        r.doc_id: r
-        for r in extract_media_features(df, include_orientation=True).collect()
-    }
-    assert out[1].orientation is None
-    assert out[2].orientation == 6
-    assert (out[2].format, out[2].dim_x, out[2].dim_y) == ("jpeg", 640, 480)
-    assert out[3].orientation is None
-    assert (out[3].media_type, out[3].format, out[3].dim_x, out[3].dim_y) == (
-        "audio", "mp3", 2, 44100
-    )
-    # the default schema is unchanged (gate-stable)
-    assert "orientation" not in extract_media_features(df).columns
-
-
-def test_stream_stream_left_outer_interval_join_emits_nulls_after_watermark(spark):
-    """Left-outer stream-stream join: unmatched clicks emit with null
-    purchase columns — but only after the watermark passes their
-    interval, which requires a LATER batch to advance it (the
-    delayed-null semantics outer stream joins are known for)."""
-    import os
-
-    from fbs_data_pipelines_spark.streaming.merge import (
-        stream_stream_interval_join,
-    )
-
-    tmp = tempfile.mkdtemp(prefix="ssjo_")
-    base = 1700000000
-    os.makedirs(f"{tmp}/clicks")
-    os.makedirs(f"{tmp}/purchases")
-    # batch 1: user 1 matches, user 3 never will
-    spark.createDataFrame(
-        [(1, base), (3, base)], "user_id long, sec long"
-    ).select("user_id", F.timestamp_seconds("sec").alias("c_ts")) \
-        .write.mode("append").parquet(f"{tmp}/clicks")
-    spark.createDataFrame(
-        [(1, base + 600)], "user_id long, sec long"
-    ).select("user_id", F.timestamp_seconds("sec").alias("p_ts")) \
-        .write.mode("append").parquet(f"{tmp}/purchases")
-
-    c_stream = spark.readStream.schema(
-        "user_id long, c_ts timestamp"
-    ).parquet(f"{tmp}/clicks")
-    p_stream = spark.readStream.schema(
-        "user_id long, p_ts timestamp"
-    ).parquet(f"{tmp}/purchases")
-    joined = stream_stream_interval_join(
-        c_stream, p_stream, "user_id", "c_ts", "p_ts",
-        within="10 minutes", watermark="10 minutes", how="left_outer",
-    ).select(F.col("l.user_id").alias("u"), F.col("p_ts"))
-    q = (
-        joined.writeStream.format("memory")
-        .queryName("ssjo_test")
-        .outputMode("append")
-        .option("checkpointLocation", f"{tmp}/ckpt")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        inner_only = spark.sql("SELECT u, p_ts FROM ssjo_test").collect()
-        # watermark hasn't passed user 3's interval yet → only the match
-        assert {(r.u, r.p_ts is None) for r in inner_only} == {(1, False)}
-
-        # batch 2: far-future events on BOTH streams — the global
-        # watermark is the MIN across inputs, so advancing only one
-        # side would pin it at the stale side's max
-        for side, col in (("clicks", "c_ts"), ("purchases", "p_ts")):
-            spark.createDataFrame(
-                [(99, base + 100000)], "user_id long, sec long"
-            ).select("user_id", F.timestamp_seconds("sec").alias(col)) \
-                .write.mode("append").parquet(f"{tmp}/{side}")
-        q.processAllAvailable()
-        # watermark commits lag one batch — one more micro-batch on
-        # both sides nudges the eviction
-        for side, col in (("clicks", "c_ts"), ("purchases", "p_ts")):
-            spark.createDataFrame(
-                [(98, base + 110000)], "user_id long, sec long"
-            ).select("user_id", F.timestamp_seconds("sec").alias(col)) \
-                .write.mode("append").parquet(f"{tmp}/{side}")
-        q.processAllAvailable()
-        rows = spark.sql("SELECT u, p_ts FROM ssjo_test").collect()
-    finally:
-        q.stop()
-    got = {(r.u, r.p_ts is None) for r in rows}
-    assert (1, False) in got          # the inner match
-    assert (3, True) in got           # the watermark-expired null row
-    shutil.rmtree(tmp, ignore_errors=True)
-
-
-def test_stream_static_enrich_broadcasts_dimension(spark):
-    """Stream-static join: every micro-batch row picks up its
-    dimension attributes; the executed micro-batch plan broadcasts
-    the static side (never shuffles the stream against it)."""
-    from fbs_data_pipelines_spark.streaming.merge import (
-        stream_static_enrich,
-    )
-
-    tmp = tempfile.mkdtemp(prefix="sse_")
-    spark.createDataFrame(
-        [(1, 10.0), (2, 20.0), (9, 90.0)], "dim_id long, v double"
-    ).write.parquet(f"{tmp}/facts")
-    dim = spark.createDataFrame(
-        [(1, "gold"), (2, "silver")], "dim_id long, tier string"
-    )
-    stream = spark.readStream.schema("dim_id long, v double").parquet(
-        f"{tmp}/facts"
-    )
-    out = stream_static_enrich(stream, dim, "dim_id")
-    assert out.isStreaming
-    q = (
-        out.writeStream.format("memory").queryName("sse_test")
-        .outputMode("append")
-        .option("checkpointLocation", f"{tmp}/ckpt").start()
-    )
-    try:
-        q.processAllAvailable()
-        rows = {(r.dim_id, r.tier)
-                for r in spark.sql("select * from sse_test").collect()}
-        # left join: unmatched stream rows survive with null tier
-        assert rows == {(1, "gold"), (2, "silver"), (9, None)}
-        # the property the helper exists for: the executed micro-batch
-        # plan BROADCASTS the static side (never shuffles the stream
-        # against it)
-        plan = q._jsq.explainInternal(False)
-        assert "BroadcastHashJoin" in plan, plan
-    finally:
-        q.stop()
-    shutil.rmtree(tmp, ignore_errors=True)
-
-
-# ---------------------------------------------------------------------------
-# resize kernel (r9): real nearest-neighbor over stdlib-decodable
-# rasters, normalized to P6 output
-# ---------------------------------------------------------------------------
-
-
-def _ppm_bytes(width, height, rgb):
-    return f"P6\n{width} {height}\n255\n".encode() + bytes(rgb)
-
-
-def test_resize_ppm_nearest_neighbor_golden():
-    from fbs_data_pipelines_spark.operators.multimodal import (
-        resize_image,
-    )
-
-    # 4x4 with four solid 2x2 quadrants: NN downsample to 2x2 must
-    # pick one pixel from each quadrant (pixel-center sampling lands
-    # at indices 1 and 3)
-    Q = {
-        (0, 0): (255, 0, 0), (0, 1): (0, 255, 0),
-        (1, 0): (0, 0, 255), (1, 1): (255, 255, 0),
-    }
-    rgb = bytearray()
-    for y in range(4):
-        for x in range(4):
-            rgb += bytes(Q[(y // 2, x // 2)])
-    out = resize_image(_ppm_bytes(4, 4, rgb), 2, 2)
-    assert out.startswith(b"P6\n2 2\n255\n")
-    pix = out[out.index(b"255\n") + 4 :]
-    assert bytes(pix) == bytes(
-        bytes(Q[(0, 0)]) + bytes(Q[(0, 1)]) + bytes(Q[(1, 0)]) + bytes(Q[(1, 1)])
-    )
-
-
-def test_resize_png_grey_and_rgba_normalize_to_rgb():
-    from fbs_data_pipelines_spark.operators.multimodal import (
-        decode_ppm,
-        resize_image,
-    )
-
-    # 2x2 grey PNG upsampled to 4x4: grey replicates to RGB, every
-    # quadrant solid
-    png = _png_encode(2, 2, bytes([10, 200, 60, 120]), channels=1)
-    out = resize_image(png, 4, 4)
-    w, h, luma = decode_ppm(out)
-    assert (w, h) == (4, 4)
-    # mean luma preserved exactly under 2x NN upsampling
-    assert luma == round((10 + 200 + 60 + 120) / 4 / 255.0, 6)
-    # RGBA PNG: alpha drops
-    rgba = _png_encode(1, 1, bytes([9, 8, 7, 255]), channels=4)
-    out2 = resize_image(rgba, 2, 2)
-    pix = out2[out2.index(b"255\n") + 4 :]
-    assert bytes(pix) == bytes([9, 8, 7] * 4)
-
-
-def test_resize_bmp_bottom_up_orientation():
-    from fbs_data_pipelines_spark.operators.multimodal import (
-        resize_image,
-    )
-
-    # 1x2 bottom-up BMP (the encoder flips to file order itself):
-    # resize output must be top-down (red on top, blue below)
-    top = (255, 0, 0)
-    bottom = (0, 0, 255)
-    flat_bgr_image_order = bytes(
-        (top[2], top[1], top[0], bottom[2], bottom[1], bottom[0])
-    )
-    bmp = _bmp_encode(1, 2, flat_bgr_image_order, bpp=24, top_down=False)
-    out = resize_image(bmp, 1, 2)
-    pix = out[out.index(b"255\n") + 4 :]
-    assert bytes(pix) == bytes(top) + bytes(bottom)
-
-
-def test_resize_images_kernel_marks_codec_bound(spark):
-    from fbs_data_pipelines_spark.operators.multimodal import (
-        resize_images,
-    )
-
-    rgb = bytes([255, 0, 0] * 9)
-    rows = [
-        (1, bytearray(_ppm_bytes(3, 3, rgb))),
-        (2, bytearray(b"\xff\xd8\xff\xe0FAKEJPEG")),  # codec-bound
-        (3, bytearray(b"garbage")),
-    ]
-    df = spark.createDataFrame(rows, "media_id long, content binary")
-    out = {r["media_id"]: r for r in resize_images(df, target_w=2, target_h=2).collect()}
-    assert out[1]["out_format"] == "ppm"
-    assert (out[1]["width"], out[1]["height"]) == (2, 2)
-    assert bytes(out[1]["resized"]).startswith(b"P6\n2 2\n")
-    assert out[2]["out_format"].startswith("!")
-    assert out[2]["resized"] is None
-    assert out[3]["out_format"].startswith("!")
-
-
-# ---------------------------------------------------------------------------
-# audio resample kernel (r9): linear-interp PCM resampling
-# ---------------------------------------------------------------------------
-
-
-def test_resample_wav_exact_down_and_interp_up():
-    from fbs_data_pipelines_spark.operators.multimodal import (
-        _wav_samples,
-        resample_wav,
-    )
-
-    # mono 8 kHz ramp: 2x downsample picks every other frame exactly
-    samples = list(range(0, 1600, 100))  # 16 frames
-    wav = _wav_encode(samples, n_channels=1, rate=8000, bits=16)
-    down = resample_wav(wav, 4000)
-    rate, ch, arr = _wav_samples(down)
-    assert (rate, ch) == (4000, 1)
-    assert arr[:, 0].tolist() == samples[0::2]
-    # 2x upsample: midpoints linearly interpolated
-    up = resample_wav(wav, 16000)
-    rate2, _, arr2 = _wav_samples(up)
-    assert rate2 == 16000
-    assert arr2[0, 0] == samples[0]
-    assert arr2[1, 0] == (samples[0] + samples[1]) // 2
-    assert arr2[2, 0] == samples[1]
-
-
-def test_resample_wav_stereo_and_8bit():
-    from fbs_data_pipelines_spark.operators.multimodal import (
-        _wav_samples,
-        resample_wav,
-    )
-
-    # stereo: channels resample independently
-    inter = []
-    left = [0, 1000, 2000, 3000]
-    right = [4000, 3000, 2000, 1000]
-    for l_s, r_s in zip(left, right):
-        inter += [l_s, r_s]
-    wav = _wav_encode(inter, n_channels=2, rate=8000, bits=16)
-    out = resample_wav(wav, 4000)
-    _, ch, arr = _wav_samples(out)
-    assert ch == 2
-    assert arr[:, 0].tolist() == left[0::2]
-    assert arr[:, 1].tolist() == right[0::2]
-
-
-def test_resample_audio_kernel_marks_non_wav(spark):
-    from fbs_data_pipelines_spark.operators.multimodal import (
-        resample_audio,
-    )
-
-    wav = _wav_encode(list(range(0, 800, 100)), n_channels=1,
-                      rate=8000, bits=16)
-    rows = [
-        (1, bytearray(wav)),
-        (2, bytearray(b"ID3\x03\x00FAKEMP3")),  # codec-bound
-    ]
-    df = spark.createDataFrame(rows, "media_id long, content binary")
-    out = {
-        r["media_id"]: r
-        for r in resample_audio(df, target_rate=4000).collect()
-    }
-    assert out[1]["out_format"] == "wav"
-    assert out[1]["sample_rate"] == 4000
-    assert out[1]["n_frames"] == 4
-    assert out[2]["out_format"].startswith("!")
-    assert out[2]["resampled"] is None
-
-
-# ---------------------------------------------------------------------------
-# video frame sampling (r9): REAL over animated GIF
-# ---------------------------------------------------------------------------
-
-
-def _gif_append_frame(gif_bytes, width, height, indices, min_code=2):
-    """Append another frame (same global palette) before the trailer."""
-    import struct
-
-    clear, end = 1 << min_code, (1 << min_code) + 1
-    code_size = min_code + 1
-    acc = nbits = 0
-    data = bytearray()
-
-    def emit(code):
-        nonlocal acc, nbits
-        acc |= code << nbits
-        nbits += code_size
-        while nbits >= 8:
-            data.append(acc & 0xFF)
-            acc >>= 8
-            nbits -= 8
-
-    emit(clear)
-    for idx in indices:
-        emit(idx)
-        emit(clear)
-    emit(end)
-    if nbits:
-        data.append(acc & 0xFF)
-    frame = bytearray(b"\x2c")
-    frame += struct.pack("<HHHHB", 0, 0, width, height, 0)
-    frame.append(min_code)
-    for i in range(0, len(data), 255):
-        block = data[i : i + 255]
-        frame.append(len(block))
-        frame += block
-    frame += b"\x00"
-    return gif_bytes[:-1] + bytes(frame) + b"\x3b"
-
-
-def test_gif_frames_enumerates_animation():
-    from fbs_data_pipelines_spark.operators.multimodal import gif_frames
-
-    pal = [(255, 0, 0), (0, 255, 0), (0, 0, 255), (255, 255, 255)]
-    gif = _gif_encode(2, 1, pal, [0, 1])          # frame 0: red, green
-    gif = _gif_append_frame(gif, 2, 1, [2, 3])    # frame 1: blue, white
-    gif = _gif_append_frame(gif, 2, 1, [3, 3])    # frame 2: white, white
-    frames = list(gif_frames(gif))
-    assert [f[0] for f in frames] == [0, 1, 2]
-    assert frames[0][5] == bytes((255, 0, 0, 0, 255, 0))
-    assert frames[1][5] == bytes((0, 0, 255, 255, 255, 255))
-    assert frames[2][5] == bytes((255, 255, 255, 255, 255, 255))
-
-
-def test_sample_video_frames_stride_and_err(spark):
-    from fbs_data_pipelines_spark.operators.multimodal import (
-        sample_video_frames,
-    )
-
-    pal = [(255, 0, 0), (0, 255, 0), (0, 0, 255), (255, 255, 255)]
-    gif = _gif_encode(2, 1, pal, [0, 1])
-    gif = _gif_append_frame(gif, 2, 1, [2, 3])
-    gif = _gif_append_frame(gif, 2, 1, [3, 3])
-    rows = [
-        (1, bytearray(gif)),
-        (2, bytearray(b"\x00\x00\x00\x18ftypmp42FAKE")),  # codec-bound
-    ]
-    df = spark.createDataFrame(rows, "media_id long, content binary")
-    out = sample_video_frames(df, every_n=2).collect()
-    by_id = {}
-    for r in out:
-        by_id.setdefault(r["media_id"], []).append(r)
-    sampled = sorted(r["frame_idx"] for r in by_id[1])
-    assert sampled == [0, 2]  # stride 2 over frames 0,1,2
-    f0 = [r for r in by_id[1] if r["frame_idx"] == 0][0]
-    assert bytes(f0["frame"]).startswith(b"P6\n2 1\n255\n")
-    # frame 0 = red + green: Rec.601 mean
-    assert f0["mean_luma"] == round(
-        (0.299 * 255 + 0.587 * 255) / 2 / 255.0, 6
-    )
-    assert by_id[2][0]["err"].startswith("!")
-    assert by_id[2][0]["frame"] is None
 
 
 def test_windowed_ohlc_streaming_matches_batch(spark):

@@ -409,22 +409,6 @@ def test_shared_spans_equal_bruteforce_lcs(spark):
                 assert (i, j) not in got
 
 
-# --- transformWithState environment gate ---------------------------------
-
-def test_tws_operators_gate_without_protobuf(spark, monkeypatch):
-    """Where google.protobuf is absent the TWS operators must fail
-    fast with an actionable message, not crash the streaming query
-    driver mid-run (tests/test_stateful_tws.py runs them for real —
-    the vendored runtime makes the dependency always available here,
-    so the gate path is exercised by simulating its absence)."""
-    from fbs_data_pipelines_spark.streaming import stateful
-
-    monkeypatch.setattr(stateful, "HAS_TWS_DEPS", False)
-    df = spark.readStream.format("rate").load()
-    with pytest.raises(ImportError, match="protobuf"):
-        stateful.streaming_first_seen(df, "value")
-
-
 # --- incremental (batch-vs-corpus) dedup ---------------------------------
 
 def test_incremental_dedup_drops_seen_and_in_batch(spark):

@@ -1,11 +1,11 @@
-"""Round-5 additions: first-seen batch twin, budget_sample thinning
+"""Round-5 additions: first-seen admission, budget_sample thinning
 interplay, gate-rotation registry invariants."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from fbs_data_pipelines_spark.streaming.stateful import first_seen_batch
+from fbs_data_pipelines_spark.operators.dedup import first_seen_batch
 
 
 def test_first_seen_batch_admits_first_arrival_per_key(spark):
@@ -23,7 +23,7 @@ def test_first_seen_batch_admits_first_arrival_per_key(spark):
 def test_first_seen_state_loop_matches_one_shot(spark):
     # replaying in batches with carried state (the q_first_seen shape)
     # must equal the one-shot window over the full log — the property
-    # that makes the batch query a faithful twin of the streaming op
+    # that makes the three-batch replay exactly-once per key
     rows = [(i, f"u{i % 7}", float(i)) for i in range(40)]
     df = spark.createDataFrame(rows, "event_id long, user_id string, v double")
     one_shot = {

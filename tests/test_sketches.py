@@ -1,4 +1,5 @@
-"""HyperLogLog: accuracy, mergeability, and state size."""
+"""Engine-portable sketches (HLL, count-min, priority-sample quantiles,
+KMV): accuracy, determinism and state size."""
 
 import pyspark.sql.functions as F
 import pytest
@@ -7,7 +8,6 @@ from fbs_data_pipelines_spark.operators.sketches import (
     approx_distinct,
     expected_rel_error,
     hll_estimate,
-    hll_merge,
     hll_state,
 )
 
@@ -28,25 +28,6 @@ def test_estimate_within_error_bounds(spark, sf_dir):
     for k, e in exact.items():
         # 5 sigma of the theoretical 1.04/sqrt(m) standard error
         assert got[k] == pytest.approx(e, rel=5 * expected_rel_error())
-
-
-def test_merge_equals_single_pass(spark, sf_dir):
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    halves = [li.filter(F.col("l_orderkey") % 2 == i) for i in range(2)]
-    s = hll_merge(
-        hll_state(halves[0], ["l_returnflag"], "l_partkey"),
-        hll_state(halves[1], ["l_returnflag"], "l_partkey"),
-        ["l_returnflag"],
-    )
-    merged = {
-        (r.l_returnflag,): r.approx_distinct
-        for r in hll_estimate(s, ["l_returnflag"]).collect()
-    }
-    single = {
-        (r.l_returnflag,): r.approx_distinct
-        for r in approx_distinct(li, ["l_returnflag"], "l_partkey").collect()
-    }
-    assert merged == single  # exactly: registers are max-mergeable
 
 
 def test_state_is_bounded_and_null_safe(spark):
@@ -84,30 +65,6 @@ def test_cms_never_undercounts_and_is_tight(spark, sf_dir):
         assert got[k] <= e + 3 * n_total / 1024  # ~e*N/w bound, slack 3x
 
 
-def test_cms_merge_equals_single_pass(spark, sf_dir):
-    from fbs_data_pipelines_spark.operators.sketches import (
-        cms_lookup,
-        cms_merge,
-        cms_state,
-    )
-
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    halves = [li.filter(F.col("l_orderkey") % 2 == i) for i in range(2)]
-    merged_state = cms_merge(
-        cms_state(halves[0], "l_suppkey"), cms_state(halves[1], "l_suppkey")
-    )
-    keys = li.select("l_suppkey").distinct()
-    a = {
-        r.l_suppkey: r.approx_count
-        for r in cms_lookup(merged_state, keys, "l_suppkey").collect()
-    }
-    b = {
-        r.l_suppkey: r.approx_count
-        for r in cms_lookup(cms_state(li, "l_suppkey"), keys, "l_suppkey").collect()
-    }
-    assert a == b
-
-
 def test_cms_absent_key_estimates_small(spark):
     from fbs_data_pipelines_spark.operators.sketches import (
         cms_lookup,
@@ -123,35 +80,6 @@ def test_cms_absent_key_estimates_small(spark):
 
 
 # --- bottom-k quantile sketch -------------------------------------------
-
-
-def test_qsketch_merge_equals_single_pass(spark, sf_dir):
-    """Merge exactness holds whenever each input state is untruncated
-    (its per-group distinct counts <= k+1): states are then lossless
-    count tables and union+sum+recompute+re-top-k reproduces the
-    single-pass state row-for-row. 50 distinct values, k=64."""
-    from fbs_data_pipelines_spark.operators.sketches import (
-        qsketch_merge,
-        qsketch_state,
-    )
-
-    df = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
-        "o_orderstatus",
-        F.pmod(F.floor(F.col("o_totalprice") * 100).cast("long"), F.lit(50)).alias("v"),
-    )
-    half_a = df.filter(F.col("v") % 2 == 0)
-    half_b = df.filter(F.col("v") % 2 != 0)
-    single = qsketch_state(df, ["o_orderstatus"], "v", k=64)
-    merged = qsketch_merge(
-        qsketch_state(half_a, ["o_orderstatus"], "v", k=64),
-        qsketch_state(half_b, ["o_orderstatus"], "v", k=64),
-        ["o_orderstatus"],
-        k=64,
-    )
-    # full weighted rows (value, cnt, priority, n_total) must agree
-    s = {tuple(r) for r in single.collect()}
-    m = {tuple(r) for r in merged.select(*single.columns).collect()}
-    assert s == m
 
 
 def test_qsketch_heavy_value_always_sampled(spark):
@@ -185,13 +113,11 @@ def test_qsketch_heavy_value_always_sampled(spark):
     assert est[0.5] == 9_999
 
 
-def test_qsketch_merge_preserves_multiplicity(spark):
-    """r7 advisor regression: merging states whose row sets are
-    disjoint but whose VALUE sets overlap must keep multiplicities.
-    900×0 + 100×100 split down the middle: the merged median must be 0
-    (rank 500 of 1000), not a distinct-value artifact."""
+def test_qsketch_state_keeps_multiplicity(spark):
+    """r7 advisor regression: the state carries each value's full
+    multiplicity, so quantiles weigh values by count, not by distinct
+    value. 900×0 + 100×100: the median must be 0 (rank 500 of 1000)."""
     from fbs_data_pipelines_spark.operators.sketches import (
-        qsketch_merge,
         qsketch_quantiles,
         qsketch_state,
     )
@@ -200,23 +126,12 @@ def test_qsketch_merge_preserves_multiplicity(spark):
     df = spark.createDataFrame(rows, "id long, v long").withColumn(
         "g", F.lit("all")
     )
-    a = df.filter(F.col("id") < 500)   # 500×0
-    b = df.filter(F.col("id") >= 500)  # 400×0 + 100×100
-    merged = qsketch_merge(
-        qsketch_state(a, ["g"], "v", k=64),
-        qsketch_state(b, ["g"], "v", k=64),
-        ["g"],
-        k=64,
-    )
-    state_rows = {(r["value"], r["cnt"], r["n_total"]) for r in merged.collect()}
+    st = qsketch_state(df, ["g"], "v", k=64)
+    state_rows = {(r["value"], r["cnt"], r["n_total"]) for r in st.collect()}
     assert state_rows == {(0, 900, 1000), (100, 100, 1000)}
-    single = qsketch_state(df, ["g"], "v", k=64)
-    assert {tuple(r) for r in merged.select(*single.columns).collect()} == {
-        tuple(r) for r in single.collect()
-    }
     est = {
         r["q"]: r["approx_value"]
-        for r in qsketch_quantiles(merged, ["g"], [0.5, 0.95]).collect()
+        for r in qsketch_quantiles(st, ["g"], [0.5, 0.95]).collect()
     }
     assert est[0.5] == 0     # rank 500 of 1000 falls in the 900×0 mass
     assert est[0.95] == 100  # rank 950 falls in the 100×100 tail
@@ -269,7 +184,6 @@ def test_qsketch_quantiles_within_rank_error(spark, sf_dir):
 
 def test_kmv_exact_under_k(spark):
     from fbs_data_pipelines_spark.operators.sketches import (
-        kmv_estimate,
         kmv_intersect_estimate,
         kmv_state,
     )
@@ -280,7 +194,6 @@ def test_kmv_exact_under_k(spark):
     )
     sa = kmv_state(a, ["g"], "v", k=256)
     sb = kmv_state(b, ["g"], "v", k=256)
-    assert kmv_estimate(sa, ["g"], k=256).collect()[0]["est_distinct"] == 100.0
     row = kmv_intersect_estimate(sa, sb, ["g"], k=256).collect()[0]
     # both untruncated: everything is EXACT
     assert (row["est_a"], row["est_b"], row["est_intersection"]) == (
@@ -290,37 +203,10 @@ def test_kmv_exact_under_k(spark):
     )
 
 
-def test_kmv_merge_exact_and_idempotent(spark):
-    from fbs_data_pipelines_spark.operators.sketches import (
-        kmv_merge,
-        kmv_state,
-    )
-
-    df = spark.range(5000).select(
-        F.lit("g").alias("g"), F.col("id").alias("v")
-    )
-    single = kmv_state(df, ["g"], "v", k=64)
-    halves = kmv_merge(
-        kmv_state(df.filter(F.col("v") % 2 == 0), ["g"], "v", k=64),
-        kmv_state(df.filter(F.col("v") % 2 != 0), ["g"], "v", k=64),
-        ["g"],
-        k=64,
-    )
-    assert {r["hv"] for r in single.collect()} == {
-        r["hv"] for r in halves.collect()
-    }
-    # OVERLAPPING inputs are fine too (hash dedup): state ∪ itself = state
-    self_merge = kmv_merge(single, single, ["g"], k=64)
-    assert {r["hv"] for r in self_merge.collect()} == {
-        r["hv"] for r in single.collect()
-    }
-
-
 def test_kmv_estimate_and_intersection_accuracy(spark):
     import math
 
     from fbs_data_pipelines_spark.operators.sketches import (
-        kmv_estimate,
         kmv_intersect_estimate,
         kmv_state,
     )
@@ -333,50 +219,11 @@ def test_kmv_estimate_and_intersection_accuracy(spark):
     )
     sa = kmv_state(a, ["g"], "v", k=k)
     sb = kmv_state(b, ["g"], "v", k=k)
-    est = kmv_estimate(sa, ["g"], k=k).collect()[0]["est_distinct"]
-    assert abs(est - 6000) / 6000 < 4 / math.sqrt(k)  # 4σ
     row = kmv_intersect_estimate(sa, sb, ["g"], k=k).collect()[0]
+    # per-side distinct estimate (k−1)/θ of a truncated state
+    for est in (row["est_a"], row["est_b"]):
+        assert abs(est - 6000) / 6000 < 4 / math.sqrt(k)  # 4σ
     # intersection error compounds (sample of the overlap at rate θ):
     # allow a loose 1/3 relative band — the point is unbiasedness and
     # determinism, verified exactly by the oracle harness
     assert abs(row["est_intersection"] - 2000) / 2000 < 1 / 3
-
-
-def test_qsketch_truncated_merge_keeps_heavy_values(spark):
-    """Merge under truncation is one-sided, but the heavy-value
-    guarantee SURVIVES it: priorities are recomputed from the SUMMED
-    counts, so any value whose merged multiplicity exceeds the merged
-    threshold is kept even when both input states were truncated.
-    Two disjoint halves of (20k distinct light values + one value at
-    30% of the mass split across both halves), k=64: the heavy value
-    must be in the merged state and be the merged median."""
-    from fbs_data_pipelines_spark.operators.sketches import (
-        qsketch_merge,
-        qsketch_quantiles,
-        qsketch_state,
-    )
-
-    light = spark.range(20_000).select(
-        F.lit("g").alias("g"),
-        (F.col("id") * 2).alias("v"),
-        (F.col("id") % 2).alias("half"),
-    )
-    heavy = spark.range(10_000).select(
-        F.lit("g").alias("g"),
-        F.lit(20_001).cast("long").alias("v"),
-        (F.col("id") % 2).alias("half"),
-    )
-    df = light.unionByName(heavy)
-    a = qsketch_state(df.filter(F.col("half") == 0), ["g"], "v", k=64)
-    b = qsketch_state(df.filter(F.col("half") == 1), ["g"], "v", k=64)
-    # both inputs truncated (10k+ distinct values each, k=64)
-    assert a.count() == 65 and b.count() == 65
-    merged = qsketch_merge(a, b, ["g"], k=64)
-    kept = {r["value"]: r["cnt"] for r in merged.collect()}
-    assert kept.get(20_001) == 10_000  # full multiplicity, both halves
-    est = {
-        r["q"]: r["approx_value"]
-        for r in qsketch_quantiles(merged, ["g"], [0.5], k=64).collect()
-    }
-    # heavy value spans ranks 10k..20k of 30k: it IS the median
-    assert est[0.5] == 20_001

@@ -188,64 +188,6 @@ def test_sql_front_door(spark):
     assert out.count() == 3
 
 
-def test_write_training_shards_balanced_and_deterministic(spark, tmp_path):
-    import glob
-
-    from fbs_data_pipelines_spark.sinks.writers import write_training_shards
-
-    df = spark.createDataFrame(
-        [(i, f"doc-{i}") for i in range(2000)], "doc_id long, text string"
-    )
-    p1, p2 = str(tmp_path / "s1"), str(tmp_path / "s2")
-    write_training_shards(df, p1, n_shards=8, key_col="doc_id", salt="e0")
-    write_training_shards(
-        df.repartition(13), p2, n_shards=8, key_col="doc_id", salt="e0"
-    )
-
-    files1 = sorted(glob.glob(f"{p1}/part-*.parquet"))
-    assert len(files1) == 8
-    # balanced: no shard more than 2x the ideal size
-    sizes = [
-        spark.read.parquet(f).count() for f in files1
-    ]
-    assert sum(sizes) == 2000
-    assert max(sizes) < 2 * (2000 / 8)
-
-    # nothing lost, and the global ORDER is reproducible independent
-    # of input partitioning (hash-ordered read-back comparison)
-    a = [r["doc_id"] for r in spark.read.parquet(p1).collect()]
-    assert sorted(a) == list(range(2000))
-
-    # per-shard membership identical across the two writes
-    for f1 in files1:
-        name = f1.split("/")[-1].split("-")[1]  # part index
-        f2 = [f for f in glob.glob(f"{p2}/part-*.parquet")
-              if f.split("/")[-1].split("-")[1] == name]
-        if not f2:
-            continue
-        s1 = {r["doc_id"] for r in spark.read.parquet(f1).collect()}
-        s2 = {r["doc_id"] for r in spark.read.parquet(f2[0]).collect()}
-        assert s1 == s2
-
-
-def test_write_training_shards_salt_reshuffles(spark, tmp_path):
-    import glob
-
-    from fbs_data_pipelines_spark.sinks.writers import write_training_shards
-
-    df = spark.createDataFrame(
-        [(i, "x") for i in range(500)], "doc_id long, text string"
-    )
-    pa, pb = str(tmp_path / "a"), str(tmp_path / "b")
-    write_training_shards(df, pa, 4, "doc_id", salt="epoch1")
-    write_training_shards(df, pb, 4, "doc_id", salt="epoch2")
-    fa = sorted(glob.glob(f"{pa}/part-*.parquet"))[0]
-    fb = sorted(glob.glob(f"{pb}/part-*.parquet"))[0]
-    sa = {r["doc_id"] for r in spark.read.parquet(fa).collect()}
-    sb = {r["doc_id"] for r in spark.read.parquet(fb).collect()}
-    assert sa != sb  # different epoch salt → different shard contents
-
-
 def test_orc_and_json_roundtrip(spark, tmp_path):
     """Format breadth: the engine's tables round-trip through ORC and
     JSONL sinks/sources losslessly (schema passed explicitly on the
