@@ -38,13 +38,11 @@ from fbs_data_pipelines_spark.functions.text import (
     STOPWORDS,
     TOKEN_PATTERN,
     doc_fingerprint,
-    language_id,
     normalize_text,
     quality_score,
-    token_count,
     whitespace_token_count,
 )
-from fbs_data_pipelines_spark.functions.vectors import cosine_similarity, l2_norm
+from fbs_data_pipelines_spark.functions.vectors import l2_norm
 from fbs_data_pipelines_spark.operators.audit import authlog_table, merge_snapshot
 from fbs_data_pipelines_spark.operators.dedup import (
     dedup_exact,
@@ -2274,8 +2272,7 @@ _BPE_MERGES = [
 
 
 def q_bpe_encode(spark, sf_dir):
-    """Distributed BPE ENCODING (operators/bpe.py bpe_encode — the
-    apply path of the tokenizer whose training is bpe_train): every
+    """Distributed BPE ENCODING (operators/bpe.py bpe_encode): every
     word starts as characters+</w> and applies the fixed merge list
     in rank order as a chain of JVM array folds — no Python in the
     row path, zero shuffles (narrow projection). The oracle replays
@@ -3972,8 +3969,9 @@ def q_record_linkage(spark, sf_dir):
     (segment, name tail-5); the tail-5 key's cardinality GROWS with
     the corpus (names are zero-padded sequence numbers), so block
     sizes — and the candidate count — stay linear at scale (a
-    fixed-cardinality key saturates and goes quadratic; measured in
-    tools/shuffle_audit.py) — so a single perturbed field can't hide a
+    fixed-cardinality key saturates and goes quadratic: its shuffle
+    bytes grew super-linearly between two scale factors) — so a
+    single perturbed field can't hide a
     pair; per-field agreement weights (+4/−2 name, +3/−2 nation,
     +2/−1 balance within 0.05, +1/−1 segment); threshold 4.0 (a
     doubly-perturbed pair legitimately falls below — linkage is

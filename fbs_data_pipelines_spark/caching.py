@@ -22,7 +22,7 @@ sites can apply it unconditionally. Derived DataFrames
 (``pairs.orderBy(...)`` etc.) do NOT carry the scope — keep a handle
 on the operator's direct result, or transform inside the operator.
 
-Unpersisting is non-blocking by default: Spark drops the cache entry
+Unpersisting is non-blocking: Spark drops the cache entry
 immediately from the CacheManager and frees blocks asynchronously;
 an in-flight job that still references the plan simply recomputes.
 """
@@ -71,15 +71,15 @@ class CacheScope:
         self._checkpoints.remove(df)
         df._jdf.logicalPlan().rdd().unpersist(False)
 
-    def release(self, blocking: bool = False) -> None:
+    def release(self) -> None:
         for d in self._dfs:
             try:
-                d.unpersist(blocking)
+                d.unpersist()
             except Exception:
                 pass  # session already stopped — nothing to free
         for d in self._checkpoints:
             try:
-                d._jdf.logicalPlan().rdd().unpersist(blocking)
+                d._jdf.logicalPlan().rdd().unpersist(False)
             except Exception:
                 pass
         self._dfs.clear()
@@ -91,13 +91,14 @@ class CacheScope:
         return result
 
 
-def release_cache(df: DataFrame, blocking: bool = False) -> None:
-    """Free the cached intermediates behind an operator result.
+def release_cache(df: DataFrame) -> None:
+    """Free the cached intermediates behind an operator result,
+    without blocking.
 
     No-op for DataFrames that don't carry a scope."""
     scope = getattr(df, _ATTR, None)
     if scope is not None:
-        scope.release(blocking)
+        scope.release()
 
 
 def carry_cache(dst: DataFrame, src: DataFrame) -> DataFrame:

@@ -5,61 +5,3 @@ expressions (SURVEY §2.7–2.9). Everything here returns a
 ``pyspark.sql.Column`` built from built-in functions — JVM-side,
 codegen-friendly, no Python UDFs.
 """
-
-from fbs_data_pipelines_spark.functions.cleaning import (
-    clean_percent,
-    decimal_comma_to_double,
-    empty_to_null,
-    empty_to_null_all,
-    map_values,
-    nan_to_null,
-    nan_to_null_all,
-    split_part,
-    split_unnest,
-)
-from fbs_data_pipelines_spark.functions.dates import (
-    datediff_days,
-    format_dates_for_export,
-    parse_flexible_date,
-    parse_timestamp,
-)
-from fbs_data_pipelines_spark.functions.text import (
-    doc_fingerprint,
-    language_id,
-    normalize_text,
-    quality_score,
-    token_count,
-    tokens,
-    word_shingles,
-)
-from fbs_data_pipelines_spark.functions.vectors import (
-    cosine_similarity,
-    dot_product,
-    l2_norm,
-)
-
-__all__ = [
-    "clean_percent",
-    "decimal_comma_to_double",
-    "empty_to_null",
-    "empty_to_null_all",
-    "map_values",
-    "nan_to_null",
-    "nan_to_null_all",
-    "split_part",
-    "split_unnest",
-    "datediff_days",
-    "format_dates_for_export",
-    "parse_flexible_date",
-    "parse_timestamp",
-    "normalize_text",
-    "tokens",
-    "token_count",
-    "word_shingles",
-    "language_id",
-    "quality_score",
-    "doc_fingerprint",
-    "cosine_similarity",
-    "dot_product",
-    "l2_norm",
-]

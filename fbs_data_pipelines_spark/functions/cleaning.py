@@ -73,12 +73,6 @@ def empty_to_null_all(df: DataFrame) -> DataFrame:
     )
 
 
-def nan_to_null(c: Column | str) -> Column:
-    """Float NaN → null (N5)."""
-    col = _col(c)
-    return F.when(F.isnan(col), F.lit(None)).otherwise(col)
-
-
 def nan_to_null_all(df: DataFrame) -> DataFrame:
     """NaN→null for every float/double column (N5,
     /root/reference/src/transformation_layer.py:118)."""
@@ -164,13 +158,3 @@ def cast_all_to_string(df: DataFrame) -> DataFrame:
     """Every column → string (N9, pre-union alignment,
     /root/reference/src/log_handler.py:119-125)."""
     return df.select(*[F.col(c).cast("string").alias(c) for c in df.columns])
-
-
-def fold_accents(c: Column | str) -> Column:
-    """Latin-accent folding (á→a, ñ→n, ü→u, …) — the normalization the
-    reference's domain needs before name matching/grouping (accented
-    Spanish column values throughout creditos/radicados). Pure
-    ``translate`` (codegen'd char map), both cases covered."""
-    src = "áàâäãåéèêëíìîïóòôöõúùûüýÿñçÁÀÂÄÃÅÉÈÊËÍÌÎÏÓÒÔÖÕÚÙÛÜÝÑÇ"
-    dst = "aaaaaaeeeeiiiiooooouuuuyyncAAAAAAEEEEIIIIOOOOOUUUUYNC"
-    return F.translate(_col(c), src, dst)

@@ -1,23 +1,10 @@
-"""Distributed BPE tokenizer training (Sennrich et al. 2016,
-"Neural Machine Translation of Rare Words with Subword Units").
+"""BPE subword encoding (Sennrich et al. 2016, "Neural Machine
+Translation of Rare Words with Subword Units") with a given merge
+list.
 
-Training a tokenizer IS a corpus job — the missing piece between raw
-text and the token counts everything else here consumes. The
-distributed shape follows the original algorithm's own decomposition:
-
-- The ONLY corpus-sized pass is word counting: one map-side-combined
-  shuffle producing the word-frequency table (vocabulary-sized).
-  100 TB of text collapses to millions of (word, count) rows.
-- Every merge iteration then runs on that small table: explode
-  adjacent symbol pairs weighted by word count (map-side-combined
-  aggregation), pick the argmax pair (ONE driver-side row — control
-  plane, like k-means centroids), and apply the merge to the symbol
-  arrays with a greedy left-to-right ``aggregate`` fold (pure JVM
-  expression, no UDF).
-
-Determinism: argmax ties break on (count DESC, left ASC, right ASC)
-via ``min_by`` over a struct — same winner on any engine, any
-partitioning, any day.
+Per word, start from characters + an end-of-word marker and apply
+every merge in rank order with a greedy left-to-right ``aggregate``
+fold — a chain of pure JVM array expressions, no UDF.
 """
 
 from __future__ import annotations
@@ -30,18 +17,6 @@ from fbs_data_pipelines_spark.operators.partitioning import ensure_parallelism
 
 #: end-of-word marker (classic BPE: distinguishes "est</w>" from "est")
 EOW = "</w>"
-
-
-def word_freq_table(docs: DataFrame, text_col: str) -> DataFrame:
-    """(word, count) over the normalized corpus — the one
-    corpus-sized pass; everything else operates on this table."""
-    return (
-        ensure_parallelism(docs)
-        .select(F.explode(tokens(text_col)).alias("word"))
-        .filter(F.col("word") != "")
-        .groupBy("word")
-        .agg(F.count("*").alias("count"))
-    )
 
 
 def _initial_symbols(word: Column) -> Column:
@@ -68,84 +43,6 @@ def _merge_expr(symbols: Column, left: str, right: str) -> Column:
             ),
         ).otherwise(F.concat(acc, F.array(x))),
     )
-
-
-def bpe_train(
-    word_freqs: DataFrame, num_merges: int = 50, min_pair_count: int = 2
-) -> list[dict]:
-    """Learn ``num_merges`` merges from a (word, count) table.
-
-    Returns [{rank, left, right, merged, pair_count}, ...] in merge
-    order. Stops early when no pair reaches ``min_pair_count``.
-    Each iteration: one aggregation over the vocabulary-sized symbol
-    table + one argmax row to the driver. The symbol table is
-    re-derived lazily per iteration from a checkpointed frame so the
-    plan doesn't deepen unboundedly (localCheckpoint every few
-    merges caps lineage exactly like the CC operator).
-    """
-    sym = word_freqs.select(
-        _initial_symbols(F.col("word")).alias("symbols"), "count"
-    )
-    merges: list[dict] = []
-    for rank in range(num_merges):
-        if rank and rank % 8 == 0:
-            sym = sym.localCheckpoint(eager=True)  # cap lineage depth
-        pairs = sym.select(
-            F.explode(
-                F.when(
-                    F.size("symbols") >= 2,
-                    F.transform(
-                        F.sequence(F.lit(1), F.size("symbols") - 1),
-                        lambda i: F.struct(
-                            F.element_at("symbols", i).alias("l"),
-                            F.element_at("symbols", i + 1).alias("r"),
-                        ),
-                    ),
-                )
-                .otherwise(F.array().cast("array<struct<l:string,r:string>>"))
-            ).alias("p"),
-            "count",
-        )
-        top = (
-            pairs.groupBy("p")
-            .agg(F.sum("count").alias("pair_count"))
-            .agg(
-                F.min_by(
-                    F.struct("p", "pair_count"),
-                    F.struct(
-                        (-F.col("pair_count")).alias("nc"),
-                        F.col("p.l").alias("l"),
-                        F.col("p.r").alias("r"),
-                    ),
-                ).alias("w")
-            )
-            .select("w.p.l", "w.p.r", "w.pair_count")
-            .first()
-        )
-        # an empty pair table yields ONE all-null row from the global
-        # min_by aggregate (not None) — e.g. a vocabulary that fully
-        # collapsed to single symbols before num_merges ran out
-        if (
-            top is None
-            or top["pair_count"] is None
-            or top["pair_count"] < min_pair_count
-        ):
-            break
-        left, right = top["l"], top["r"]
-        merges.append(
-            {
-                "rank": rank,
-                "left": left,
-                "right": right,
-                "merged": left + right,
-                "pair_count": int(top["pair_count"]),
-            }
-        )
-        sym = sym.select(
-            _merge_expr(F.col("symbols"), left, right).alias("symbols"),
-            "count",
-        )
-    return merges
 
 
 def bpe_encode(

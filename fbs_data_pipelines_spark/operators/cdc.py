@@ -39,11 +39,6 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-#: sequence value assigned to base-snapshot rows in
-#: ``cdc_apply_to_snapshot`` — below any real changelog sequence
-SNAPSHOT_SEQ = -(1 << 62)
-
-
 def cdc_winners(
     changelog: DataFrame,
     key_cols: Sequence[str],
@@ -103,93 +98,3 @@ def cdc_apply(
     consumers can resume)."""
     won = cdc_winners(changelog, key_cols, seq_col, op_col)
     return cdc_snapshot(won, op_col, delete_ops)
-
-
-def cdc_compact_tombstones(
-    state: DataFrame,
-    watermark_seq: int,
-    seq_col: str = "seq",
-    op_col: str = "op",
-    delete_ops: Sequence[str] = ("D",),
-) -> DataFrame:
-    """Drop delete tombstones at or below ``watermark_seq`` from a
-    winners-state table — the Kafka-log-compaction retention valve
-    for ``streaming_cdc_apply``'s state: tombstones guard against
-    cross-batch stragglers, so one may be removed only once upstream
-    GUARANTEES no event with ``seq <= watermark_seq`` can still
-    arrive (the caller's retention watermark — e.g. the CDC source's
-    low-watermark LSN). Live rows are never touched; tombstones above
-    the watermark stay, as does a tombstone with NULL seq (its
-    position relative to the watermark is unprovable — three-valued
-    `seq <= wm` must not silently discard it). A narrow filter: zero
-    shuffle, zero joins."""
-    op = F.col(op_col)
-    seq = F.col(seq_col)
-    keep = (
-        op.isNull()                      # NULL op is not a delete
-        | ~op.isin(*delete_ops)          # live row
-        | seq.isNull()                   # unprovable vs watermark: keep
-        | (seq > F.lit(watermark_seq))   # still guarding stragglers
-    )
-    return state.filter(keep)
-
-
-def compact_cdc_table(
-    spark,
-    table_path: str,
-    watermark_seq: int,
-    seq_col: str = "seq",
-    op_col: str = "op",
-    delete_ops: Sequence[str] = ("D",),
-) -> int:
-    """Compact a ``streaming_cdc_apply`` state table in place: commit
-    a new version with tombstones ≤ ``watermark_seq`` removed.
-
-    The live version's ``batch_id`` is CARRIED FORWARD into the
-    compaction commit's ``commit_meta`` — the fold's crash-replay
-    guard reads ``commit_info(live)["batch_id"]``, so a compaction
-    commit that dropped it would let a replayed micro-batch re-fold
-    onto compacted state (double-apply). Returns the new version."""
-    from fbs_data_pipelines_spark.sources.versioned import VersionedTable
-
-    t = VersionedTable(spark, table_path)
-    live = t.latest_version()
-    if live is None:
-        raise FileNotFoundError(f"no versions at {table_path}")
-    meta = dict(t.commit_info(live) or {})
-    meta["compaction_watermark_seq"] = watermark_seq
-    compacted = cdc_compact_tombstones(
-        t.read(live), watermark_seq, seq_col, op_col, delete_ops
-    )
-    return t.commit(compacted, commit_meta=meta)
-
-
-def cdc_apply_to_snapshot(
-    snapshot: DataFrame,
-    changelog: DataFrame,
-    key_cols: Sequence[str],
-    seq_col: str = "seq",
-    op_col: str = "op",
-    delete_ops: Sequence[str] = ("D",),
-) -> DataFrame:
-    """Roll a changelog onto an existing base snapshot: snapshot rows
-    enter the same reduction as pseudo-inserts at ``SNAPSHOT_SEQ``
-    (below every real sequence), so a single ``cdc_apply`` pass — one
-    shuffle, no join — yields the updated snapshot. The snapshot must
-    carry the key + payload columns (no seq/op)."""
-    keys = list(key_cols)
-    payload = [c for c in changelog.columns if c not in (*keys, seq_col, op_col)]
-    base = snapshot.select(
-        *keys,
-        F.lit(SNAPSHOT_SEQ).cast("long").alias(seq_col),
-        F.lit("I").alias(op_col),
-        *payload,
-    )
-    ordered = changelog.select(*keys, seq_col, op_col, *payload)
-    return cdc_apply(
-        base.unionByName(ordered),
-        keys,
-        seq_col=seq_col,
-        op_col=op_col,
-        delete_ops=delete_ops,
-    )

@@ -34,29 +34,29 @@ from fbs_data_pipelines_spark.functions.text import (
 )
 
 
-def _content_key(content_cols: list[str], normalize: bool):
-    """The canonical content hash every exact-dedup surface shares.
+def _content_key(content_cols: list[str]):
+    """The canonical content hash every exact-dedup surface shares:
+    md5 over the ``normalize_text`` form of each column.
     dedup_exact WRITES this key into the seen-hash state and
     incremental_dedup PROBES it — one definition, or a drifted edit
     would silently re-admit every previously seen document. The
     \x01 separator keeps multi-column content unambiguous
     (("ab","c") must not hash like ("a","bc"))."""
-    if normalize:
-        return F.md5(
-            F.concat_ws("\x01", *[normalize_text(c) for c in content_cols])
-        )
-    return F.md5(F.concat_ws("\x01", *content_cols))
+    return F.md5(
+        F.concat_ws("\x01", *[normalize_text(c) for c in content_cols])
+    )
 
 
 def dedup_exact(
-    df: DataFrame, id_col: str, content_cols: list[str], normalize: bool = True
+    df: DataFrame, id_col: str, content_cols: list[str]
 ) -> DataFrame:
-    """Keep the min-id row per distinct content (hash-groupBy).
+    """Keep the min-id row per distinct normalized content
+    (hash-groupBy).
 
     One shuffle on the content hash; map-side partial min. Returns the
     surviving ids + hash (join back to recover full rows).
     """
-    key = _content_key(content_cols, normalize)
+    key = _content_key(content_cols)
     return (
         df.select(F.col(id_col), key.alias("content_hash"))
         .groupBy("content_hash")
@@ -641,7 +641,6 @@ def incremental_dedup(
     seen_hashes: DataFrame,
     id_col: str,
     content_cols: list[str],
-    normalize: bool = True,
 ) -> DataFrame:
     """The production dedup shape: deduplicate an INCOMING batch
     against the already-ingested corpus without ever rescanning it.
@@ -661,7 +660,7 @@ def incremental_dedup(
     loop (append-only state; no read-modify-write races).
     """
     hashed = batch.withColumn(
-        "content_hash", _content_key(content_cols, normalize)
+        "content_hash", _content_key(content_cols)
     )
     # survivor set renamed to fresh attributes — a groupBy over the
     # same lineage would otherwise make the join keys ambiguous

@@ -137,78 +137,18 @@ def join_delta(
     on the join key (sources/versioned.py), the Δ-vs-state probes are
     shuffle-free on the state side.
 
-    Retractions: use ``join_delta_with_multiplicity`` (this is its
-    multiplicity-free insert-only special case — one decomposition,
-    expressed once).
-
     ``prev_a``/``prev_b`` are the bases BEFORE this step (None ⇒
     empty). Returns only the NEW joined rows; append them to the
     materialized result.
     """
-    return _delta_parts(
-        delta_a, prev_a, delta_b, prev_b, on, lambda a, b, keys: a.join(b, keys)
-    )
-
-
-def _delta_parts(delta_a, prev_a, delta_b, prev_b, on, emit):
-    """The shared three-part bag decomposition and union fold."""
     keys = [on] if isinstance(on, str) else list(on)
     parts = []
     if prev_b is not None:
-        parts.append(emit(delta_a, prev_b, keys))
+        parts.append(delta_a.join(prev_b, keys))
     if prev_a is not None:
-        parts.append(emit(prev_a, delta_b, keys))
-    parts.append(emit(delta_a, delta_b, keys))
+        parts.append(prev_a.join(delta_b, keys))
+    parts.append(delta_a.join(delta_b, keys))
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)
     return out
-
-
-def join_delta_with_multiplicity(
-    delta_a: DataFrame,
-    prev_a: DataFrame | None,
-    delta_b: DataFrame,
-    prev_b: DataFrame | None,
-    on: str | Sequence[str],
-    mult_col: str = "mult",
-) -> DataFrame:
-    """Retraction-capable maintenance step: every row carries a signed
-    multiplicity (+1 insert, -1 retract — the differential-dataflow
-    convention), and a joined row's multiplicity is the PRODUCT of
-    its inputs'. The same bag decomposition as ``join_delta`` then
-    maintains the join under deletes too: retracting a base row emits
-    its joined rows with negative multiplicity, and
-    ``consolidate`` nets them out.
-
-    State tables must be kept CONSOLIDATED between steps (consolidate
-    after appending each delta) or a retract-then-reinsert of the
-    same key would double-join against stale negative rows.
-    """
-    def tag(df: DataFrame, side: str) -> DataFrame:
-        return df.withColumnRenamed(mult_col, f"__m_{side}")
-
-    def emit(a: DataFrame, b: DataFrame, keys) -> DataFrame:
-        return (
-            tag(a, "a")
-            .join(tag(b, "b"), keys)
-            .withColumn(
-                mult_col, F.col("__m_a") * F.col("__m_b")
-            )
-            .drop("__m_a", "__m_b")
-        )
-
-    return _delta_parts(delta_a, prev_a, delta_b, prev_b, on, emit)
-
-
-def consolidate(
-    df: DataFrame, key_cols: Sequence[str], mult_col: str = "mult"
-) -> DataFrame:
-    """Net out multiplicities per distinct row (all columns in
-    ``key_cols``): sum the signed counts, drop rows that cancel to
-    zero. One map-side-combined shuffle on the row identity."""
-    return (
-        df.groupBy(*key_cols)
-        .agg(F.sum(mult_col).alias(mult_col))
-        .filter(F.col(mult_col) != 0)
-    )

@@ -6,19 +6,14 @@ the Splink/dedupe.io pipeline): candidate pairs come from UNION of
 cheap equi-join blocking passes (never all-pairs), each compared
 field contributes an agreement weight (log-odds style: positive on
 agree, negative on disagree, 0 on missing), pairs above a threshold
-are links, and an optional one-to-one resolution keeps the best
-right-record per left-record.
+are links, and a one-to-one resolution keeps the best right-record
+per left-record.
 
 Scale shape at 100 TB:
 
 - candidates = Σ_blocks |A_b|·|B_b| — bounded by the caller's
   blocking keys, NOT |A|·|B|; each pass is a plain shuffle equi-join
   on its key.
-- ``max_block_pairs`` guards skew: per-key counts on both sides are
-  combiner-reduced aggregates; keys whose pair product exceeds the
-  cap are dropped from that pass (broadcast keylist) — the standard
-  oversized-block rule, applied BEFORE the join fan-out, with the
-  dropped keys reported via ``blocked_out`` for auditability.
 - scoring is a narrow projection (CASE sums of literal weights);
   resolution is one per-left-key window over (keys, score) triples.
 - cross-pass de-duplication shuffles only the pair keys + carried
@@ -39,17 +34,13 @@ def blocked_pairs(
     a_key: str,
     b_key: str,
     blocking: Sequence[tuple[Column, Column]],
-    max_block_pairs: int | None = None,
 ) -> DataFrame:
     """Candidate pairs from a union of equi-join blocking passes.
 
     ``a``/``b`` columns arrive prefixed ``a_``/``b_`` in the output;
     each ``blocking`` element is ``(expr_over_a, expr_over_b)``
     producing that pass's join key **over the prefixed names**.
-    Pairs surviving any pass appear once. With ``max_block_pairs``,
-    keys whose per-pass |A_b|·|B_b| exceeds the cap are skipped in
-    that pass (they typically mean a degenerate key — empty phone,
-    default date — that would fan out quadratically).
+    Pairs surviving any pass appear once.
     """
     a2 = a.select([F.col(c).alias(f"a_{c}") for c in a.columns])
     b2 = b.select([F.col(c).alias(f"b_{c}") for c in b.columns])
@@ -61,16 +52,6 @@ def blocked_pairs(
         right = b2.withColumn("__bk", expr_b).filter(
             F.col("__bk").isNotNull()
         )
-        if max_block_pairs is not None:
-            ca = left.groupBy("__bk").agg(F.count("*").alias("__na"))
-            cb = right.groupBy("__bk").agg(F.count("*").alias("__nb"))
-            keep = (
-                ca.join(cb, "__bk")
-                .filter(F.col("__na") * F.col("__nb") <= max_block_pairs)
-                .select("__bk")
-            )
-            left = left.join(F.broadcast(keep), "__bk", "left_semi")
-            right = right.join(F.broadcast(keep), "__bk", "left_semi")
         passes.append(left.join(right, "__bk").drop("__bk"))
     out = passes[0]
     for p in passes[1:]:
@@ -108,26 +89,20 @@ def link_records(
     blocking: Sequence[tuple[Column, Column]],
     comparisons: Sequence[tuple[Column, float, float]],
     threshold: float,
-    top1: bool = True,
-    max_block_pairs: int | None = None,
 ) -> DataFrame:
     """End-to-end linkage: blocked candidates → scored pairs →
-    threshold → (optionally) the single best b-record per a-record
-    (ties broken by ascending ``b_key`` — deterministic). Returns
+    threshold → the single best b-record per a-record (ties broken by
+    ascending ``b_key`` — deterministic). Returns
     ``(a_<a_key>, b_<b_key>, score)``."""
-    pairs = blocked_pairs(a, b, a_key, b_key, blocking, max_block_pairs)
+    pairs = blocked_pairs(a, b, a_key, b_key, blocking)
     scored = score_pairs(pairs, comparisons)
     ak, bk = f"a_{a_key}", f"b_{b_key}"
     out = scored.filter(F.col("score") >= threshold).select(
         ak, bk, "score"
     )
-    if top1:
-        w = Window.partitionBy(ak).orderBy(
-            F.col("score").desc(), F.col(bk).asc()
-        )
-        out = (
-            out.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .drop("__rn")
-        )
-    return out
+    w = Window.partitionBy(ak).orderBy(F.col("score").desc(), F.col(bk).asc())
+    return (
+        out.withColumn("__rn", F.row_number().over(w))
+        .filter(F.col("__rn") == 1)
+        .drop("__rn")
+    )

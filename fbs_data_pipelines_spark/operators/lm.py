@@ -81,21 +81,17 @@ def lm_perplexity(
     model: DataFrame,
     vocab_size: int,
     alpha: float = 0.5,
-    broadcast_model: bool = True,
 ) -> DataFrame:
     """Score each document against a trained bigram model. Returns
     (id, n_bigrams, log_ppl): log-perplexity = mean negative ln-prob
     of the doc's bigrams; unseen bigrams/contexts fall back to the
-    smoothing mass. Docs with < 2 tokens score null."""
+    smoothing mass. Docs with < 2 tokens score null. The model and
+    its context table are broadcast."""
     b = ensure_parallelism(docs).select(
         F.col(id_col), F.explode(_bigrams(tokens(text_col))).alias("bg")
     ).select(id_col, "bg.w1", "bg.w2")
     contexts = model.select("w1", "c1").distinct()
-    m, ctx = (
-        (F.broadcast(model), F.broadcast(contexts))
-        if broadcast_model
-        else (model, contexts)
-    )
+    m, ctx = F.broadcast(model), F.broadcast(contexts)
     # two left joins: an unseen pair under a SEEN context must still
     # use that context's mass in the denominator
     scored = (

@@ -20,14 +20,11 @@ scalars per group, never the corpus).
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from fbs_data_pipelines_spark.functions.cleaning import round_half_up
 from fbs_data_pipelines_spark.operators.sampling import sample_bucket
 
 PACK_SCHEMA = T.StructType(
@@ -64,7 +61,7 @@ def pack_sequences(
         tok.cast("long").alias("n_tokens"),
     )
 
-    def pack(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def pack(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values("doc_id").reset_index(drop=True)
         pack_ids = []
         pack_id, used = 0, 0
@@ -81,22 +78,6 @@ def pack_sequences(
         return pdf[["doc_id", "bucket", "pack_id", "n_tokens"]]
 
     return src.groupBy("bucket").applyInPandas(pack, schema=PACK_SCHEMA)
-
-
-def pack_summary(packed: DataFrame, capacity: int) -> DataFrame:
-    """Fill-rate report per (bucket, pack): n_docs, tokens, fill ratio.
-    One map-side-combined groupBy over the packing output."""
-    return (
-        packed.groupBy("bucket", "pack_id")
-        .agg(
-            F.count("*").cast("long").alias("n_docs"),
-            F.sum("n_tokens").cast("long").alias("pack_tokens"),
-        )
-        .withColumn(
-            "fill",
-            round_half_up(F.col("pack_tokens") / F.lit(float(capacity)), 6),
-        )
-    )
 
 
 def chunk_documents(

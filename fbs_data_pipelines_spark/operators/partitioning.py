@@ -17,10 +17,7 @@ volume by the join selectivity).
 
 from __future__ import annotations
 
-from contextlib import contextmanager
-from typing import Iterator
-
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 
 def ensure_parallelism(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
@@ -62,15 +59,6 @@ def salted_join(
     return l_salted.join(r_salted, [on, "__salt"], how).drop("__salt")
 
 
-#: session confs that control Spark's InjectRuntimeFilter rule.
-_BLOOM_CONFS = (
-    "spark.sql.optimizer.runtime.bloomFilter.enabled",
-    "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold",
-    "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold",
-    "spark.sql.autoBroadcastJoinThreshold",
-)
-
-
 def bloom_filtered_join(
     left: DataFrame,
     right: DataFrame,
@@ -92,40 +80,5 @@ def bloom_filtered_join(
     optimization, so this helper is just the declarative join — the
     engine session enables the rule (``session.py``) and the default
     thresholds gate it to scans ≥10GB, i.e. exactly the 100TB regime.
-    Use :func:`runtime_bloom_scope` to force it at test scale and in
-    plan audits.
     """
     return left.join(right, on=on, how=how)
-
-
-@contextmanager
-def runtime_bloom_scope(
-    spark: SparkSession,
-    creation_side_threshold: str = "100MB",
-    application_side_threshold: str = "1KB",
-    disable_broadcast: bool = True,
-) -> Iterator[SparkSession]:
-    """Temporarily tune runtime-Bloom thresholds so injection fires at
-    small data scale (tests, plan audits, sf0.01 harness runs).
-
-    ``disable_broadcast`` forces the shuffle-join shape the rule
-    targets — at production scale the build side is over the broadcast
-    threshold anyway. Build AND execute the query inside the scope:
-    injection happens when the action's physical plan is optimized.
-    Restores every touched conf on exit. Session confs are global —
-    don't run concurrent unrelated queries inside the scope.
-    """
-    saved = {k: spark.conf.get(k, None) for k in _BLOOM_CONFS}
-    try:
-        spark.conf.set(_BLOOM_CONFS[0], "true")
-        spark.conf.set(_BLOOM_CONFS[1], creation_side_threshold)
-        spark.conf.set(_BLOOM_CONFS[2], application_side_threshold)
-        if disable_broadcast:
-            spark.conf.set(_BLOOM_CONFS[3], "-1")
-        yield spark
-    finally:
-        for k, v in saved.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)

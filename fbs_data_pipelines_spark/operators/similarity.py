@@ -365,9 +365,21 @@ def _score_vs_centroid(vec_col: str, cv, cid):
     )
 
 
-def _assign_tail(df: DataFrame, scored_arr, n: int) -> DataFrame:
-    """Top-``n`` centroid pick over the scored struct array — shared
-    by both literal forms; arithmetic and tie order unchanged."""
+def _ivf_assign_vecs(
+    df: DataFrame, vecs: list, vec_col: str, n: int = 1
+) -> DataFrame:
+    """Assign each vector to its ``n`` nearest of the dense 0..K-1
+    centroid vectors ``vecs`` (max cosine; ties → lowest
+    centroid_id). No job, pure expression: the vectors enter as ONE
+    parsed nested-array literal (``lit_array``) and the transform
+    INDEX is the cid, so the per-row argmax is NARROW — the corpus
+    never moves for assignment. ``n>1`` (query multi-probe) sorts
+    the K scores in-row and explodes the top n. Callers pass the
+    one-job ``_seed_vecs`` result (r18: ann_ivf/ann_ivfpq
+    control-plane fold). Adds ``centroid_id``."""
+    scored_arr = F.transform(
+        lit_array(vecs), lambda cv, i: _score_vs_centroid(vec_col, cv, i)
+    )
     if n == 1:
         best = F.array_max(
             F.transform(
@@ -394,20 +406,6 @@ def _assign_tail(df: DataFrame, scored_arr, n: int) -> DataFrame:
             F.transform(F.slice(ordered, 1, n), lambda t: t["cid"])
         ),
     )
-
-
-def _ivf_assign_vecs(
-    df: DataFrame, vecs: list, vec_col: str, n: int = 1
-) -> DataFrame:
-    """ivf_assign for ALREADY-COLLECTED dense 0..K-1 centroid vectors
-    — no job, pure expression. Callers that derive centroids and
-    assignment from the same corpus pass the one-job ``_seed_vecs``
-    result here instead of materializing a centroid DataFrame only to
-    collect it again (r18: ann_ivf/ann_ivfpq control-plane fold)."""
-    scored_arr = F.transform(
-        lit_array(vecs), lambda cv, i: _score_vs_centroid(vec_col, cv, i)
-    )
-    return _assign_tail(df, scored_arr, n)
 
 
 def _seed_vecs(
@@ -443,49 +441,6 @@ def _seed_vecs(
         ][:cap]
         for i, (_step, cap) in enumerate(wants)
     ]
-
-
-def ivf_assign(
-    df: DataFrame,
-    centroids: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n: int = 1,
-) -> DataFrame:
-    """Assign each vector to its ``n`` nearest centroids (max cosine;
-    ties → lowest centroid_id). The K-row centroid table is collected
-    as control plane (like k-means centroids / PQ codebooks) and the
-    per-row argmax over K centroid literals is a NARROW expression —
-    no shuffle, no join: the corpus never moves for assignment (the
-    pre-r10 groupBy+join shuffled corpus vectors by id). ``n>1``
-    (query multi-probe) sorts the K scores in-row and explodes the
-    top n. Adds ``centroid_id``; cosine arithmetic and tie order are
-    identical to the former window/max_by form."""
-    rows = sorted(centroids.collect(), key=lambda r: r["centroid_id"])
-    cids = [int(r["centroid_id"]) for r in rows]
-    vecs = [[float(x) for x in r["centroid_vec"]] for r in rows]
-
-    if cids == list(range(len(cids))):
-        # dense 0..K-1 ids (the ivf_centroids contract): the vectors
-        # enter as ONE parsed nested-array literal (lit_array — one
-        # py4j/parser call; classic F.lit(list) expands element-wise,
-        # K·dim round trips, r17 advisor correction) and the transform
-        # INDEX is the cid — no K struct wrappers (same values, same
-        # int cid type).
-        return _ivf_assign_vecs(df, vecs, vec_col, n)
-    cent_lits = F.array(
-        *[
-            F.struct(
-                F.lit(cid).alias("cid"),
-                F.lit(cv).alias("cv"),
-            )
-            for cid, cv in zip(cids, vecs)
-        ]
-    )
-    scored_arr = F.transform(
-        cent_lits, lambda c: _score_vs_centroid(vec_col, c["cv"], c["cid"])
-    )
-    return _assign_tail(df, scored_arr, n)
 
 
 def ann_ivf_topk(

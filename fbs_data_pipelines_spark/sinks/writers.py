@@ -2,7 +2,7 @@
 
 - ``export_payload`` — K1: the sheet-overwrite shape ([header]+rows
   after export normalization). Driver-bound by contract; capped.
-- ``write_parquet`` / ``save_table`` — the scale sinks.
+- ``write_parquet`` — the scale sink.
 - export normalization (K3) lives in functions.dates
   (``format_dates_for_export``) + functions.cleaning (``nan_to_null_all``).
 """
@@ -35,17 +35,11 @@ def export_payload(df: DataFrame, max_rows: int = MAX_PAYLOAD_ROWS) -> list[list
     if len(rows) > max_rows:
         raise ValueError(
             f"export_payload is a driver-bound edge: input exceeds cap "
-            f"{max_rows}; use write_parquet/save_table for data-scale sinks"
+            f"{max_rows}; use write_parquet for data-scale sinks"
         )
     return [list(normalized.columns)] + [list(r) for r in rows]
 
 
-def write_parquet(
-    df: DataFrame, path: str, mode: str = "overwrite",
-    partition_by: list[str] | None = None,
-) -> None:
-    """Scale sink: parquet with optional partition columns."""
-    writer = df.write.mode(mode)
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(path)
+def write_parquet(df: DataFrame, path: str) -> None:
+    """Scale sink: overwrite ``path`` with parquet."""
+    df.write.mode("overwrite").parquet(path)

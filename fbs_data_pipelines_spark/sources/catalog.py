@@ -125,17 +125,6 @@ def latest_files(listing: DataFrame) -> DataFrame:
     )
 
 
-def save_table(df: DataFrame, name: str, mode: str = "overwrite") -> None:
-    """K2: table materialization (CREATE OR REPLACE TABLE ... AS,
-    db_manager.py:35-40) → managed table via saveAsTable."""
-    df.write.mode(mode).saveAsTable(name)
-
-
-def table_list(spark: SparkSession) -> list[str]:
-    """S6: SHOW TABLES (db_manager.py:70-76)."""
-    return [t.name for t in spark.catalog.listTables()]
-
-
 def read_table(spark: SparkSession, name: str) -> DataFrame:
     """S5: SELECT * FROM t (db_manager.py:55-68)."""
     return spark.table(name)
@@ -169,21 +158,3 @@ def save_bucketed(
     if path is not None:
         w = w.option("path", path)
     w.saveAsTable(name)
-
-
-def save_partitioned(
-    df: DataFrame,
-    path: str,
-    partition_cols: list[str],
-    mode: str = "overwrite",
-) -> None:
-    """Materialize with directory partitioning on coarse keys (date,
-    layer, entity): reads that filter on ``partition_cols`` touch only
-    matching directories (partition pruning — the Drive folder-walk
-    S7 analogue, but enforced by the planner, not convention).
-
-    Partition columns must be low-cardinality (days, not ids): each
-    value is a directory, and at 100 TB over-partitioning shatters the
-    table into small files.
-    """
-    df.write.mode(mode).partitionBy(*partition_cols).parquet(path)

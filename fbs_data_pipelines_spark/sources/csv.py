@@ -73,10 +73,10 @@ def read_dialected_csv(
     sep: str = ";",
     encoding: str = "ISO-8859-1",
     skip_rows: int = 0,
-    multi_line: bool = True,
 ) -> DataFrame:
-    """Permissive dialected CSV scan with junk-row skip and
-    Polars-compatible duplicate-header handling.
+    """Permissive multiLine dialected CSV scan (quoted fields may span
+    lines) with junk-row skip and Polars-compatible duplicate-header
+    handling.
 
     All columns land as StringType (the reference's regime: permissive
     ingest, types imposed downstream by the cast layer / dictionary).
@@ -93,7 +93,7 @@ def read_dialected_csv(
         .option("mode", "PERMISSIVE")
         .option("quote", '"')
         .option("escape", '"')
-        .option("multiLine", "true" if multi_line else "false")
+        .option("multiLine", "true")
     )
     df = reader.csv(path)
     # drop the junk row(s) + the header row itself: they parse as data
@@ -150,7 +150,7 @@ def read_dialected_csv_positional(
        ``F.from_csv`` using the real dialect.
 
     Limitation: physical-line semantics — quoted fields spanning
-    newlines need ``read_dialected_csv(multi_line=True)`` (which Spark
+    newlines need ``read_dialected_csv`` (multiLine, which Spark
     necessarily reads one-file-per-task anyway, so the driver-side
     peek there costs nothing extra at scale).
     """

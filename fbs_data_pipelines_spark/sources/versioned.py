@@ -1036,42 +1036,6 @@ class VersionedTable:
         self._commit_pointer(v)
         return v
 
-    def compact(self, n_files: int | None = None) -> int:
-        """OPTIMIZE: rewrite the live snapshot as one fresh version.
-
-        After many delta merges a bucketed table's live buckets point
-        at many historical version directories, each holding small
-        files — every read pays one scan per referenced directory and
-        the file-count tax grows with merge count. Compaction reads
-        the live snapshot, rewrites every bucket into a single new
-        directory (one file per bucket — the bucket-partitioned write
-        puts each bucket in exactly one task), and commits it through
-        the normal manifest+pointer protocol: readers are never
-        sheared, history and time travel are preserved, and once
-        retained manifests stop referencing the old directories,
-        ``vacuum()`` reclaims them.
-
-        Plain mode coalesces the snapshot to ``n_files`` (default: the
-        current partition count — pass 1 for a Sheets-sized table).
-        """
-        current = self.latest_version()
-        if current is None:
-            raise FileNotFoundError(
-                f"versioned table {self.path} is empty"
-            )
-        live = self.read(current)
-        if self.id_col is None:
-            if n_files is not None:
-                live = live.coalesce(n_files)
-            return self.commit(live)
-        v = current + 1
-        self._claim_version(v)
-        self._write_buckets(live.select(*self._columns), v)
-        buckets = {str(b): f"data/v{v}" for b in self._buckets_in_dir(v)}
-        self._write_json(f"manifests/v{v}.json", self._manifest_dict(buckets))
-        self._commit_pointer(v)
-        return v
-
     def diff(
         self, from_version: int, to_version: int, id_col: str | None = None
     ) -> DataFrame:
@@ -1123,36 +1087,3 @@ class VersionedTable:
     def history(self) -> list[int]:
         """Committed versions, oldest first (complete snapshots only)."""
         return self._complete_versions()
-
-    def vacuum(self, keep_last: int = 2) -> list[int]:
-        """Drop all but the newest ``keep_last`` versions (never the
-        live one). Returns the versions whose snapshots were removed.
-
-        In bucketed mode a version DIRECTORY may still be referenced
-        by a retained manifest (clean buckets point at old dirs), so
-        only directories referenced by no retained manifest are
-        deleted; the dropped versions' manifests go away either way,
-        which is what retires them from ``history()``/time travel."""
-        live = self.latest_version()
-        hist = self.history()
-        keep = set(hist[-keep_last:]) if keep_last > 0 else set()
-        keep.add(live)
-        removable = [v for v in hist if v not in keep]
-        if self.id_col is not None:
-            referenced: set[str] = set()
-            for v in keep:
-                if v is None:
-                    continue
-                referenced.update(self._read_manifest(v)["buckets"].values())
-            for v in removable:
-                self._fs.delete(self._p(f"manifests/v{v}.json"), False)
-            # a dropped version's dir survives while any kept manifest
-            # still references it
-            for v in removable:
-                if f"data/v{v}" not in referenced:
-                    self._fs.delete(self._p(f"data/v{v}"), True)
-            return removable
-        for v in removable:
-            self._fs.delete(self._p(f"data/v{v}"), True)
-            self._fs.delete(self._p(f"commits/v{v}.json"), False)
-        return removable

@@ -16,13 +16,11 @@ join, no shuffle, whole-stage codegen (a CASE per SET column guarded
 by the WHERE predicate; a negated filter for DELETE). Missing WHERE
 means all rows (the SQL standard's rule), same as everywhere.
 
-Targets resolve like ``merge_into``: a ``versioned`` mapping first
-(the statement becomes a new committed version — snapshot isolation,
-time travel), then the session catalog (temp views; the new state is
-returned lazily for the caller to materialize). SET values are cast
-to the target column dtype (the coercion users expect, mirroring
-``sql_merge``). WHERE uses Kleene SQL semantics: null-predicate rows
-are NOT updated and NOT deleted.
+Targets resolve like ``merge_into``, against the session catalog
+(temp views; the new state is returned lazily for the caller to
+materialize). SET values are cast to the target column dtype (the
+coercion users expect, mirroring ``sql_merge``). WHERE uses Kleene
+SQL semantics: null-predicate rows are NOT updated and NOT deleted.
 """
 
 from __future__ import annotations
@@ -200,42 +198,15 @@ def execute_delete(target_df: DataFrame, stmt: DeleteStatement) -> DataFrame:
     return t.filter(~hit)
 
 
-def _resolve_and_commit(
-    spark: SparkSession,
-    target: str,
-    versioned: dict[str, object] | None,
-    build,
-) -> DataFrame:
-    versioned = versioned or {}
-    if target in versioned:
-        vt = versioned[target]
-        new_state = build(vt.read())
-        vt.commit(new_state)
-        return vt.read()
-    return build(spark.table(target))
-
-
-def sql_update(
-    spark: SparkSession,
-    statement: str,
-    versioned: dict[str, object] | None = None,
-) -> DataFrame:
-    """Parse + execute UPDATE. VersionedTable targets commit the new
-    state as a new version; view targets return it lazily."""
+def sql_update(spark: SparkSession, statement: str) -> DataFrame:
+    """Parse + execute UPDATE against a session-catalog target; the
+    new state is returned lazily."""
     stmt = parse_update(statement)
-    return _resolve_and_commit(
-        spark, stmt.target, versioned, lambda df: execute_update(df, stmt)
-    )
+    return execute_update(spark.table(stmt.target), stmt)
 
 
-def sql_delete(
-    spark: SparkSession,
-    statement: str,
-    versioned: dict[str, object] | None = None,
-) -> DataFrame:
-    """Parse + execute DELETE. VersionedTable targets commit the new
-    state as a new version; view targets return it lazily."""
+def sql_delete(spark: SparkSession, statement: str) -> DataFrame:
+    """Parse + execute DELETE against a session-catalog target; the
+    new state is returned lazily."""
     stmt = parse_delete(statement)
-    return _resolve_and_commit(
-        spark, stmt.target, versioned, lambda df: execute_delete(df, stmt)
-    )
+    return execute_delete(spark.table(stmt.target), stmt)

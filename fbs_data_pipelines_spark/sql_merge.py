@@ -493,35 +493,18 @@ def execute_merge(
 def merge_into(
     spark: SparkSession,
     statement: str,
-    versioned: dict[str, object] | None = None,
     check_cardinality: bool = False,
 ) -> DataFrame:
     """Parse + execute a MERGE INTO statement.
 
-    Target/source names resolve, in order, against ``versioned`` (a
-    name → ``VersionedTable`` mapping) and the session catalog (temp
-    views / tables). When the TARGET is a ``VersionedTable``, the
-    merged state is COMMITTED as a new version (snapshot isolation,
-    time travel — the lakehouse write path); the returned DataFrame
-    reads back that committed version. For a view target the merged
-    state is returned lazily and the caller materializes it.
+    Target and source names resolve against the session catalog (temp
+    views / tables). The merged state is returned lazily and the
+    caller materializes it.
     """
     stmt = parse_merge(statement)
-    versioned = versioned or {}
-
-    def resolve(name: str) -> DataFrame:
-        if name in versioned:
-            return versioned[name].read()
-        return spark.table(name)
-
-    merged = execute_merge(
-        resolve(stmt.target),
-        resolve(stmt.source),
+    return execute_merge(
+        spark.table(stmt.target),
+        spark.table(stmt.source),
         stmt,
         check_cardinality=check_cardinality,
     )
-    if stmt.target in versioned:
-        vt = versioned[stmt.target]
-        vt.commit(merged)
-        return vt.read()
-    return merged

@@ -454,10 +454,8 @@ def streaming_cdc_apply(
       skips.
 
     Read the live snapshot with ``cdc_snapshot(vt.read())`` (drops
-    tombstones + op); long-running tables compact tombstones out with
-    ``operators/cdc.compact_cdc_table`` once upstream guarantees no
-    straggler older than the retention watermark remains (caller
-    policy, like Kafka log compaction).
+    tombstones + op). Tombstones are never dropped from the state, so
+    it grows with the number of keys ever deleted.
 
     100 TB cost note: in the default plain mode each fold reads and
     REWRITES the full state (O(|keys|) I/O per micro-batch, like a

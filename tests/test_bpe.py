@@ -1,17 +1,12 @@
-"""Distributed BPE training/encoding against the classic worked
-example and structural invariants."""
+"""BPE encoding against the classic worked example and structural
+invariants."""
 
 from __future__ import annotations
 
 import pyspark.sql.functions as F
 import pytest
 
-from fbs_data_pipelines_spark.operators.bpe import (
-    EOW,
-    bpe_encode,
-    bpe_train,
-    word_freq_table,
-)
+from fbs_data_pipelines_spark.operators.bpe import EOW, bpe_encode
 
 
 @pytest.fixture(scope="module")
@@ -23,55 +18,32 @@ def corpus(spark):
     return spark.createDataFrame(rows, "doc_id long, text string")
 
 
-def test_bpe_train_classic_first_merges(spark, corpus):
-    wf = word_freq_table(corpus, "text")
-    merges = bpe_train(wf, num_merges=4)
-    # highest-count pair is (e, s) from newest(6)+widest(3) = 9
-    assert (merges[0]["left"], merges[0]["right"]) == ("e", "s")
-    assert merges[0]["pair_count"] == 9
-    # then (es, t) 9 → then (est, </w>) 9
-    assert (merges[1]["left"], merges[1]["right"]) == ("es", "t")
-    assert (merges[2]["left"], merges[2]["right"]) == ("est", EOW)
-    assert [m["rank"] for m in merges] == [0, 1, 2, 3]
-
-
-def test_bpe_train_deterministic(spark, corpus):
-    wf = word_freq_table(corpus, "text")
-    a = bpe_train(wf, num_merges=6)
-    b = bpe_train(wf.repartition(7), num_merges=6)  # layout-independent
-    assert a == b
+def _merges(*pairs):
+    return [{"left": l, "right": r} for l, r in pairs]
 
 
 def test_bpe_encode_compresses_and_roundtrips(spark, corpus):
-    wf = word_freq_table(corpus, "text")
-    merges = bpe_train(wf, num_merges=8)
+    # the paper's first merges on this corpus, then the stems
+    merges = _merges(
+        ("e", "s"), ("es", "t"), ("est", EOW), ("l", "o"),
+        ("lo", "w"), ("n", "e"), ("ne", "w"), ("w", "i"),
+    )
     enc = bpe_encode(corpus.limit(5), "doc_id", "text", merges)
     for r in enc.collect():
         toks = r["bpe_tokens"]
         # concatenating subwords restores word + EOW marker
         joined = "".join(toks).replace(EOW, " ").strip()
         assert joined in {"low", "lower", "newest", "widest"}
-        # merges learned on this corpus compress below char count
+        # these merges compress every word below its char count
         assert len(toks) < len(joined) + 1
 
 
 def test_bpe_greedy_overlap_rule(spark):
     # "aaa": merging (a,a) greedily left-to-right → ["aa", "a", EOW]
     docs = spark.createDataFrame([(1, "aaa aaa")], "doc_id long, text string")
-    wf = word_freq_table(docs, "text")
-    merges = bpe_train(wf, num_merges=1, min_pair_count=1)
-    assert (merges[0]["left"], merges[0]["right"]) == ("a", "a")
+    merges = _merges(("a", "a"))
     enc = bpe_encode(docs, "doc_id", "text", merges).collect()[0]
     assert enc["bpe_tokens"] == ["aa", "a", EOW, "aa", "a", EOW]
-
-
-def test_bpe_min_pair_count_stops_early(spark):
-    docs = spark.createDataFrame(
-        [(1, "ab cd ef")], "doc_id long, text string"
-    )
-    wf = word_freq_table(docs, "text")
-    merges = bpe_train(wf, num_merges=10, min_pair_count=2)
-    assert merges == []  # every pair occurs once
 
 
 def test_merge_expr_matches_python_reference_bulk(spark):
@@ -112,14 +84,3 @@ def test_merge_expr_matches_python_reference_bulk(spark):
         assert got[i] == ref_merge(c, "a", "b"), (i, c)
 
 
-def test_bpe_train_stops_when_vocabulary_collapses(spark):
-    """Every word reduced to ONE symbol before num_merges runs out:
-    the empty pair table yields an all-null aggregate row — training
-    must stop, not crash (review finding)."""
-    docs = spark.createDataFrame(
-        [(i, "ab ab ab") for i in range(3)], "doc_id long, text string"
-    )
-    wf = word_freq_table(docs, "text")
-    merges = bpe_train(wf, num_merges=10, min_pair_count=1)
-    # 'ab' collapses in 2 merges: (a,b) then (ab,</w>)
-    assert [m["merged"] for m in merges] == ["ab", "ab" + EOW]

@@ -5,11 +5,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from fbs_data_pipelines_spark.operators.cdc import (
-    SNAPSHOT_SEQ,
-    cdc_apply,
-    cdc_apply_to_snapshot,
-)
+from fbs_data_pipelines_spark.operators.cdc import cdc_apply
 
 SCHEMA = "k long, seq long, op string, v string, amt double"
 
@@ -61,26 +57,6 @@ def test_cdc_apply_tie_break_is_order_insensitive(spark):
     rev = cdc_apply(_log(spark, list(reversed(rows))), ["k"]).collect()
     assert fwd == rev
     assert fwd[0].v == "y"  # ('U','y') > ('U','x') > ('I','z')
-
-
-def test_cdc_apply_to_snapshot_union_path(spark):
-    snap = spark.createDataFrame(
-        [(1, "old", 1.0), (2, "keep", 2.0), (3, "gone", 3.0)],
-        "k long, v string, amt double",
-    )
-    log = _log(
-        spark,
-        [
-            (1, 10, "U", "new", 1.5),
-            (3, 10, "D", None, None),
-            (4, 10, "I", "fresh", 4.0),
-        ],
-    )
-    got = {r.k: r for r in cdc_apply_to_snapshot(snap, log, ["k"]).collect()}
-    assert set(got) == {1, 2, 4}
-    assert got[1].v == "new"
-    assert got[2].v == "keep" and got[2].seq == SNAPSHOT_SEQ
-    assert got[4].v == "fresh"
 
 
 def test_cdc_apply_null_op_is_kept(spark):
@@ -205,20 +181,14 @@ def _model_nullop(rows):
 @given(
     st.lists(_event_nullop, min_size=1, max_size=24),
     st.integers(min_value=1, max_value=4),
-    st.booleans(),
 )
-def test_incremental_winners_fold_matches_model(
-    spark, rows, n_batches, compact_between
-):
+def test_incremental_winners_fold_matches_model(spark, rows, n_batches):
     """The streaming_cdc_apply state invariant, against an INDEPENDENT
     Python model: fold arbitrary batch splits through
     cdc_winners(state ∪ batch) — materializing state between folds
-    like a table commit — optionally compacting tombstones between
-    batches at the retention contract's watermark (min seq still to
-    arrive, minus 1). The final snapshot must equal the one-shot model
-    over the full history, for EVERY split and compaction schedule."""
+    like a table commit. The final snapshot must equal the one-shot
+    model over the full history, for EVERY split."""
     from fbs_data_pipelines_spark.operators.cdc import (
-        cdc_compact_tombstones,
         cdc_snapshot,
         cdc_winners,
     )
@@ -226,14 +196,10 @@ def test_incremental_winners_fold_matches_model(
     size = (len(rows) + n_batches - 1) // n_batches
     batches = [rows[i : i + size] for i in range(0, len(rows), size)]
     state = None
-    for i, b in enumerate(batches):
+    for b in batches:
         df = spark.createDataFrame(b, SCHEMA)
         ev = df if state is None else state.unionByName(df)
         won = cdc_winners(ev, ["k"])
-        if compact_between:
-            future = [r[1] for b2 in batches[i + 1 :] for r in b2]
-            if future:
-                won = cdc_compact_tombstones(won, min(future) - 1)
         # materialize like a VersionedTable commit between micro-batches
         state = spark.createDataFrame(won.collect(), won.schema)
     got = {

@@ -79,17 +79,6 @@ def test_cast_all_to_string(spark):
     assert [f.dataType.simpleString() for f in out.schema.fields] == ["string", "string"]
 
 
-def test_fold_accents(spark):
-    from fbs_data_pipelines_spark.functions.cleaning import fold_accents
-
-    df = spark.createDataFrame(
-        [("Crédito añejo GÓMEZ ü",), (None,)], ["v"]
-    )
-    out = [r.f for r in df.select(fold_accents("v").alias("f")).collect()]
-    assert out[0] == "Credito anejo GOMEZ u"
-    assert out[1] is None
-
-
 def test_whole_frame_programs_match_the_column_forms(spark):
     """``empty_to_null_all``, ``nan_to_null_all`` and
     ``format_dates_for_export`` are parsed SQL; each matches its

@@ -104,7 +104,9 @@ def test_load_writes_under_the_callers_job_group(spark, tmp_path):
         pipe.load(str(tmp_path))
         grouped = jobs()
     assert len(grouped) >= 3  # at least one write job per table
-    assert _ungrouped_jobs(spark) == before  # no write job escaped the group
+    # no write job escaped the group; a subset test, because the status
+    # store drops its oldest jobs once it holds spark.ui.retainedJobs
+    assert _ungrouped_jobs(spark) <= before
     for key, n in [("raw_a", 3), ("raw_b", 5), ("modeled_a", 7)]:
         assert spark.read.parquet(str(tmp_path / key)).count() == n
 

@@ -251,13 +251,12 @@ def test_salted_join_matches_plain_join(spark):
 
 
 def test_runtime_bloom_filter_injected_and_exact(spark, sf_dir):
-    """Inside runtime_bloom_scope a selective dim side injects a
-    might_contain predicate into the fact scan (semi-join reduction:
-    fact rows drop BEFORE the shuffle), and the result is exactly the
-    plain join's."""
+    """With the runtime-Bloom thresholds lowered and broadcast off, a
+    selective dim side injects a might_contain predicate into the
+    fact scan (semi-join reduction: fact rows drop BEFORE the
+    shuffle), and the result is exactly the plain join's."""
     from fbs_data_pipelines_spark.operators.partitioning import (
         bloom_filtered_join,
-        runtime_bloom_scope,
     )
 
     lineitem = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
@@ -271,22 +270,29 @@ def test_runtime_bloom_filter_injected_and_exact(spark, sf_dir):
     )
     expect = sorted((r.o_orderstatus, r["count"]) for r in plain.collect())
 
-    with runtime_bloom_scope(spark):
+    confs = {
+        "spark.sql.optimizer.runtime.bloomFilter.enabled": "true",
+        "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold": "100MB",
+        "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold": "1KB",
+        "spark.sql.autoBroadcastJoinThreshold": "-1",
+    }
+    saved = {k: spark.conf.get(k, None) for k in confs}
+    try:
+        for k, v in confs.items():
+            spark.conf.set(k, v)
         j = bloom_filtered_join(
             lineitem, orders, lineitem.l_orderkey == orders.o_orderkey
         ).groupBy("o_orderstatus").count()
         got = sorted((r.o_orderstatus, r["count"]) for r in j.collect())
         plan = j._jdf.queryExecution().executedPlan().toString()
         assert "might_contain" in plan or "bloom" in plan.lower()
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
     assert got == expect and len(got) > 0
-    # scope restored the session confs
-    assert spark.conf.get("spark.sql.autoBroadcastJoinThreshold") != "-1"
-    assert (
-        spark.conf.get(
-            "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold"
-        )
-        != "1KB"
-    )
 
 
 def test_bucketed_join_has_no_shuffle(spark, tmp_path):
@@ -338,32 +344,6 @@ def test_q_bucketed_join_has_no_shuffle(spark, sf_dir):
         assert "SortMergeJoin" in plan
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-
-
-def test_partitioned_write_prunes(spark, tmp_path):
-    """A filter on the partition column must become a PartitionFilter
-    (directory pruning), not a data filter over the full scan."""
-    from fbs_data_pipelines_spark.sources.catalog import save_partitioned
-    import pyspark.sql.functions as F
-
-    df = spark.range(0, 1000).select(
-        F.col("id"), (F.col("id") % 4).cast("string").alias("bucket_day")
-    )
-    save_partitioned(df, str(tmp_path / "t"), ["bucket_day"])
-    back = spark.read.parquet(str(tmp_path / "t")).filter(
-        F.col("bucket_day") == "2"
-    )
-    assert back.count() == 250
-    formatted = back._jdf.queryExecution().explainString(
-        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-    )
-    import re
-
-    m = re.search(r"PartitionFilters: \[([^\]]*)\]", formatted)
-    assert m and "bucket_day" in m.group(1)  # pruning, not post-filter
-    # and every file actually read lives under the one matching dir
-    files = [r[0] for r in back.select(F.input_file_name()).distinct().collect()]
-    assert files and all("bucket_day=2" in f for f in files)
 
 
 def test_aqe_splits_skewed_join(spark):

@@ -1,4 +1,4 @@
-"""Record linkage — blocking, F-S scoring, resolution, skew guard."""
+"""Record linkage — blocking, F-S scoring, resolution."""
 
 from pyspark.sql import functions as F
 
@@ -88,10 +88,3 @@ def test_link_records_top1_threshold(spark):
     assert got == {(1, 11, 9.0), (2, 12, 3.0)}
 
 
-def test_max_block_pairs_drops_oversized_block(spark):
-    a, b = _ab(spark)
-    pairs = blocked_pairs(
-        a, b, "id", "id", _blocking(), max_block_pairs=4
-    )
-    got = {(r.a_id, r.b_id) for r in pairs.collect()}
-    assert got == {(3, 13)}  # NY block = 6 pairs > 4, dropped

@@ -134,7 +134,7 @@ def test_dedup_exact_multicolumn_boundary_unambiguous(spark):
     df = spark.createDataFrame(
         [(1, "ab", "c"), (2, "a", "bc")], "doc_id long, t1 string, t2 string"
     )
-    out = dedup_exact(df, "doc_id", ["t1", "t2"], normalize=False).collect()
+    out = dedup_exact(df, "doc_id", ["t1", "t2"]).collect()
     assert len(out) == 2 and {r.doc_id for r in out} == {1, 2}
 
 
@@ -343,17 +343,8 @@ def test_dup_clusters_chain_and_island(spark):
 
 
 def test_ivf_assignment_and_probe(spark, vecs):
-    from fbs_data_pipelines_spark.operators.similarity import (
-        ann_ivf_topk,
-        ivf_assign,
-        ivf_centroids,
-    )
+    from fbs_data_pipelines_spark.operators.similarity import ann_ivf_topk
 
-    cents = ivf_centroids(vecs, num_centroids=2)
-    assert cents.count() >= 2
-    assigned = ivf_assign(vecs, cents)
-    a = {r.vec_id: r.centroid_id for r in assigned.collect()}
-    assert a[1] == a[2]  # near-identical vectors share a centroid
     q = vecs.filter(F.col("vec_id") == 1).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )

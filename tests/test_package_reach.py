@@ -11,25 +11,32 @@ bodies outside definitions and imports (registries, constants built
 at import time) are roots too.
 
 The public top-level functions and classes the closure does not reach
-must be exactly the keys of ``UNREACHED``. A new unreached name fails
-the test: wire it into a gated query or delete it. A stale key (the
-name is gone, or something reaches it now) fails too, so the pending
-part can only shrink.
+must be exactly the keys of ``UNREACHED``, each a deliberate keep. A
+new unreached name fails the test: wire it into a gated query or
+delete it. A stale key (the name is gone, or something reaches it
+now) fails too.
+
+A name closure cannot see a dead module whose names collide with live
+ones (a module-level ``sql()`` looks reached because ``spark.sql``
+is). So a second check follows imports: every package module must be
+imported, directly or through other package modules, by a program
+root (the entry, ``bench.py``, ``perfbench/``, ``tools/``), except
+the keys of ``UNIMPORTED``.
 """
 
 from __future__ import annotations
 
 import ast
+from functools import lru_cache
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parents[1]
 PKG = REPO / "fbs_data_pipelines_spark"
 
 _IO = "the reference's I/O edge"
-_PENDING = "pending: only tests call it; wire into a gated query or delete"
+_REF = "the reference a test compares against: "
 
 UNREACHED = {
-    # --- deliberate keeps ---------------------------------------------
     "SheetsClient": _IO + " (Sheets API client)",
     "SheetsTransport": _IO + " (Sheets transport protocol)",
     "LocalDirTransport": _IO + " (offline Sheets transport)",
@@ -44,27 +51,16 @@ UNREACHED = {
     "enforce": "ROADMAP builds on it (expectations gate)",
     "satisfies": "ROADMAP builds on it (expectations predicate)",
     "list_layer": "perfbench looks it up by string on pipeline",
-    # --- pending: may only shrink --------------------------------------
-    "bpe_train": _PENDING,
-    "word_freq_table": _PENDING,
-    "cdc_compact_tombstones": _PENDING,
-    "compact_cdc_table": _PENDING,
-    "cdc_apply_to_snapshot": _PENDING,
-    "join_delta_with_multiplicity": _PENDING,
-    "consolidate": _PENDING,
-    "range_join": _PENDING,
-    "ivf_assign": _PENDING,
-    "runtime_bloom_scope": _PENDING,
-    "token_count": _PENDING,
-    "language_id": _PENDING,
-    "nan_to_null": _PENDING,
-    "fold_accents": _PENDING,
-    "pack_summary": _PENDING,
-    "register_tables": _PENDING,
-    "save_table": _PENDING,
-    "table_list": _PENDING,
-    "save_partitioned": _PENDING,
-    "table_profile": _PENDING + " (the q_table_profile key was consolidated)",
+    "range_join": _REF + "test_range_join_broadcast_vs_bucketed_equivalent",
+    "token_count": _REF + "test_text_profile_matches_per_column_helpers",
+    "language_id": _REF + "test_text_profile_matches_per_column_helpers",
+    "table_profile": _REF + "the q_table_profile pins in test_consolidated_keys.py",
+}
+
+#: package modules no program root imports, with the reason each stays
+UNIMPORTED = {
+    "fbs_data_pipelines_spark.sources.excel": _IO
+    + " (the reference's Excel data dictionary)",
 }
 
 _DEFS = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
@@ -90,6 +86,7 @@ def _defined(stmt: ast.stmt) -> list[str]:
     return []
 
 
+@lru_cache(maxsize=None)
 def _parse(path: Path) -> ast.Module:
     return ast.parse(path.read_text(), filename=str(path))
 
@@ -169,3 +166,72 @@ def test_unreached_public_names_are_exactly_the_listed_ones():
         f"(drop them from the dict): {stale}"
     )
 
+
+
+def _module_name(path: Path) -> str:
+    parts = path.relative_to(REPO).with_suffix("").parts
+    return ".".join(parts[:-1] if parts[-1] == "__init__" else parts)
+
+
+def _imports(tree: ast.AST, here: str, is_pkg: bool) -> set[str]:
+    """Dotted names an AST imports, function-level imports included,
+    with every parent package (importing ``a.b.c`` runs ``a`` and
+    ``a.b`` too) and ``from m import x`` read as possibly ``m.x``."""
+    out = set()
+    for n in ast.walk(tree):
+        if isinstance(n, ast.Import):
+            out |= {a.name for a in n.names}
+        elif isinstance(n, ast.ImportFrom):
+            mod = n.module or ""
+            if n.level:
+                base = here.split(".")
+                if not is_pkg:
+                    base = base[:-1]
+                base = base[: len(base) - (n.level - 1)]
+                mod = ".".join(base + ([mod] if mod else []))
+            out.add(mod)
+            out |= {f"{mod}.{a.name}" for a in n.names}
+    return {
+        ".".join(m.split(".")[:i])
+        for m in out
+        for i in range(1, m.count(".") + 2)
+    }
+
+
+def unimported_package_modules() -> set[str]:
+    """Package modules that no program root imports, directly or
+    through other package modules."""
+    edges = {
+        _module_name(f): _imports(
+            _parse(f), _module_name(f), f.name == "__init__.py"
+        )
+        for f in sorted(PKG.rglob("*.py"))
+    }
+    roots = [
+        REPO / "__spark_entry__.py",
+        REPO / "bench.py",
+        *sorted((REPO / "perfbench").glob("*.py")),
+        *sorted((REPO / "tools").glob("*.py")),
+    ]
+    todo = set().union(*(_imports(_parse(f), "", False) for f in roots))
+    seen: set[str] = set()
+    while todo:
+        m = todo.pop()
+        if m in edges and m not in seen:
+            seen.add(m)
+            todo |= edges[m]
+    return set(edges) - seen
+
+
+def test_every_package_module_is_imported_by_a_program_root():
+    got = unimported_package_modules()
+    new = sorted(got - set(UNIMPORTED))
+    stale = sorted(set(UNIMPORTED) - got)
+    assert not new, (
+        f"package modules no program root imports (wire in or "
+        f"delete): {new}"
+    )
+    assert not stale, (
+        f"UNIMPORTED entries that are gone or imported now (drop them "
+        f"from the dict): {stale}"
+    )

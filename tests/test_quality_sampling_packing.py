@@ -2,13 +2,12 @@
 
 from __future__ import annotations
 
+import warnings
+
 import pytest
 from pyspark.sql import functions as F
 
-from fbs_data_pipelines_spark.operators.packing import (
-    pack_sequences,
-    pack_summary,
-)
+from fbs_data_pipelines_spark.operators.packing import pack_sequences
 from fbs_data_pipelines_spark.operators.quality import (
     gopher_quality_flags,
     repetition_stats,
@@ -138,7 +137,14 @@ def test_sequence_packing_respects_capacity(spark):
     rows = [(i, 60 + (i % 5) * 30) for i in range(100)]  # 60..180 tokens
     rows.append((1000, 900))  # oversized doc
     df = spark.createDataFrame(rows, "doc_id long, ntok long")
-    packed = pack_sequences(df, "doc_id", "ntok", capacity=256, num_buckets=4)
+    with warnings.catch_warnings():
+        # the packing kernel's type hints must name its eval type
+        warnings.filterwarnings(
+            "error", "Cannot infer the eval type", UserWarning
+        )
+        packed = pack_sequences(
+            df, "doc_id", "ntok", capacity=256, num_buckets=4
+        )
     out = packed.collect()
     assert len(out) == 101  # every doc assigned exactly once
     sums = (
@@ -157,9 +163,6 @@ def test_sequence_packing_respects_capacity(spark):
         if (r.bucket, r.pack_id) == (big[0].bucket, big[0].pack_id)
     ]
     assert mates == big
-
-    summary = pack_summary(packed, capacity=256).collect()
-    assert all(0 < r.fill for r in summary)
 
 
 def test_packing_invariants_property(spark):

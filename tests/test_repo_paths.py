@@ -1,5 +1,6 @@
-"""The engine, its bench and its tests must run from any checkout
-location: none of them may name the checkout's absolute path."""
+"""The engine, its bench, its tools and its tests must run from any
+checkout location: none of them may name the checkout's absolute
+path (a tool that did would check another checkout's code)."""
 
 from __future__ import annotations
 
@@ -15,6 +16,7 @@ def test_no_hard_coded_checkout_path():
         *sorted((REPO / "tests").glob("*.py")),
         REPO / "bench.py",
         REPO / "__spark_entry__.py",
+        *sorted((REPO / "tools").glob("*.py")),
         *sorted((REPO / "fbs_data_pipelines_spark").rglob("*.py")),
     ]
     hits = [

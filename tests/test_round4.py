@@ -605,25 +605,6 @@ def test_grouped_topk_single_bucket_degenerates_to_window(spark, skewed):
     assert sorted(got.collect()) == sorted(want.collect())
 
 
-def test_incremental_dedup_normalize_false(spark):
-    from fbs_data_pipelines_spark.operators.dedup import (
-        dedup_exact,
-        incremental_dedup,
-    )
-
-    corpus = spark.createDataFrame([(1, "Hello")], "doc_id long, text string")
-    seen = dedup_exact(corpus, "doc_id", ["text"], normalize=False).select(
-        "content_hash"
-    )
-    batch = spark.createDataFrame(
-        [(2, "Hello"), (3, "hello")], "doc_id long, text string"
-    )
-    out = incremental_dedup(batch, seen, "doc_id", ["text"],
-                            normalize=False)
-    # byte-exact mode: case difference is a DIFFERENT document
-    assert sorted(r["doc_id"] for r in out.collect()) == [3]
-
-
 def test_ppl_quantile_buckets_keeps_null_group(spark):
     """A null stratum is a legitimate group: the null-safe join must
     retain its rows (review finding — plain equality dropped them)."""

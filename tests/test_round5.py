@@ -947,50 +947,6 @@ def test_join_delta_never_rejoins_the_bases(spark):
     assert out.count() == 0
 
 
-def test_join_delta_retraction_nets_out(spark):
-    # differential-dataflow-style maintenance under deletes: insert
-    # then retract a base row; the consolidated materialized join
-    # equals the join of the FINAL base states
-    from fbs_data_pipelines_spark.operators.incremental import (
-        consolidate,
-        join_delta_with_multiplicity,
-    )
-
-    a1 = spark.createDataFrame(
-        [(1, "a1", 1), (2, "a2", 1)], "k long, va string, mult long"
-    )
-    b1 = spark.createDataFrame(
-        [(1, "b1", 1), (2, "b2", 1)], "k long, vb string, mult long"
-    )
-    # step 2 retracts (1, 'a1') and inserts (3, 'a3') + (1, 'b1x')
-    a2 = spark.createDataFrame(
-        [(1, "a1", -1), (3, "a3", 1)], "k long, va string, mult long"
-    )
-    b2 = spark.createDataFrame(
-        [(1, "b1x", 1)], "k long, vb string, mult long"
-    )
-
-    d1 = join_delta_with_multiplicity(a1, None, b1, None, "k")
-    prev_a, prev_b = a1, b1
-    d2 = join_delta_with_multiplicity(a2, prev_a, b2, prev_b, "k")
-    materialized = consolidate(
-        d1.unionByName(d2), ["k", "va", "vb"]
-    )
-    got = {(r.k, r.va, r.vb, r.mult) for r in materialized.collect()}
-
-    final_a = consolidate(a1.unionByName(a2), ["k", "va"])
-    final_b = consolidate(b1.unionByName(b2), ["k", "vb"])
-    expect = {
-        (r.k, r.va, r.vb, 1)
-        for r in final_a.drop("mult").join(
-            final_b.drop("mult"), "k"
-        ).collect()
-    }
-    assert got == expect
-    # the retracted row's join partners are really gone
-    assert not any(va == "a1" for _, va, _, _ in got)
-
-
 # ---------------------------------------------------------------------------
 # plan shapes of the TPC-H-shape and map queries
 # ---------------------------------------------------------------------------

@@ -17,8 +17,6 @@ from fbs_data_pipelines_spark.sources.catalog import (
     list_layer,
     newest_rows,
     read_table,
-    save_table,
-    table_list,
     to_listing_df,
 )
 from fbs_data_pipelines_spark.sources.csv import dedup_headers, read_dialected_csv
@@ -169,23 +167,10 @@ def test_newest_snapshot_tie_rule_is_shared(spark, monkeypatch):
 def test_table_staging_roundtrip(spark):
     spark.sql("DROP TABLE IF EXISTS t_stage_test")
     df = spark.createDataFrame([(1, "a"), (2, "b")], "id long, v string")
-    save_table(df, "t_stage_test")
-    assert "t_stage_test" in table_list(spark)
+    df.write.mode("overwrite").saveAsTable("t_stage_test")
     back = read_table(spark, "t_stage_test")
     assert sorted((r.id, r.v) for r in back.collect()) == [(1, "a"), (2, "b")]
     spark.sql("DROP TABLE t_stage_test")
-
-
-def test_sql_front_door(spark):
-    from fbs_data_pipelines_spark.sql import register_tables, sql
-
-    names = register_tables(spark, "/root/testdata/sf0.001")
-    assert "lineitem" in names and "documents" in names
-    out = sql(
-        spark,
-        "SELECT l_returnflag, count(*) AS n FROM lineitem GROUP BY 1",
-    )
-    assert out.count() == 3
 
 
 def test_orc_and_json_roundtrip(spark, tmp_path):

@@ -4,7 +4,7 @@ statements (/root/reference/etl.py:82,127-137 embedded-SQL door)
 beside MERGE INTO. Covers: parse (aliases, WHERE splitting incl.
 literals containing 'WHERE', rejections), Kleene WHERE semantics on
 both statements, dtype coercion on SET, missing-WHERE = all rows, and
-the VersionedTable commit path."""
+the session-catalog front door."""
 
 from __future__ import annotations
 
@@ -142,23 +142,3 @@ def test_sql_update_and_delete_against_views(spark):
     assert [r[0] for r in _rows(out2)] == [1, 3]
 
 
-def test_sql_update_versioned_commit_path(spark, tmp_path):
-    from fbs_data_pipelines_spark.sources.versioned import VersionedTable
-
-    vt = VersionedTable(spark, str(tmp_path / "vt"))
-    vt.commit(_target(spark))
-    out = sql_update(
-        spark,
-        "UPDATE t SET name = 'X' WHERE id = 2",
-        versioned={"t": vt},
-    )
-    assert ("2", "X", "20.0") in {
-        tuple(r) for r in vt.read().collect()
-    } or (2, "X", 20.0) in {tuple(r) for r in vt.read().collect()}
-    # history: v1 pre-update still readable
-    assert len(vt.history()) == 2
-    out2 = sql_delete(
-        spark, "DELETE FROM t WHERE id = 1", versioned={"t": vt}
-    )
-    assert len(vt.history()) == 3
-    assert sorted(r["id"] for r in out2.collect()) == [2, 3]

@@ -268,7 +268,7 @@ def test_unknown_column_rejected(spark):
 
 
 # ---------------------------------------------------------------------------
-# front door: views + VersionedTable commit path
+# front door: session-catalog views
 # ---------------------------------------------------------------------------
 
 
@@ -283,28 +283,6 @@ def test_merge_into_views(spark):
     )
     assert out.count() == 4
     assert _rows(out.filter("id = 2")) == [(2, "B", 200.0)]
-
-
-def test_merge_into_versioned_commit(spark, tmp_path):
-    from fbs_data_pipelines_spark.sources.versioned import VersionedTable
-
-    vt = VersionedTable(spark, str(tmp_path / "vt"), id_col="id")
-    vt.commit(_target(spark))
-    v0 = vt.latest_version()
-    _source(spark).createOrReplaceTempView("mrg_src_vt")
-    out = merge_into(
-        spark,
-        "MERGE INTO vt AS t USING mrg_src_vt AS s ON t.id = s.id "
-        "WHEN MATCHED THEN UPDATE SET * "
-        "WHEN NOT MATCHED THEN INSERT *",
-        versioned={"vt": vt},
-    )
-    assert out.count() == 4
-    # committed as a NEW version; time travel still reads the old state
-    assert vt.latest_version() == v0 + 1
-    assert vt.read(version=v0).count() == 3
-    # bucketed VersionedTables store a stable all-string schema
-    assert _rows(vt.read().filter("id = 4")) == [("4", "d", "40.0")]
 
 
 # ---------------------------------------------------------------------------

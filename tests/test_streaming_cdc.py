@@ -160,50 +160,6 @@ def test_intermediate_snapshots_time_travel(spark, base_dir):
     assert per_version[0] in ({1: "a", 2: "b"}, {})
 
 
-def test_compact_tombstones_respects_watermark(spark):
-    """Compaction drops only tombstones at/below the retention
-    watermark; live rows and newer tombstones (still guarding
-    stragglers) survive, and the live snapshot is unchanged."""
-    from fbs_data_pipelines_spark.operators.cdc import (
-        cdc_compact_tombstones,
-    )
-
-    state = spark.createDataFrame(
-        [
-            (1, 9, "U", "a"),    # live — kept
-            (2, 3, "D", None),   # old tombstone — compacted away
-            (3, 8, "D", None),   # tombstone above watermark — kept
-            (4, 2, None, "d"),   # NULL op is not a delete — kept
-        ],
-        SCHEMA,
-    )
-    out = cdc_compact_tombstones(state, watermark_seq=5)
-    keys = {r.k for r in out.collect()}
-    assert keys == {1, 3, 4}
-    snap_before = {r.k for r in cdc_snapshot(state).collect()}
-    snap_after = {r.k for r in cdc_snapshot(out).collect()}
-    assert snap_before == snap_after == {1, 4}
-    # narrow plan: no exchange, no join
-    plan = out._jdf.queryExecution().optimizedPlan().toString()
-    assert "Join" not in plan and "Exchange" not in plan
-
-
-def test_compact_keeps_null_seq_tombstone(spark):
-    """A tombstone with NULL seq cannot be proven below the retention
-    watermark — three-valued `seq <= wm` must KEEP it, not silently
-    drop it."""
-    from fbs_data_pipelines_spark.operators.cdc import (
-        cdc_compact_tombstones,
-    )
-
-    state = spark.createDataFrame(
-        [(1, None, "D", None), (2, 2, "D", None), (3, 9, "I", "c")],
-        SCHEMA,
-    )
-    out = {r.k for r in cdc_compact_tombstones(state, 5).collect()}
-    assert out == {1, 3}  # NULL-seq tombstone kept, provable one gone
-
-
 def test_bucketed_null_key_does_not_crash(spark, base_dir):
     """A NULL PK buckets like the empty string instead of writing a
     __HIVE_DEFAULT_PARTITION__ dir that crashes the int bucket parse;
@@ -233,38 +189,6 @@ def test_bucketed_null_key_does_not_crash(spark, base_dir):
     got = {r.v for r in t.read(v2).collect()}
     assert "nullkey2" in got and "nullkey" not in got
     assert "emptykey" in got  # shares the bucket, survives the fold
-
-
-def test_compact_cdc_table_carries_batch_id(spark, base_dir):
-    """Compaction commits a NEW version with the live batch_id carried
-    forward — a fresh-checkpoint full replay after compaction must
-    still skip every batch (no re-fold onto compacted state), and
-    folds after compaction still work."""
-    from fbs_data_pipelines_spark.operators.cdc import compact_cdc_table
-
-    src = os.path.join(base_dir, "src")
-    table = os.path.join(base_dir, "t")
-    _write_batch(src, "b1.csv", ["1,1,I,a", "2,2,D,", "3,6,D,"])
-    _run(spark, src, table, os.path.join(base_dir, "c1"))
-
-    v = compact_cdc_table(spark, table, watermark_seq=5)
-    t = VersionedTable(spark, table)
-    assert t.latest_version() == v
-    info = t.commit_info(v)
-    assert info["batch_id"] == 0  # carried forward from the fold
-    assert info["compaction_watermark_seq"] == 5
-    state = {r.k: r.op for r in t.read().collect()}
-    assert state == {1: "I", 3: "D"}  # k=2's old tombstone compacted
-
-    # fresh-checkpoint replay: batch 0 sees its id and skips
-    _run(spark, src, table, os.path.join(base_dir, "c2"))
-    assert VersionedTable(spark, table).latest_version() == v
-
-    # post-compaction fold still applies NEW batches, and the
-    # retained k=3 tombstone still blocks its straggler
-    _write_batch(src, "b2.csv", ["3,4,U,ghost", "4,7,I,d"])
-    _run(spark, src, table, os.path.join(base_dir, "c1"))
-    assert _snap(spark, table) == {1: (1, "a"), 4: (7, "d")}
 
 
 def test_winners_and_snapshot_compose_to_apply(spark):

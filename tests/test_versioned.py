@@ -232,87 +232,6 @@ def test_bucketed_mode_persists_in_table_meta(spark, table_path):
     assert {r.id for r in t2.read(version=1).collect()} == {"1", "2"}
 
 
-def test_bucketed_vacuum_keeps_referenced_dirs(spark, table_path):
-    import os
-
-    t = VersionedTable(spark, table_path, id_col="id", n_buckets=8)
-    t.commit(_df(spark, [(str(i), f"v{i}", "x") for i in range(100)]))
-    t.merge(_df(spark, [("1", "A", "x")]), target_cols=["v"])
-    t.merge(_df(spark, [("2", "B", "x")]), target_cols=["v"])
-    removed = t.vacuum(keep_last=1)
-    assert removed == [1, 2]
-    assert t.history() == [3]
-    # v1's DIRECTORY must survive: the live manifest still references
-    # its clean buckets — only its manifest entry is retired
-    assert os.path.isdir(f"{table_path}/data/v1")
-    assert not os.path.exists(f"{table_path}/manifests/v1.json")
-    with pytest.raises(FileNotFoundError):
-        t.read(version=1)
-    out = {r.id: r.v for r in t.read().collect()}
-    assert (out["1"], out["2"], out["3"]) == ("A", "B", "v3")
-    assert len(out) == 100
-
-
-def test_vacuum_keeps_live_and_recent(spark, table_path):
-    t = VersionedTable(spark, table_path)
-    for i in range(5):
-        t.commit(_df(spark, [("1", f"v{i}", "x")]))
-    removed = t.vacuum(keep_last=2)
-    assert removed == [1, 2, 3]  # keep_last counts the live version too
-    assert t.history() == [4, 5]
-    assert [r.v for r in t.read().collect()] == ["v4"]
-    assert [r.v for r in t.read(version=4).collect()] == ["v3"]
-    # keep_last=1 retains only the live version
-    assert t.vacuum(keep_last=1) == [4]
-    assert t.history() == [5]
-
-
-def test_compact_consolidates_bucketed_table(spark, table_path):
-    import glob
-    import os
-
-    t = VersionedTable(spark, table_path, id_col="id", n_buckets=8)
-    t.commit(_df(spark, [(str(i), f"v{i}", "x") for i in range(100)]))
-    t.merge(_df(spark, [("1", "A", "x")]), target_cols=["v"])
-    t.merge(_df(spark, [("2", "B", "x")]), target_cols=["v"])
-    before = {r.id: r.v for r in t.read().collect()}
-    manifest_dirs = set(
-        VersionedTable(spark, table_path)._read_manifest(3)["buckets"].values()
-    )
-    assert len(manifest_dirs) > 1  # live data scattered across versions
-
-    v = t.compact()
-    assert v == 4
-    after = {r.id: r.v for r in t.read().collect()}
-    assert after == before  # compaction never changes data
-    m = t._read_manifest(v)["buckets"]
-    assert set(m.values()) == {f"data/v{v}"}  # one directory holds it all
-    # one file per bucket in the compacted directory
-    for b in m:
-        files = glob.glob(
-            f"{table_path}/data/v{v}/__bucket={b}/*.parquet"
-        )
-        assert len(files) == 1, (b, files)
-    # history/time travel intact; vacuum can now reclaim old dirs
-    assert t.history() == [1, 2, 3, 4]
-    assert {r.id for r in t.read(version=1).collect()} == {
-        str(i) for i in range(100)
-    }
-    t.vacuum(keep_last=1)
-    assert not os.path.isdir(f"{table_path}/data/v1")
-
-
-def test_compact_plain_mode_coalesces(spark, table_path):
-    t = VersionedTable(spark, table_path)
-    t.commit(_df(spark, [(str(i), "a", "x") for i in range(50)]).repartition(8))
-    import glob
-
-    assert len(glob.glob(f"{table_path}/data/v1/*.parquet")) > 1
-    v = t.compact(n_files=1)
-    assert len(glob.glob(f"{table_path}/data/v{v}/*.parquet")) == 1
-    assert {r.id for r in t.read().collect()} == {str(i) for i in range(50)}
-
-
 def test_diff_change_feed(spark, table_path):
     t = VersionedTable(spark, table_path, id_col="id", n_buckets=4)
     t.commit(_df(spark, [("1", "a", "x"), ("2", "b", "x"), ("3", "c", "x")]))

@@ -469,36 +469,6 @@ def test_bucketed_fold_matches_model_property(spark, base_dir):
     check()
 
 
-def test_compact_cdc_table_on_bucketed_state(spark, base_dir):
-    """Tombstone compaction composes with the bucketed state table:
-    compact_cdc_table reads the typed bucketed state, drops provable
-    tombstones, and commits through the full-snapshot bucketed path
-    (an OPTIMIZE-class op — tombstones live in every bucket, so a
-    full rewrite is the right shape) with the batch id carried
-    forward, so post-compaction replays still skip."""
-    from fbs_data_pipelines_spark.operators.cdc import (
-        cdc_winners, compact_cdc_table,
-    )
-
-    t = VersionedTable(spark, os.path.join(base_dir, "t"), id_col="k",
-                       n_buckets=4, typed=True)
-    log = spark.createDataFrame(
-        [(1, 1, "I", 1.0), (2, 3, "D", None), (3, 8, "D", None)],
-        SCHEMA,
-    )
-    t.commit(cdc_winners(log, ["k"]), commit_meta={"batch_id": 5})
-    v = compact_cdc_table(
-        spark, os.path.join(base_dir, "t"), watermark_seq=5
-    )
-    t2 = VersionedTable(spark, os.path.join(base_dir, "t"))
-    assert t2.latest_version() == v
-    info = t2.commit_info(v)
-    assert info["batch_id"] == 5  # carried forward
-    state = {r.k: r.op for r in t2.read().collect()}
-    assert state == {1: "I", 3: "D"}  # k=2's provable tombstone gone
-    assert dict(t2.read().dtypes)["seq"] == "bigint"  # still typed
-
-
 def test_streaming_cdc_bucketed_equals_plain(spark, base_dir):
     """The bucketed streaming fold yields EXACTLY the plain fold's
     snapshot (same winners, typed), while rewriting only dirty

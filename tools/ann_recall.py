@@ -5,7 +5,7 @@ scan fraction — this tool quantifies the trade on the real embeddings
 table so the dials (num_planes, nlist, nprobe) are chosen from data,
 not vibes. Usage:
 
-    PYTHONPATH=/root/repo python tools/ann_recall.py [sf_dir]
+    PYTHONPATH=. python tools/ann_recall.py [sf_dir]
 
 Prints one JSON line per configuration:
     {"method": ..., "k": ..., "recall_at_k": ..., "n_queries": ...}
@@ -17,10 +17,13 @@ from __future__ import annotations
 
 import json
 import sys
+from pathlib import Path
+
+REPO = str(Path(__file__).resolve().parents[1])
 
 
 def main() -> int:
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, REPO)
     from pyspark.sql import functions as F
 
     from fbs_data_pipelines_spark import get_spark

@@ -19,7 +19,7 @@ node dies mid-job. The probe asserts three things:
    duplicate, drop, or reorder any row.
 
 Usage:
-    PYTHONPATH=/root/repo python tools/chaos_probe.py \
+    PYTHONPATH=. python tools/chaos_probe.py \
         [query ...] [--sf-dir DIR] [--cluster W,C,M] [--iters N] \
         [--victims N]
 
@@ -55,8 +55,11 @@ import subprocess
 import sys
 import threading
 import time
+from pathlib import Path
 
 import duckdb
+
+REPO = str(Path(__file__).resolve().parents[1])
 
 TABLES = [
     "region", "nation", "customer", "supplier", "part",
@@ -108,7 +111,7 @@ def sorted_rows(cols, rows):
 
 
 def main() -> int:
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, REPO)
     argv = sys.argv[1:]
     sf_dir, cluster, iters, victims = "/root/testdata/sf0.1", "2,2,1536", 3, 1
     gc_pause = 0
@@ -155,7 +158,7 @@ def main() -> int:
         f"master: {master}  sf-dir: {sf_dir}  iters: {iters}  "
         f"victims: {victims}  gc-pause: {gc_pause}  conf: {extra_conf}"
     )
-    extra_conf.setdefault("spark.executorEnv.PYTHONPATH", "/root/repo")
+    extra_conf.setdefault("spark.executorEnv.PYTHONPATH", REPO)
     spark = get_spark(
         app_name="chaos-probe",
         master=master,

@@ -4,15 +4,18 @@ Runs every ``__spark_entry__.queries()`` entry at sf0.01 and compares
 against ``oracle_sql()`` via DuckDB: row count, column names, and
 order-insensitive exact value comparison (sorted rows). Usage:
 
-    PYTHONPATH=/root/repo python tools/check_oracle.py [name ...]
+    PYTHONPATH=. python tools/check_oracle.py [name ...]
 """
 
 from __future__ import annotations
 
 import sys
 import time
+from pathlib import Path
 
 import duckdb
+
+REPO = str(Path(__file__).resolve().parents[1])
 
 SF_DIR = "/root/testdata/sf0.01"
 TABLES = [
@@ -204,7 +207,7 @@ def unknown_names(only: set, queries: dict) -> list:
 
 
 def main() -> int:
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, REPO)
     import __spark_entry__ as entry_mod
 
     rest, sweep_conf = parse_sweep_confs(sys.argv[1:])
@@ -224,7 +227,7 @@ def main() -> int:
         print(f"master: {master}")
         # separate executor JVMs spawn their own Python workers, which
         # must be able to import the package and the entry module
-        sweep_conf.setdefault("spark.executorEnv.PYTHONPATH", "/root/repo")
+        sweep_conf.setdefault("spark.executorEnv.PYTHONPATH", REPO)
 
     vanilla = "--vanilla" in sys.argv
     if vanilla:

@@ -27,7 +27,7 @@ query (vanilla default-config session, sf0.01),
      has repeatedly hash-matched — not refused.
 
 Usage:
-    PYTHONPATH=/root/repo python tools/driver_dryrun.py [n_window]
+    PYTHONPATH=. python tools/driver_dryrun.py [n_window]
 ``n_window`` ≤ 0 (or omitted via final_gate) rehearses the FULL
 registry — the standing final-gate mode since r13 (judge directive
 #3: the full rehearsal is the best predictor of driver-red rows and
@@ -39,9 +39,12 @@ from __future__ import annotations
 
 import sys
 import time
+from pathlib import Path
 
 import duckdb
 import pandas as pd
+
+REPO = str(Path(__file__).resolve().parents[1])
 
 SF_DIR = "/root/testdata/sf0.01"
 TABLES = [
@@ -88,7 +91,7 @@ def kind_refusals(spdf: pd.DataFrame, ddf: pd.DataFrame) -> list[str]:
 
 
 def main() -> int:
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, REPO)
     n = int(sys.argv[1]) if len(sys.argv) > 1 else 50
 
     from pyspark.sql import SparkSession

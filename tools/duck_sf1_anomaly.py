@@ -15,7 +15,7 @@ Modes:
                 materialized the sf1 dedup query (bench.py's exact
                 co-residency), in this process.
 
-Usage: PYTHONPATH=/root/repo python tools/duck_sf1_anomaly.py <mode>
+Usage: PYTHONPATH=. python tools/duck_sf1_anomaly.py <mode>
 Prints one JSON line.
 """
 
@@ -25,10 +25,12 @@ import json
 import multiprocessing
 import sys
 import time
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+REPO = str(Path(__file__).resolve().parents[1])
+sys.path.insert(0, REPO)
 
-SF1 = "/root/repo/.localdata/sf1"
+SF1 = str(Path(REPO) / ".localdata" / "sf1")
 TABLES = [
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings",

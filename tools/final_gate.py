@@ -42,7 +42,7 @@ Runs, in order (each step's full output goes to /tmp/final_gate/):
   9. ledger_check --check                 (README ledger drift)
 
 Usage:
-    PYTHONPATH=/root/repo python tools/final_gate.py [--window-only] \
+    PYTHONPATH=. python tools/final_gate.py [--window-only] \
         [--tz-full] [new_or_changed_query ...]
 
 Exit 0 only if every step passes. Paste the printed stamp block into

@@ -8,11 +8,11 @@ of hand-maintaining a list in README.md, which drifted (13 stale
 entries found by the round-6 judge).
 
 Usage:
-    PYTHONPATH=/root/repo python tools/ledger_check.py            # summary
-    PYTHONPATH=/root/repo python tools/ledger_check.py --readme   # emit README block
-    PYTHONPATH=/root/repo python tools/ledger_check.py --check    # exit 1 on README drift
-    PYTHONPATH=/root/repo python tools/ledger_check.py --plan-next  # next window per SURVEY §8
-    PYTHONPATH=/root/repo python tools/ledger_check.py --stamp-oracles  # refresh ORACLE_HASHES.json
+    PYTHONPATH=. python tools/ledger_check.py            # summary
+    PYTHONPATH=. python tools/ledger_check.py --readme   # emit README block
+    PYTHONPATH=. python tools/ledger_check.py --check    # exit 1 on README drift
+    PYTHONPATH=. python tools/ledger_check.py --plan-next  # next window per SURVEY §8
+    PYTHONPATH=. python tools/ledger_check.py --stamp-oracles  # refresh ORACLE_HASHES.json
                                                           # (run at ROUND START, pre-edit)
 
 ``tests/test_ledger.py`` runs the ``--check`` logic under pytest so any

@@ -5,7 +5,7 @@ ReadSchema pruned to the needed columns, which join strategies fire,
 how many shuffles (Exchange) appear, and is whole-stage codegen
 active. Usage:
 
-    PYTHONPATH=/root/repo python tools/plan_audit.py [name ...]
+    PYTHONPATH=. python tools/plan_audit.py [name ...]
 
 ``--lambda-capture [name ...]`` runs the lambda-capture rule
 (:func:`lambda_captures`) over the analyzed plan of every registry

@@ -7,7 +7,7 @@ probability 1−e^(−d) and never-undercount. This tool measures both on
 the real testdata tables so the bounds are evidence, not citations.
 
 Usage:
-    PYTHONPATH=/root/repo python tools/sketch_accuracy.py [sf_dir]
+    PYTHONPATH=. python tools/sketch_accuracy.py [sf_dir]
 
 Prints one JSON line per check:
   {"sketch": "hll", "column": ..., "exact": N, "approx": N,
@@ -21,10 +21,13 @@ from __future__ import annotations
 import json
 import math
 import sys
+from pathlib import Path
+
+REPO = str(Path(__file__).resolve().parents[1])
 
 
 def main() -> int:
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, REPO)
     from pyspark.sql import functions as F
 
     from fbs_data_pipelines_spark import get_spark

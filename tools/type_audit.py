@@ -15,9 +15,9 @@ float/decimal/string, float vs decimal, …) are fatal — that is
 exactly the r11 `variant_json` red row (Spark int64 vs DuckDB
 HUGEINT→float64).
 
-    PYTHONPATH=/root/repo python tools/type_audit.py [names…]
+    PYTHONPATH=. python tools/type_audit.py [names…]
         exit 1 on any KIND diff; width-only diffs are informational
-    PYTHONPATH=/root/repo python tools/type_audit.py --strict
+    PYTHONPATH=. python tools/type_audit.py --strict
         exit 1 on width-only diffs too
 
 ``tests/test_type_audit.py`` runs the KIND audit registry-wide under
@@ -27,8 +27,11 @@ pytest so it cannot be skipped at round end (r11 judge directive #2b).
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
 import duckdb
+
+REPO = str(Path(__file__).resolve().parents[1])
 
 SF_DIR = "/root/testdata/sf0.001"
 TABLES = [
@@ -150,7 +153,7 @@ def canon_spark(dt: str) -> str:
 
 
 def main() -> int:
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, REPO)
     import __spark_entry__ as entry_mod
 
     if "--vanilla" in sys.argv:

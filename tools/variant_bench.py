@@ -7,7 +7,7 @@ when the data is benign, so making it the default is free. The skew
 claims themselves are covered by plan tests (window keys, broadcast
 shapes) in tests/.
 
-Usage: PYTHONPATH=/root/repo python tools/variant_bench.py [sf_dir]
+Usage: PYTHONPATH=. python tools/variant_bench.py [sf_dir]
 Prints one JSON line per pair: {pair, baseline_s, hardened_s, rows}.
 """
 
@@ -16,8 +16,10 @@ from __future__ import annotations
 import json
 import sys
 import time
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+REPO = str(Path(__file__).resolve().parents[1])
+sys.path.insert(0, REPO)
 
 from pyspark.sql import Window  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
