@@ -2098,7 +2098,6 @@ def q_streaming_merge(spark, sf_dir):
         ckpt,
         id_col="o_orderkey",
         target_cols=["o_totalprice", "o_orderpriority"],
-        versioned=True,
     )
     try:
         q.awaitTermination(180)

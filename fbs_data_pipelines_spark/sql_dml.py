@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 from fbs_data_pipelines_spark.sql_merge import (
     _split_top_level,
     _strip_alias,
+    _top_level_words,
 )
 
 __all__ = [
@@ -78,42 +79,14 @@ _DELETE_RE = re.compile(
 
 
 def _split_where(rest: str) -> tuple[str, str | None]:
-    """Split ``SET ... [WHERE ...]`` at the LAST top-level WHERE
-    keyword (quote/paren-aware, same state machine family as
-    sql_merge's splitters) so a WHERE inside a string literal or a
-    parenthesized subexpression never truncates the SET list."""
-    depth, quote, i, n = 0, None, 0, len(rest)
-    positions = []
-    while i < n:
-        ch = rest[i]
-        if quote:
-            if ch == quote:
-                quote = None
-            i += 1
-            continue
-        if ch in ("'", '"'):
-            quote = ch
-            i += 1
-            continue
-        if ch == "(":
-            depth += 1
-            i += 1
-            continue
-        if ch == ")":
-            depth -= 1
-            i += 1
-            continue
-        if (
-            depth == 0
-            and (i == 0 or not (rest[i - 1].isalnum() or rest[i - 1] == "_"))
-            and re.match(r"WHERE\b", rest[i:], re.IGNORECASE)
-        ):
-            positions.append(i)
-        i += 1
-    if not positions:
+    """Split ``SET ... [WHERE ...]`` at the last top-level ``WHERE``,
+    so a WHERE in a literal or a subexpression never cuts the SET
+    list."""
+    wheres = [i for word, i in _top_level_words(rest) if word == "WHERE"]
+    if not wheres:
         return rest.strip(), None
-    p = positions[-1]
-    return rest[:p].strip(), rest[p + len("WHERE"):].strip()
+    p = wheres[-1]
+    return rest[:p].strip(), rest[p + len("WHERE") :].strip()
 
 
 def parse_update(statement: str) -> UpdateStatement:

@@ -39,6 +39,15 @@ value. No driver-side data movement. A cardinality violation (two
 source rows matching one target row — rejected by the SQL standard) is
 optionally detected with ``check_cardinality=True``, which costs one
 extra aggregate over the matched keys.
+
+Lexical rule, shared by all three SQL front doors (this module,
+``sql_dml`` and ``sql_qualify``): a comma, paren or keyword counts only
+in code, i.e. outside ``'…'`` and ``"…"`` string literals (where a
+backslash escapes the next character, as in Spark) and outside
+backtick-quoted identifiers. A keyword is a whole ``\\w+`` word at
+paren depth 0, so ``from1`` is never ``FROM``. ``_scan`` and
+``_top_level_words`` implement the rule; every splitter is built on
+them.
 """
 
 from __future__ import annotations
@@ -126,79 +135,62 @@ _NMBS_RE = re.compile(
 )
 
 
-def _split_when_clauses(text: str) -> list[str]:
-    """Split ``<on> WHEN ... WHEN ...`` at top-level WHEN boundaries
-    only — the same quote/paren state machine as ``_split_top_level``,
-    so a string literal containing ``'WHEN matched'`` or a predicate
-    like ``(status = 'WHEN MATCHED THEN')`` never splits mid-
-    expression. A boundary is a ``WHEN`` keyword (word-bounded) at
-    paren depth 0 outside quotes, immediately followed by
-    ``[NOT] MATCHED``."""
-    pieces: list[str] = []
-    depth, quote, start, i, n = 0, None, 0, 0, len(text)
-    while i < n:
-        ch = text[i]
+def _scan(text: str):
+    """Yield ``(index, char, depth)`` for each code character of
+    ``text`` (the lexical rule in the module docstring). ``depth`` is
+    the paren depth around the character: a ``(`` and its matching
+    ``)`` both report the depth outside them."""
+    depth, quote, escaped = 0, None, False
+    for i, ch in enumerate(text):
         if quote:
-            if ch == quote:
+            if escaped:
+                escaped = False
+            elif ch == "\\" and quote != "`":
+                escaped = True
+            elif ch == quote:
                 quote = None
-            i += 1
             continue
-        if ch in ("'", '"'):
+        if ch in "'\"`":
             quote = ch
-            i += 1
-            continue
-        if ch == "(":
-            depth += 1
-            i += 1
             continue
         if ch == ")":
             depth -= 1
-            i += 1
-            continue
-        if (
-            depth == 0
-            and (i == 0 or not (text[i - 1].isalnum() or text[i - 1] == "_"))
-        ):
-            m = _WHEN_HEAD_RE.match(text, i)
-            if m:
-                pieces.append(text[start:i])
-                # drop the leading "WHEN" from the piece body, as the
-                # old regex split did
-                start = i + 4
-                i = m.end()
-                continue
-        i += 1
+        yield i, ch, depth
+        if ch == "(":
+            depth += 1
+
+
+def _top_level_words(text: str):
+    """Yield ``(WORD, start)`` for each whole ``\\w+`` word of code
+    at paren depth 0, upper-cased."""
+    top = {i for i, _, depth in _scan(text) if depth == 0}
+    for m in re.finditer(r"\w+", text):
+        if m.start() in top:
+            yield m.group().upper(), m.start()
+
+
+def _split_when_clauses(text: str) -> list[str]:
+    """Split ``<on> WHEN ... WHEN ...`` at each top-level ``WHEN``
+    that opens a ``[NOT] MATCHED`` clause; the pieces after the first
+    drop their leading ``WHEN``."""
+    pieces, start = [], 0
+    for word, i in _top_level_words(text):
+        if word == "WHEN" and _WHEN_HEAD_RE.match(text, i):
+            pieces.append(text[start:i])
+            start = i + len("WHEN")
     pieces.append(text[start:])
     return pieces
 
 
 def _split_top_level(text: str) -> list[str]:
-    """Split on commas that are not nested inside parentheses or
-    quoted strings — enough for restricted SET / VALUES lists."""
-    parts, depth, buf, quote = [], 0, [], None
-    for ch in text:
-        if quote:
-            buf.append(ch)
-            if ch == quote:
-                quote = None
-            continue
-        if ch in ("'", '"'):
-            quote = ch
-            buf.append(ch)
-        elif ch == "(":
-            depth += 1
-            buf.append(ch)
-        elif ch == ")":
-            depth -= 1
-            buf.append(ch)
-        elif ch == "," and depth == 0:
-            parts.append("".join(buf).strip())
-            buf = []
-        else:
-            buf.append(ch)
-    if "".join(buf).strip():
-        parts.append("".join(buf).strip())
-    return parts
+    """Split on top-level commas, stripping each part; a blank last
+    part is dropped — enough for restricted SET / VALUES lists."""
+    cuts = [i for i, ch, depth in _scan(text) if ch == "," and depth == 0]
+    parts = [
+        text[a + 1 : b].strip()
+        for a, b in zip([-1, *cuts], [*cuts, len(text)])
+    ]
+    return parts if parts[-1] else parts[:-1]
 
 
 def _strip_alias(col: str, aliases: tuple[str, ...]) -> str:

@@ -27,9 +27,9 @@ the OUTER query, so they see the filtered rows — exactly QUALIFY's
 evaluation order (WHERE → GROUP BY/HAVING → windows → QUALIFY →
 ORDER BY → LIMIT).
 
-All scanning is quote- and paren-aware (the ``sql_merge`` state
-machine), so literals like ``'not a QUALIFY'`` or subqueries in the
-select list never split mid-expression. ``SELECT DISTINCT … QUALIFY``
+All scanning follows the lexical rule in ``sql_merge``'s docstring,
+so literals like ``'not a QUALIFY'`` or subqueries in the select list
+never split mid-expression. ``SELECT DISTINCT … QUALIFY``
 is rejected (appending the helper column would change the distinct
 key); statements without a top-level QUALIFY pass through to
 ``spark.sql`` untouched.
@@ -41,46 +41,11 @@ import re
 
 from pyspark.sql import DataFrame, SparkSession
 
-from fbs_data_pipelines_spark.sql_merge import _split_top_level
-
-_KEYWORD = {"QUALIFY", "FROM", "SELECT", "ORDER", "LIMIT"}
-
-
-def _top_level_positions(text: str) -> list[tuple[str, int]]:
-    """(keyword, start) for every top-level occurrence of the
-    keywords we care about, outside quotes and parentheses."""
-    out: list[tuple[str, int]] = []
-    depth, quote, i, n = 0, None, 0, len(text)
-    while i < n:
-        ch = text[i]
-        if quote:
-            if ch == quote:
-                quote = None
-            i += 1
-            continue
-        if ch in ("'", '"'):
-            quote = ch
-            i += 1
-            continue
-        if ch == "(":
-            depth += 1
-            i += 1
-            continue
-        if ch == ")":
-            depth -= 1
-            i += 1
-            continue
-        if depth == 0 and ch.isalpha() and (
-            i == 0 or not (text[i - 1].isalnum() or text[i - 1] == "_")
-        ):
-            m = re.match(r"[A-Za-z_]+", text[i:])
-            word = m.group(0).upper()
-            if word in _KEYWORD:
-                out.append((word, i))
-            i += len(m.group(0))
-            continue
-        i += 1
-    return out
+from fbs_data_pipelines_spark.sql_merge import (
+    _scan,
+    _split_top_level,
+    _top_level_words,
+)
 
 
 def _select_aliases(select_list: str) -> dict[str, str]:
@@ -102,7 +67,7 @@ def rewrite_qualify(statement: str) -> str | None:
     """The rewritten plain-SQL text, or None when the statement has
     no top-level QUALIFY (caller should run it untouched)."""
     text = statement.strip().rstrip(";")
-    pos = _top_level_positions(text)
+    pos = list(_top_level_words(text))
     qual = [p for w, p in pos if w == "QUALIFY"]
     if not qual:
         return None
@@ -176,25 +141,13 @@ def _parse_modifiers(item: str) -> tuple[list[str], dict[str, str]] | None:
         if not m:
             raise ValueError(f"unparseable star modifier tail: {rest!r}")
         kind = m.group(1).upper()
-        # find the matching close paren (quote-aware)
-        depth, quote, i = 0, None, m.end() - 1
-        while i < len(rest):
-            ch = rest[i]
-            if quote:
-                if ch == quote:
-                    quote = None
-            elif ch in ("'", '"'):
-                quote = ch
-            elif ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-                if depth == 0:
-                    break
-            i += 1
-        if depth != 0:
+        close = next(
+            (i for i, ch, depth in _scan(rest) if ch == ")" and depth == 0),
+            None,
+        )
+        if close is None:
             raise ValueError(f"unbalanced parens in star modifier: {item!r}")
-        body = rest[m.end() : i]
+        body = rest[m.end() : close]
         if kind == "EXCLUDE":
             if excluded:
                 raise ValueError("duplicate EXCLUDE modifier")
@@ -213,7 +166,7 @@ def _parse_modifiers(item: str) -> tuple[list[str], dict[str, str]] | None:
                         f"REPLACE items need '<expr> AS <col>': {piece!r}"
                     )
                 replaced[pm.group(2)] = pm.group(1).strip()
-        rest = rest[i + 1 :].strip()
+        rest = rest[close + 1 :].strip()
     return excluded, replaced
 
 
@@ -227,7 +180,7 @@ def expand_star_modifiers(spark: SparkSession, statement: str) -> str:
     query block (star expansion under grouping is ambiguous);
     EXCLUDE/REPLACE names must exist in the schema."""
     text = statement.strip().rstrip(";")
-    pos = _top_level_positions(text)
+    pos = list(_top_level_words(text))
     selects = [p for w, p in pos if w == "SELECT"]
     froms = [p for w, p in pos if w == "FROM"]
     if not selects or not froms:
@@ -285,18 +238,6 @@ def sql_dialect(spark: SparkSession, statement: str) -> DataFrame:
     return sql_qualify(spark, expand_star_modifiers(spark, statement))
 
 
-def _inside_quotes(text: str, idx: int) -> bool:
-    """True when position ``idx`` falls inside a string literal."""
-    quote = None
-    for ch in text[:idx]:
-        if quote:
-            if ch == quote:
-                quote = None
-        elif ch in ("'", '"'):
-            quote = ch
-    return quote is not None
-
-
 def sql_time_travel(spark: SparkSession, statement: str, tables) -> DataFrame:
     """Delta/Iceberg-style time-travel SQL over the engine's
     VersionedTable: ``FROM <name> VERSION AS OF <n>`` (optional
@@ -316,9 +257,10 @@ def sql_time_travel(spark: SparkSession, statement: str, tables) -> DataFrame:
             rf"\b{re.escape(name)}\s+(?:FOR\s+)?VERSION\s+AS\s+OF\s+(\d+)",
             re.IGNORECASE,
         )
+        code = {i for i, _, _ in _scan(out)}
         pieces, last = [], 0
         for m in pattern.finditer(out):
-            if _inside_quotes(out, m.start()):
+            if m.start() not in code:
                 continue
             version = int(m.group(1))
             view = f"__{name}_v{version}"

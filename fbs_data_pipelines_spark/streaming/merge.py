@@ -3,8 +3,8 @@
 The reference achieves incrementality by full-snapshot diff
 (C2 merge, /root/reference/src/log_handler.py:99-128). In Structured
 Streaming that becomes: snapshots arrive as files → each micro-batch
-merges into the published table via ``foreachBatch`` (the canonical
-upsert-sink pattern for non-lakehouse sinks).
+merges into a ``VersionedTable`` via ``foreachBatch`` and commits a new
+version through its atomic pointer swap.
 
 Also ships a watermarked windowed aggregation (late-data-safe event
 rollup) — the streaming operator a 100 TB event pipeline needs that
@@ -20,50 +20,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from fbs_data_pipelines_spark.functions.cleaning import round_half_up
-from fbs_data_pipelines_spark.operators.audit import merge_snapshot
-
-
-def _swap_publish(spark, published_path: str, crash_after=None) -> None:
-    """Atomically-enough publish of ``<published>__staging`` over
-    ``published_path`` via rename, keeping a ``__old`` backup so a
-    crash at ANY step leaves a complete copy of the previous table
-    under either dst or bak (staging already holds the new one).
-
-    Step order matters: if a prior crash left the table ONLY under
-    bak, restore it to dst first — deleting bak while dst is absent
-    would destroy the sole surviving copy. The caller materialized
-    the staging write before calling, so the restored files are no
-    longer read by any live plan.
-
-    ``crash_after(step_name)`` is a test-only fault-injection hook
-    called after each step; raising from it simulates a crash there.
-    """
-    base = published_path.rstrip("/")
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    fs = jvm.org.apache.hadoop.fs.FileSystem.get(
-        jvm.java.net.URI.create(base + "__staging"), conf
-    )
-    dst = jvm.org.apache.hadoop.fs.Path(base)
-    bak = jvm.org.apache.hadoop.fs.Path(base + "__old")
-    staging = jvm.org.apache.hadoop.fs.Path(base + "__staging")
-
-    def _step(name: str) -> None:
-        if crash_after is not None:
-            crash_after(name)
-
-    if not fs.exists(dst) and fs.exists(bak):
-        fs.rename(bak, dst)
-        _step("restore")
-    fs.delete(bak, True)  # stale backup from a crash after publish
-    _step("delete_stale_bak")
-    if fs.exists(dst):
-        fs.rename(dst, bak)
-        _step("retire_dst")
-    fs.rename(staging, dst)
-    _step("publish")
-    fs.delete(bak, True)
-    _step("cleanup")
 
 
 def streaming_snapshot_merge(
@@ -74,76 +30,28 @@ def streaming_snapshot_merge(
     checkpoint_dir: str,
     id_col: str,
     target_cols: Sequence[str],
-    versioned: bool = False,
 ) -> StreamingQuery:
     """File-arrival stream of snapshots → foreachBatch C2 merge.
 
     Each micro-batch plays the reference's get_table_updated against
     the current published table — SCD-1 with exactly-once per batch
-    via the checkpoint.
-
-    ``versioned=True`` is the lakehouse cutover: the batch body
-    becomes one ``VersionedTable.merge`` (MERGE-shaped upsert with an
-    atomic pointer commit, snapshot isolation, and time travel —
-    ``sources/versioned.py``), replacing the rename dance entirely.
-    ``versioned=False`` keeps the plain-parquet publish with the
-    crash-safe backup swap below.
+    via the checkpoint. The batch body is one ``VersionedTable.merge``
+    into the table at ``published_path`` (MERGE-shaped upsert with an
+    atomic pointer commit, snapshot isolation and time travel —
+    ``sources/versioned.py``).
     """
+    from fbs_data_pipelines_spark.sources.versioned import VersionedTable
 
-    stream = (
+    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
+        VersionedTable(batch_df.sparkSession, published_path).merge(
+            batch_df, id_col=id_col, target_cols=list(target_cols)
+        )
+
+    return (
         spark.readStream.schema(snapshot_schema)
         .option("maxFilesPerTrigger", 1)
         .csv(snapshot_dir, header=True)
-    )
-
-    if versioned:
-        from fbs_data_pipelines_spark.sources.versioned import VersionedTable
-
-        def merge_batch_versioned(batch_df: DataFrame, batch_id: int) -> None:
-            VersionedTable(batch_df.sparkSession, published_path).merge(
-                batch_df, id_col=id_col, target_cols=list(target_cols)
-            )
-
-        return (
-            stream.writeStream.foreachBatch(merge_batch_versioned)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark_b = batch_df.sparkSession
-        backup_path = published_path.rstrip("/") + "__old"
-        tmp_path = published_path.rstrip("/") + "__staging"
-        # a crash between the two publish renames below leaves the
-        # table only under __old — recover from it on replay so the
-        # checkpoint's exactly-once contract holds (previously a
-        # delete-then-rename swap could lose ALL prior data if the
-        # process died in the gap).
-        published = None
-        for path in (published_path, backup_path):
-            try:
-                published = spark_b.read.parquet(path)
-                break
-            except Exception:
-                continue
-        if published is None:
-            merged = batch_df
-        else:
-            merged = merge_snapshot(
-                published, batch_df, id_col=id_col, target_cols=list(target_cols)
-            )
-        # the merged plan READS the published table, so it can't be
-        # overwritten in place. Scale-safe cycle break: write to a
-        # staging dir (distributed — never collects through the
-        # driver), then swap via the Hadoop FS API (portable across
-        # local/HDFS/S3A). The staging write MATERIALIZES the merge
-        # before any rename touches the published copy.
-        merged.write.mode("overwrite").parquet(tmp_path)
-        _swap_publish(spark_b, published_path)
-
-    return (
-        stream.writeStream.foreachBatch(merge_batch)
+        .writeStream.foreachBatch(merge_batch)
         .option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True)
         .start()

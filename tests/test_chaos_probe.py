@@ -15,7 +15,8 @@ from pathlib import Path
 REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO / "tools"))
 
-from chaos_probe import parse_executor_pids, sorted_rows  # noqa: E402
+from chaos_probe import parse_executor_pids  # noqa: E402
+from check_oracle import sorted_rows  # noqa: E402
 
 PS_SAMPLE = """\
     PID ARGS

@@ -14,6 +14,7 @@ from fbs_data_pipelines_spark.operators.multimodal import (
     extract_image_features,
 )
 from fbs_data_pipelines_spark.schema.registry import ColumnSpec, DataDictionary
+from fbs_data_pipelines_spark.sources.versioned import VersionedTable
 from fbs_data_pipelines_spark.streaming.merge import (
     streaming_snapshot_merge,
     windowed_event_rollup,
@@ -103,9 +104,12 @@ def test_streaming_snapshot_merge_end_to_end(spark):
 
     os.makedirs(snap_dir)
     # seed published table: ids 1..3
-    spark.createDataFrame(
-        [(1, "a", "x"), (2, "b", "x"), (3, "c", "x")], "id string, v string, w string"
-    ).write.parquet(pub)
+    VersionedTable(spark, pub).commit(
+        spark.createDataFrame(
+            [(1, "a", "x"), (2, "b", "x"), (3, "c", "x")],
+            "id string, v string, w string",
+        )
+    )
     # snapshot: id2 changed, id4 new, id1/3 unchanged
     with open(f"{snap_dir}/snap1.csv", "w") as f:
         f.write("id,v,w\n1,a,x\n2,B,x\n3,c,x\n4,d,x\n")
@@ -125,117 +129,8 @@ def test_streaming_snapshot_merge_end_to_end(spark):
         if q.isActive:
             q.stop()
 
-    final = {r.id: r.v for r in spark.read.parquet(pub).collect()}
+    final = {r.id: r.v for r in VersionedTable(spark, pub).read().collect()}
     assert final == {"1": "a", "2": "B", "3": "c", "4": "d"}
-    shutil.rmtree(tmp, ignore_errors=True)
-
-
-def test_streaming_merge_recovers_from_mid_swap_crash(spark):
-    # simulate a crash in the publish swap's danger window: the old
-    # table was renamed aside to __old but the new one never landed.
-    # The next batch must recover the prior data from the backup, not
-    # rebuild from the incoming snapshot alone.
-    tmp = tempfile.mkdtemp(prefix="merge_crash_")
-    snap_dir = f"{tmp}/snapshots"
-    pub = f"{tmp}/published"
-    ckpt = f"{tmp}/ckpt"
-    import os
-
-    os.makedirs(snap_dir)
-    # the published copy carries w='PUB' (w is NOT a target col, so
-    # unchanged rows keep the published side's w — the only way 'PUB'
-    # can appear in the output is via backup recovery)
-    spark.createDataFrame(
-        [(1, "a", "PUB"), (2, "b", "PUB")], "id string, v string, w string"
-    ).write.parquet(pub + "__old")  # crash left only the backup
-    with open(f"{snap_dir}/snap1.csv", "w") as f:
-        f.write("id,v,w\n1,a,SNAP\n2,B,SNAP\n")
-
-    q = streaming_snapshot_merge(
-        spark,
-        snap_dir,
-        "id string, v string, w string",
-        pub,
-        ckpt,
-        id_col="id",
-        target_cols=["v"],
-    )
-    try:
-        q.awaitTermination(60)
-    finally:
-        if q.isActive:
-            q.stop()
-
-    final = {r.id: (r.v, r.w) for r in spark.read.parquet(pub).collect()}
-    # id1 unchanged → published values (w='PUB') prove the backup was
-    # read; id2 changed → snapshot values
-    assert final == {"1": ("a", "PUB"), "2": ("B", "SNAP")}
-    assert not os.path.exists(pub + "__old")  # backup cleaned up
-    shutil.rmtree(tmp, ignore_errors=True)
-
-
-@pytest.mark.parametrize(
-    "start_state, crash_step",
-    [
-        # normal publish: prior table under dst
-        ("dst", "delete_stale_bak"),
-        ("dst", "retire_dst"),
-        ("dst", "publish"),
-        ("dst", "cleanup"),
-        # replay-after-crash: prior table ONLY under __old (the
-        # scenario where the pre-fix swap could delete the sole copy)
-        ("bak", "restore"),
-        ("bak", "delete_stale_bak"),
-        ("bak", "retire_dst"),
-        ("bak", "publish"),
-    ],
-)
-def test_swap_publish_survives_crash_at_every_step(spark, start_state, crash_step):
-    from fbs_data_pipelines_spark.streaming.merge import _swap_publish
-
-    tmp = tempfile.mkdtemp(prefix="swap_crash_")
-    pub = f"{tmp}/published"
-    prior = spark.createDataFrame([(1, "OLD")], "id long, v string")
-    new = spark.createDataFrame([(1, "NEW")], "id long, v string")
-    prior.write.parquet(pub if start_state == "dst" else pub + "__old")
-    new.write.parquet(pub + "__staging")
-
-    class Boom(Exception):
-        pass
-
-    def crash_after(step):
-        if step == crash_step:
-            raise Boom(step)
-
-    with pytest.raises(Boom):
-        _swap_publish(spark, pub, crash_after=crash_after)
-
-    # invariant: a COMPLETE copy survives — the new table if the
-    # publish rename landed, else the prior table under dst or bak
-    survivors = {}
-    for suffix in ("", "__old"):
-        try:
-            rows = spark.read.parquet(pub + suffix).collect()
-            survivors[suffix or "dst"] = {r.v for r in rows}
-        except Exception:
-            pass
-    assert survivors, f"no readable copy after crash at {crash_step}"
-    if crash_step in ("publish", "cleanup"):
-        assert survivors.get("dst") == {"NEW"}
-    else:
-        assert {"OLD"} in survivors.values()
-
-    # replay: re-stage the new table (merge_batch recomputes it from
-    # whichever copy survived) and re-run the swap to completion
-    import shutil as _sh
-
-    _sh.rmtree(pub + "__staging", ignore_errors=True)
-    new.write.parquet(pub + "__staging")
-    _swap_publish(spark, pub)
-    assert {r.v for r in spark.read.parquet(pub).collect()} == {"NEW"}
-    import os
-
-    assert not os.path.exists(pub + "__old")
     shutil.rmtree(tmp, ignore_errors=True)
 
 
@@ -366,9 +261,12 @@ def test_streaming_merge_checkpoint_restart_exactly_once(spark):
     tmp = tempfile.mkdtemp(prefix="ckpt_restart_")
     snap, pub, ckpt = f"{tmp}/s", f"{tmp}/pub", f"{tmp}/ck"
     os.makedirs(snap)
-    spark.createDataFrame(
-        [("1", "a", "0")], "id string, v string, gen string"
-    ).write.parquet(pub)
+    table = VersionedTable(spark, pub)
+    table.commit(
+        spark.createDataFrame(
+            [("1", "a", "0")], "id string, v string, gen string"
+        )
+    )
 
     def run_once():
         q = streaming_snapshot_merge(
@@ -382,7 +280,7 @@ def test_streaming_merge_checkpoint_restart_exactly_once(spark):
     with open(f"{snap}/s1.csv", "w") as f:
         f.write("id,v,gen\n1,A,1\n2,b,1\n")
     run_once()
-    after1 = {r.id: (r.v, r.gen) for r in spark.read.parquet(pub).collect()}
+    after1 = {r.id: (r.v, r.gen) for r in table.read().collect()}
     assert after1 == {"1": ("A", "1"), "2": ("b", "1")}
 
     # second run: snapshot 2 changes id 2 only. If s1.csv were
@@ -391,7 +289,7 @@ def test_streaming_merge_checkpoint_restart_exactly_once(spark):
     with open(f"{snap}/s2.csv", "w") as f:
         f.write("id,v,gen\n1,A,1\n2,B2,2\n")
     run_once()
-    after2 = {r.id: (r.v, r.gen) for r in spark.read.parquet(pub).collect()}
+    after2 = {r.id: (r.v, r.gen) for r in table.read().collect()}
     assert after2 == {"1": ("A", "1"), "2": ("B2", "2")}
     shutil.rmtree(tmp, ignore_errors=True)
 

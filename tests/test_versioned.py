@@ -170,7 +170,6 @@ def test_streaming_merge_versioned_cutover(spark, table_path):
         f"{root}/ckpt",
         id_col="id",
         target_cols=["v"],
-        versioned=True,
     )
     try:
         q.awaitTermination(60)

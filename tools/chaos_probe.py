@@ -58,13 +58,10 @@ import time
 from pathlib import Path
 
 import duckdb
+from check_oracle import TABLES, norm, sorted_rows
 
 REPO = str(Path(__file__).resolve().parents[1])
 
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
 DEFAULT_QUERIES = ["dedup_minhash_lsh", "merge_upsert", "windowed_rollup"]
 
 
@@ -85,29 +82,6 @@ def parse_executor_pids(ps_output: str) -> set:
             if head.isdigit():
                 pids.add(int(head))
     return pids
-
-
-def norm(v):
-    import datetime as dt
-    import math
-
-    if isinstance(v, float):
-        if math.isnan(v):
-            return "NaN"
-        return v
-    if isinstance(v, dt.datetime):
-        return v.isoformat(sep=" ", timespec="microseconds")
-    if isinstance(v, dt.date):
-        return v.isoformat()
-    if isinstance(v, list):
-        return tuple(norm(x) for x in v)
-    return v
-
-
-def sorted_rows(cols, rows):
-    idx = [cols.index(c) for c in sorted(cols)]
-    key = lambda row: tuple((v is None, str(type(v)), str(v)) for v in row)
-    return sorted((tuple(r[i] for i in idx) for r in rows), key=key)
 
 
 def main() -> int:

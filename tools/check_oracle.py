@@ -51,6 +51,15 @@ def norm(v):
     return v
 
 
+def sorted_rows(cols, rows):
+    """Rows with their columns put in name order, sorted by a key that
+    orders None after values; equal for two results that differ only
+    in row or column order."""
+    idx = [cols.index(c) for c in sorted(cols)]
+    key = lambda row: tuple((v is None, str(type(v)), str(v)) for v in row)
+    return sorted((tuple(r[i] for i in idx) for r in rows), key=key)
+
+
 # Spark dtype prefixes the DRIVER's pandas canonicalization cannot
 # sort (pandas sort_values factorizes object cells through a
 # hashtable; list/dict/Row cells raise "unhashable type"). Any query
@@ -324,12 +333,8 @@ def main() -> int:
             if badtypes:
                 status.append("DTYPES " + "; ".join(badtypes))
         if not status:
-            # align column order by name, then compare sorted rows
-            sidx = [scols.index(c) for c in sorted(scols)]
-            oidx = [ocols.index(c) for c in sorted(ocols)]
-            key = lambda row: tuple((v is None, str(type(v)), str(v)) for v in row)
-            ss = sorted((tuple(r[i] for i in sidx) for r in srows), key=key)
-            oo = sorted((tuple(r[i] for i in oidx) for r in orows), key=key)
+            ss = sorted_rows(scols, srows)
+            oo = sorted_rows(ocols, orows)
             if ss != oo:
                 diffs = [
                     (a, b) for a, b in zip(ss, oo) if a != b
